@@ -1,6 +1,7 @@
-"""Embedding similarity search — brute-force cosine top-k (baseline)
-and LSH-bucketed ANN (scale path). Training-data-pipeline operator over
-``embeddings(vec_id, embedding array<float>, label)``.
+"""Embedding similarity search — exact cosine top-k (baseline) and the
+ANN scale paths: hyperplane LSH, IVF, PQ and IVFADC. Training-data-
+pipeline operator over ``embeddings(vec_id, embedding array<float>,
+label)``.
 
 Dot products are pure Catalyst higher-order functions
 (``zip_with`` + ``aggregate``) over the array column, computed in
@@ -36,29 +37,22 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def dot_fixed(a: Column, b: Column, dim: int) -> Column:
-    """Σ a[i]·b[i] over a KNOWN dim as an explicit left-associated
-    expression chain — bit-identical to ``dot(_as_double(a),
-    _as_double(b))``: the HOF fold evaluates ((0.0 + x₀·y₀) + x₁·y₁) + …
-    and this builds exactly that tree. The difference is physical:
-    higher-order functions are CodegenFallback (interpreted per row,
-    with a zip_with array allocation per pair), while this chain runs
-    inside whole-stage codegen — measured ~20× on the q20 pair scoring
-    (guide §4.1: prefer built-in expressions; §1.2: fix per-task work)."""
-    acc: Column = F.lit(0.0)
-    for i in range(dim):
-        acc = acc + a[i].cast("double") * b[i].cast("double")
-    return acc
+def _unit(m):
+    """Row-wise L2 normalization; zero rows stay zero."""
+    import numpy as np
+
+    n = np.linalg.norm(m, axis=1, keepdims=True)
+    n[n == 0] = 1.0
+    return m / n
 
 
-def norm_fixed(a: Column, dim: int) -> Column:
-    """sqrt(Σ a[i]²) over a KNOWN dim — bit-identical to
-    ``norm(_as_double(a))`` (same left-associated sum), codegen form."""
-    acc: Column = F.lit(0.0)
-    for i in range(dim):
-        x = a[i].cast("double")
-        acc = acc + x * x
-    return F.sqrt(acc)
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Global per-query top-k over ``(q_id, n_id, cos)`` rows under the
+    (cos DESC, n_id ASC) total order every operator here selects by."""
+    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id").asc())
+    return (scored.withColumn("rank", F.row_number().over(w))
+                  .filter(F.col("rank") <= k)
+                  .select("q_id", "n_id", "cos", "rank"))
 
 
 def _stable_topk(cos_rounded, k):
@@ -156,10 +150,14 @@ def brute_force_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
                                 _as_double(F.col("n_vec")))
                             / (F.col("_qn") * F.col("_nn")), 6).alias("cos"))
         )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k)
-                  .select("q_id", "n_id", "cos", "rank"))
+    return _rank_topk(scored, k)
+
+
+#: hard cap on the query set ``brute_force_topk(dim=...)`` collects to
+#: the driver and broadcasts into its scoring kernel: 100k × 64-dim
+#: float64 ≈ 50 MB. Past this, use a path that keeps the queries
+#: distributed (lsh_bucket_topk, ivfpq_topk).
+GEMM_MAX_QUERIES = 100_000
 
 
 def _exact_scored_rows(queries: DataFrame, corpus: DataFrame, k: int,
@@ -189,11 +187,11 @@ def _exact_scored_rows(queries: DataFrame, corpus: DataFrame, k: int,
       identical raw values on every path and keep the n_id order.
 
     The query set is collected ONCE at plan build (bounded by
-    GEMM_MAX_QUERIES — the same driver contract as the GEMM path) and
-    broadcast; the corpus is never shuffled and only (queries × slack ×
-    partitions) skinny rows reach the final window (guide §8: decide
-    with small rows, move nothing heavy)."""
+    GEMM_MAX_QUERIES) and broadcast; the corpus is never shuffled and
+    only (queries × slack × partitions) skinny rows reach the final
+    window (guide §8: decide with small rows, move nothing heavy)."""
     import numpy as np
+    from pyspark.sql import types as T
 
     q_rows = queries.select(id_col, vec_col).limit(GEMM_MAX_QUERIES + 1).collect()
     if len(q_rows) > GEMM_MAX_QUERIES:
@@ -202,7 +200,9 @@ def _exact_scored_rows(queries: DataFrame, corpus: DataFrame, k: int,
             f"and is capped at {GEMM_MAX_QUERIES} queries; use lsh_bucket_topk "
             f"for larger query sets.")
     qm = np.array([r[1] for r in q_rows], dtype=np.float64)
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
+    # ids keep their own type end to end: the output schema comes from
+    # the inputs, as in the fold form, so non-numeric ids work too
+    q_ids = np.array([r[0] for r in q_rows])
     sc = corpus.sparkSession.sparkContext
     bq = sc.broadcast((q_ids, qm))
     kk_target = 2 * k + 16
@@ -224,7 +224,7 @@ def _exact_scored_rows(queries: DataFrame, corpus: DataFrame, k: int,
                 continue
             pdf = pdf.sort_values(id_col)    # column order = n_id ASC
             cm = np.array(list(pdf[vec_col]), dtype=np.float64)
-            n_ids = pdf[id_col].to_numpy(np.int64)
+            n_ids = pdf[id_col].to_numpy()
             nn = _norms(cm)
             raw = np.zeros((len(ids), len(n_ids)))
             for i in range(qmat.shape[1]):   # fold order per element
@@ -244,76 +244,13 @@ def _exact_scored_rows(queries: DataFrame, corpus: DataFrame, k: int,
             }
             yield pd.DataFrame(out)
 
-    local = corpus.select(id_col, vec_col).mapInPandas(
-        kernel, "q_id long, n_id long, raw double")
+    schema = T.StructType([
+        T.StructField("q_id", queries.schema[id_col].dataType),
+        T.StructField("n_id", corpus.schema[id_col].dataType),
+        T.StructField("raw", T.DoubleType()),
+    ])
+    local = corpus.select(id_col, vec_col).mapInPandas(kernel, schema)
     return local.select("q_id", "n_id", F.round(F.col("raw"), 6).alias("cos"))
-
-
-#: hard cap on the collected query set: 100k × 64-dim float64 ≈ 50 MB
-#: on the driver + broadcast — past this, use lsh_bucket_topk (the
-#: distributed path). Guard added per VERDICT r1 'What's wrong' #3.
-GEMM_MAX_QUERIES = 100_000
-
-
-def brute_force_topk_gemm(queries: DataFrame, corpus: DataFrame, k: int = 5,
-                          id_col: str = "vec_id", vec_col: str = "embedding",
-                          max_queries: int = GEMM_MAX_QUERIES) -> DataFrame:
-    """Exact cosine top-k, matrix form: the query set is collected,
-    L2-normalized, and broadcast as one numpy matrix; each corpus
-    partition computes cosines as a single GEMM (numpy/BLAS) inside
-    mapInPandas and emits its LOCAL per-query top-k; a final window
-    reduces locals to the global top-k.
-
-    This is the throughput shape at 100 TB: one pass over the corpus,
-    shuffle bounded by (queries × k × partitions), all flops in BLAS —
-    versus per-pair fold expressions. Results equal brute_force_topk up
-    to float rounding (asserted in tests); the fold form remains the
-    DuckDB-oracle twin."""
-    import numpy as np
-
-    # enforce the small-query contract instead of trusting callers: one
-    # row past the cap aborts with guidance rather than OOMing the
-    # driver on an unbounded collect
-    q_rows = queries.select(id_col, vec_col).limit(max_queries + 1).collect()
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"brute_force_topk_gemm collects the query set to the driver and "
-            f"is capped at {max_queries} queries; got more. Use "
-            f"lsh_bucket_topk (distributed) for large query sets, or raise "
-            f"max_queries explicitly if the driver can hold them.")
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    qm = np.array([r[1] for r in q_rows], dtype=np.float64)
-    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
-    sc = corpus.sparkSession.sparkContext
-    bq = sc.broadcast((q_ids, qm))
-
-    def kernel(batches):
-        import pandas as pd
-
-        ids, qmat = bq.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(id_col)   # column order = n_id ASC
-            cm = np.array(list(pdf[vec_col]), dtype=np.float64)
-            cm /= np.linalg.norm(cm, axis=1, keepdims=True)
-            cos = np.round(qmat @ cm.T, 6)             # (n_q, n_batch)
-            n_ids = pdf[id_col].to_numpy(np.int64)
-            kk = min(k + 1, cos.shape[1])              # +1: self may appear
-            top = _stable_topk(cos, kk)                # ties → n_id ASC
-            out = {
-                "q_id": np.repeat(ids, kk),
-                "n_id": n_ids[top.ravel()],
-                "cos": np.take_along_axis(cos, top, axis=1).ravel(),
-            }
-            yield pd.DataFrame(out)
-
-    local = corpus.select(id_col, vec_col).mapInPandas(kernel, "q_id long, n_id long, cos double")
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id").asc())
-    return (local.filter(F.col("q_id") != F.col("n_id"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("q_id", "n_id", "cos", "rank"))
 
 
 def _hyperplanes(n_planes: int, dim: int) -> list[list[float]]:
@@ -375,10 +312,7 @@ def lsh_bucket_topk(queries: DataFrame, corpus: DataFrame, dim: int, k: int = 5,
     )
     scored = cand.select(
         "q_id", "n_id", F.round(cosine(F.col("q_vec"), F.col("n_vec")), 6).alias("cos"))
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k)
-                  .select("q_id", "n_id", "cos", "rank"))
+    return _rank_topk(scored, k)
 
 
 def ivf_topk(queries: DataFrame, corpus: DataFrame, dim: int, k: int = 5,
@@ -414,11 +348,6 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, dim: int, k: int = 5,
     import numpy as np
 
     CATALYST_MAX_CENTROIDS = 32
-
-    def _unit(m: np.ndarray) -> np.ndarray:
-        n = np.linalg.norm(m, axis=1, keepdims=True)
-        n[n == 0] = 1.0
-        return m / n
 
     seeds = (corpus.select(F.col(vec_col).alias("v"),
                            F.xxhash64(F.col(id_col).cast("string")).alias("h"))
@@ -515,10 +444,7 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, dim: int, k: int = 5,
                     F.round(dot(_as_double(F.col("q_vec")),
                                 _as_double(F.col("n_vec")))
                             / (F.col("_qn") * F.col("_nn")), 6).alias("cos")))
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id").asc())
-    return (cand.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select("q_id", "n_id", "cos", "rank"))
+    return _rank_topk(cand, k)
 
 
 def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
@@ -528,23 +454,11 @@ def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
     (id1 < id2, cosine ≥ threshold)."""
     planes = _hyperplanes(n_planes, dim)
 
-    def sig(vec: Column) -> Column:
-        bits = [
-            F.when(
-                F.aggregate(
-                    F.zip_with(_as_double(vec), F.array(*[F.lit(w) for w in p]),
-                               lambda x, y: x * y),
-                    F.lit(0.0), lambda acc, x: acc + x) >= 0, F.lit(1)
-            ).otherwise(F.lit(0)) * F.lit(1 << i)
-            for i, p in enumerate(planes)
-        ]
-        return sum(bits[1:], bits[0])
-
     # norms precomputed per ROW (same attribute-hoist as
     # brute_force_topk — bit-identical cos, O(dim) per pair not 3·O(dim))
     base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"),
                      norm(_as_double(F.col(vec_col))).alias("nrm"),
-                     sig(F.col(vec_col)).alias("bucket"))
+                     _table_sig(F.col(vec_col), planes).alias("bucket"))
     a, b = base.alias("a"), base.alias("b")
     return (
         a.join(b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.id") < F.col("b.id")))
@@ -684,8 +598,8 @@ def pq_topk(queries: DataFrame, corpus: DataFrame, dim: int, k: int = 5,
     methodology as the LSH/IVF paths. cos ≈ q·recon(x)/(|q|·|recon(x)|).
 
     ``query_cap``: the broadcast query-table guard (same pattern as
-    brute_force_topk_gemm) — above it, raise rather than silently
-    broadcast an unbounded table."""
+    ``brute_force_topk(dim=...)``) — above it, raise rather than
+    silently broadcast an unbounded table."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -746,11 +660,7 @@ def pq_topk(queries: DataFrame, corpus: DataFrame, dim: int, k: int = 5,
                         rows.append((qid[qi], n_ids[j], float(cos[qi, j])))
             yield pd.DataFrame(rows, columns=["q_id", "n_id", "cos"])
 
-    partial = encoded.mapInPandas(scan, out_schema)
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id").asc())
-    return (partial.withColumn("rank", F.row_number().over(w))
-                   .filter(F.col("rank") <= k)
-                   .select("q_id", "n_id", "cos", "rank"))
+    return _rank_topk(encoded.mapInPandas(scan, out_schema), k)
 
 
 def ivfpq_index(corpus: DataFrame, dim: int, n_centroids: int = 16,
@@ -775,8 +685,8 @@ def ivfpq_index(corpus: DataFrame, dim: int, n_centroids: int = 16,
     the reconstruction norm (|centroid + decode(codes)| — needed for
     cosine). Output ``(n_id, cid int, codes array<int>, recon_norm)``:
     m bytes of code + 1 int per vector, the compressed-index memory
-    shape, laid out so a scan can prune to probed cells with a plain
-    Catalyst ``cid`` filter (the Iceberg partition-by-cluster analog).
+    shape, keyed by cell so a search groups the corpus on ``cid`` (the
+    Iceberg partition-by-cluster analog).
 
     Returns ``(cents, means, books, encoded)`` — ``encoded`` is None
     for an empty corpus; feed to ``ivfpq_topk`` via ``index=`` to
@@ -794,12 +704,6 @@ def ivfpq_index(corpus: DataFrame, dim: int, n_centroids: int = 16,
         return (z, z.copy(),
                 np.zeros((m_blocks, k_codes, dim // m_blocks)), None)
     x = np.array([r["v"] for r in rows], dtype=np.float64)
-
-    def _unit(m):
-        n = np.linalg.norm(m, axis=1, keepdims=True)
-        n[n == 0] = 1.0
-        return m / n
-
     nc = min(n_centroids, len(x))
     cents = _unit(x[:nc].copy())               # hash-ordered seeds
     means = x[:nc].copy()
@@ -864,132 +768,17 @@ def ivfpq_topk(queries: DataFrame, corpus: DataFrame | None = None,
                dim: int = 64, k: int = 5, n_centroids: int = 16,
                n_probe: int = 4, m_blocks: int = 16, k_codes: int = 256,
                coarse_iters: int = 3, train_iters: int = 5,
-               query_cap: int = 100_000, sample_cap: int = 10_000,
-               index=None, id_col: str = "vec_id",
-               vec_col: str = "embedding") -> DataFrame:
-    """IVFADC ANN: IVF coarse pruning × PQ compressed scoring — the
-    composition the round-4 verdict asked for (``pq_topk`` alone still
-    ADC-scans the whole corpus per query batch; here the scan touches
-    ONLY probed cells, so per-query work is ∝ probed-cell sizes over
-    m-byte codes — the FAISS IVFADC search shape that holds at 10^10
-    vectors).
+               sample_cap: int = 10_000, index=None, q_chunk: int = 1024,
+               c_chunk: int = 65_536, cell_splits: int = 1,
+               id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+    """IVFADC ANN: IVF coarse cells × PQ compressed scoring (FAISS
+    IVFADC search). ``pq_topk`` alone ADC-scans the whole corpus per
+    query; here a query is scored only against the cells it probes, so
+    per-query work is ∝ probed-cell sizes over m-byte codes.
 
-    Search: each (collected, capped — same guard as ``pq_topk``) query
-    picks its ``n_probe`` nearest coarse cells; the encoded corpus is
-    pre-filtered with a Catalyst ``cid IN (probed)`` predicate — rows
-    of unprobed cells never reach the Python kernel (asserted in
-    tests) — and the kernel scores a row for exactly the queries that
-    probed its cell:
-    ``score(q, x) ≈ q·centroid(cid) + Σ_m ADC[q][m][code_m]``, i.e.
-    cosine against centroid + decoded residual, normalized by
-    |q|·|recon|. Only a per-query partial top-k leaves each partition.
-    Approximate by construction; recall vs ``brute_force_topk`` is
-    measured in tests and must dominate PQ-alone at equal code size
-    (residual quantization). With ``n_probe = n_centroids``,
-    ``sample_cap/k_codes ≥ |corpus|`` and ``train_iters = 0`` every
-    vector reconstructs exactly and the result degenerates to exact
-    cosine top-k (the q58 oracle mode)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    if index is None:
-        index = ivfpq_index(corpus, dim, n_centroids, m_blocks, k_codes,
-                            coarse_iters, train_iters, sample_cap,
-                            id_col, vec_col)
-    cents, means, books, encoded = index
-    if encoded is None:                         # empty corpus
-        return (queries.select(F.col(id_col).alias("q_id"))
-                .withColumn("n_id", F.col("q_id"))
-                .withColumn("cos", F.lit(0.0))
-                .withColumn("rank", F.lit(0)).limit(0))
-    m_blocks, _, sub = books.shape
-    q_rows = (queries.select(F.col(id_col).alias("q_id"),
-                             F.col(vec_col).alias("q_vec"))
-              .limit(query_cap + 1).collect())
-    if len(q_rows) > query_cap:
-        raise ValueError(f"ivfpq_topk: query set exceeds cap {query_cap}")
-    if not q_rows:
-        return (encoded.select(F.col("n_id").alias("q_id"), "n_id",
-                               F.lit(0.0).alias("cos"),
-                               F.lit(0).alias("rank")).limit(0))
-    qm = np.array([r["q_vec"] for r in q_rows], dtype=np.float64)
-    q_ids = np.array([r["q_id"] for r in q_rows])
-    q_norm = np.linalg.norm(qm, axis=1)
-    q_norm[q_norm == 0] = 1.0
-    # probe by the ASSIGNMENT metric (unit centroids — must match the
-    # corpus-side cell function); the additive score bias is q·mean
-    # (recon = mean + decoded residual)
-    qdota = qm @ cents.T                        # (nq, n_cells) probe scores
-    qdotc = qm @ means.T                        # (nq, n_cells) ADC bias
-    npb = min(n_probe, cents.shape[0])
-    probe = np.zeros_like(qdota, dtype=bool)
-    np.put_along_axis(probe, np.argsort(-qdota, axis=1)[:, :npb], True, axis=1)
-    probed_cells = sorted(int(c) for c in np.nonzero(probe.any(axis=0))[0])
-    # ADC tables: adc[qi, m, c] = q_block · residual-centroid_mc
-    adc = np.stack([qm[:, m * sub:(m + 1) * sub] @ books[m].T
-                    for m in range(m_blocks)], axis=1)
-
-    sc = encoded.sparkSession.sparkContext
-    bq = sc.broadcast((q_ids, q_norm, qdotc, probe, adc))
-    out_schema = T.StructType([
-        T.StructField("q_id", encoded.schema["n_id"].dataType),
-        T.StructField("n_id", encoded.schema["n_id"].dataType),
-        T.StructField("cos", T.DoubleType()),
-    ])
-
-    def scan(batches):
-        qid, qn, qc, pr, t = bq.value
-        nq = len(qid)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values("n_id")   # column order = n_id ASC
-            codes = np.array(list(pdf["codes"]), dtype=np.int64)   # (n, m)
-            cid = pdf["cid"].to_numpy(np.int64)
-            rn = pdf["recon_norm"].to_numpy()
-            rn = np.where(rn == 0, 1.0, rn)
-            scores = qc[:, cid].copy()                             # (nq, n)
-            for m in range(codes.shape[1]):
-                scores += t[:, m, :][:, codes[:, m]]
-            cos = np.round(scores / (qn[:, None] * rn[None, :]), 6)
-            cos[~pr[:, cid]] = -np.inf          # unprobed (qi, cell) pairs
-            n_ids = pdf["n_id"].to_numpy()
-            cos[qid[:, None] == n_ids[None, :]] = -np.inf   # self excluded
-            nn = min(k, cos.shape[1])
-            top = _stable_topk(cos, nn)                     # ties → n_id ASC
-            rows = []
-            for qi in range(nq):
-                for j in top[qi]:
-                    if np.isfinite(cos[qi, j]):
-                        rows.append((qid[qi], n_ids[j], float(cos[qi, j])))
-            yield pd.DataFrame(rows, columns=["q_id", "n_id", "cos"])
-
-    # the cell prune: a Catalyst filter BEFORE the kernel, so unprobed
-    # cells' rows are dropped plan-side (work ∝ probed cells, the whole
-    # point of composing IVF with PQ)
-    scan_input = encoded.filter(F.col("cid").isin(probed_cells))
-    partial = scan_input.mapInPandas(scan, out_schema)
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id").asc())
-    return (partial.withColumn("rank", F.row_number().over(w))
-                   .filter(F.col("rank") <= k)
-                   .select("q_id", "n_id", "cos", "rank"))
-
-
-def ivfpq_topk_distributed(queries: DataFrame, corpus: DataFrame | None = None,
-                           dim: int = 64, k: int = 5, n_centroids: int = 16,
-                           n_probe: int = 4, m_blocks: int = 16,
-                           k_codes: int = 256, coarse_iters: int = 3,
-                           train_iters: int = 5, sample_cap: int = 10_000,
-                           index=None, q_chunk: int = 1024,
-                           c_chunk: int = 65_536, cell_splits: int = 1,
-                           id_col: str = "vec_id",
-                           vec_col: str = "embedding") -> DataFrame:
-    """IVFADC with a DISTRIBUTED query side — the corpus-vs-corpus
-    shape (round-5 verdict 'What's missing' #1). ``ivfpq_topk`` collects
-    and broadcasts the query set (capped at 100k), which rules out
-    SemDeDup-style self-dedup where the query set IS the 10^10-row
-    corpus. Here queries stay a DataFrame end-to-end:
+    Queries stay a DataFrame end to end — nothing about them ever
+    reaches the driver and there is no query cap, so the query set may
+    be the corpus itself (SemDeDup-style self-dedup, ``ivfpq_self_pairs``):
 
     1. probe assignment: one ``mapInPandas`` pass over the queries
        emits (cid, q_id, q_vec) rows for each query's ``n_probe``
@@ -1000,13 +789,16 @@ def ivfpq_topk_distributed(queries: DataFrame, corpus: DataFrame | None = None,
        |corpus|);
     2. candidate generation: ``groupBy(cid).cogroup`` of query probes
        × the encoded corpus — an equi-join-shaped shuffle on the cell
-       id, so candidate work is ∝ probed-cell populations exactly like
-       the collected path's plan-side ``cid`` prune;
+       id. There is no plan-side ``cid`` prune: every cell of the
+       corpus is grouped, and a cell that no query probes emits
+       nothing;
     3. scoring: inside the cogrouped Arrow kernel, per cell:
-       ``score(q, x) = q·mean(cid) + Σ_m ADC_m[code_m]``, ADC tables
-       built per (cell, query-chunk) from the broadcast codebooks —
-       never materialized for the full query set — and the corpus side
-       scanned in ``c_chunk`` blocks so the SCORE MATRIX peaks at
+       ``score(q, x) = q·mean(cid) + Σ_m ADC_m[code_m]``, i.e. cosine
+       against cell mean + decoded residual, normalized by
+       |q|·|recon|. ADC tables are built per (cell, query-chunk)
+       from the broadcast codebooks — never materialized for the full
+       query set — and the corpus side is scanned in ``c_chunk``
+       blocks so the SCORE MATRIX peaks at
        O(q_chunk · max(k_codes, c_chunk)). Honest caveat:
        ``cogroup().applyInPandas`` materializes each (cell-queries,
        cell-corpus) group pair as pandas frames before the kernel
@@ -1023,19 +815,16 @@ def ivfpq_topk_distributed(queries: DataFrame, corpus: DataFrame | None = None,
        only each query's per-cell top-k leaves the kernel;
     4. global top-k: one window over ≤ n_probe·k rows per query.
 
-    Scores are bit-identical to ``ivfpq_topk`` (same dot products, same
-    summation order — chunk boundaries don't reorder any per-pair
-    arithmetic), so exact mode (n_probe=n_centroids, sample ⊇ corpus,
-    train_iters=0) degenerates to exact cosine like the collected path;
-    equality and the no-query-collect contract are pinned in
-    tests/test_dedup_similarity.py. No query cap: nothing about the
-    query set ever reaches the driver.
-
-    Reference analog: the reference's dedup loop is corpus-vs-itself
-    (/root/reference/api/src/etl/base/loader.py:188-209 — every
-    incoming batch probed against the full stored set), which is
-    exactly the |queries| = |corpus| shape the collected path's
-    broadcast cap ruled out."""
+    Approximate by construction; recall vs ``brute_force_topk`` is
+    measured in tests and must dominate PQ-alone at equal code size
+    (residual quantization). Chunk boundaries and query partitioning
+    don't reorder any per-pair arithmetic, so results are identical
+    across repartitions. With ``n_probe = n_centroids``,
+    ``sample_cap/k_codes ≥ |corpus|`` and ``train_iters = 0`` every
+    vector reconstructs exactly and the result degenerates to exact
+    cosine top-k (the q58 oracle mode). Pass a prebuilt
+    ``ivfpq_index`` as ``index=`` to reuse one index across query
+    batches."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -1163,10 +952,7 @@ def ivfpq_topk_distributed(queries: DataFrame, corpus: DataFrame | None = None,
         partial = (q_probe.groupBy("cid")
                    .cogroup(encoded.groupBy("cid"))
                    .applyInPandas(score_cell, out_schema))
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id").asc())
-    return (partial.withColumn("rank", F.row_number().over(w))
-                   .filter(F.col("rank") <= k)
-                   .select("q_id", "n_id", "cos", "rank"))
+    return _rank_topk(partial, k)
 
 
 def ivfpq_self_pairs(corpus: DataFrame, dim: int = 64, threshold: float = 0.9,
@@ -1178,17 +964,18 @@ def ivfpq_self_pairs(corpus: DataFrame, dim: int = 64, threshold: float = 0.9,
                      vec_col: str = "embedding") -> DataFrame:
     """SemDeDup-style semantic near-duplicate PAIRS: the corpus is its
     own query set (Abbas et al. '23 — remove semantically redundant
-    training data by embedding-cosine). Runs entirely on the
-    distributed IVFADC path, so it holds when |queries| = |corpus| =
-    10^10: per-vector candidate work ∝ probed-cell populations over
-    m-byte codes, and nothing is ever collected to the driver.
+    training data by embedding-cosine). Runs entirely on
+    ``ivfpq_topk``, whose query side stays distributed, so it holds
+    when |queries| = |corpus| = 10^10: per-vector candidate work ∝
+    probed-cell populations over m-byte codes, and nothing is ever
+    collected to the driver.
 
     Returns unordered pairs (id1 < id2, cos) with ADC cosine ≥
     ``threshold`` among each vector's top-``k`` probed neighbors —
     feed to ``dedup.dup_clusters`` + ``keep_cluster_representatives``
     for the keep-one-per-cluster finish, exactly like the text LSH
     pipelines."""
-    top = ivfpq_topk_distributed(
+    top = ivfpq_topk(
         corpus, corpus, dim=dim, k=k, n_centroids=n_centroids,
         n_probe=n_probe, m_blocks=m_blocks, k_codes=k_codes,
         coarse_iters=coarse_iters, train_iters=train_iters,

@@ -122,33 +122,36 @@ def test_embedding_near_dup_planted(spark):
         assert r["cos"] >= 0.9
 
 
-def test_dot_fixed_topk_bit_identical_to_fold(spark):
-    """The dim-known codegen chain (dot_fixed/norm_fixed) must be BIT
-    identical to the HOF fold form — same left-associated reduction,
-    only the physical evaluation differs (r7 q20 optimization)."""
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    q = e.filter(F.col("vec_id") % 100 == 0)
-    fold = SIM.brute_force_topk(q, e, k=5).collect()
-    fixed = SIM.brute_force_topk(q, e, k=5, dim=64).collect()
-    fold_m = {(r["q_id"], r["rank"]): (r["n_id"], r["cos"]) for r in fold}
-    fixed_m = {(r["q_id"], r["rank"]): (r["n_id"], r["cos"]) for r in fixed}
-    assert fold_m == fixed_m     # exact equality, including tie-breaks
+def _topk_map(df):
+    return {(r["q_id"], r["rank"]): (r["n_id"], r["cos"]) for r in df.collect()}
 
 
-def test_gemm_topk_matches_fold_topk(spark):
+def test_exact_kernel_topk_bit_identical_to_fold(spark):
+    """brute_force_topk's dim-known form (the numpy _exact_scored_rows
+    kernel) must be BIT identical to its HOF fold form — same
+    left-associated reduction, only the physical evaluation differs
+    (the q20 optimization)."""
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
     q = e.filter(F.col("vec_id") % 100 == 0)
-    fold = SIM.brute_force_topk(q, e, k=5).collect()
-    gemm = SIM.brute_force_topk_gemm(q, e, k=5).collect()
-    fold_m = {(r["q_id"], r["rank"]): (r["n_id"], r["cos"]) for r in fold}
-    gemm_m = {(r["q_id"], r["rank"]): (r["n_id"], r["cos"]) for r in gemm}
-    assert fold_m.keys() == gemm_m.keys()
-    for key in fold_m:
-        nf, cf = fold_m[key]
-        ng, cg = gemm_m[key]
-        assert abs(cf - cg) <= 2e-6
-        # neighbor identity may differ only on cosine ties
-        assert nf == ng or abs(cf - cg) <= 2e-6
+    fold = _topk_map(SIM.brute_force_topk(q, e, k=5))
+    kernel = _topk_map(SIM.brute_force_topk(q, e, k=5, dim=64))
+    assert fold == kernel        # exact equality, including tie-breaks
+
+
+def test_exact_kernel_topk_keeps_string_ids(spark):
+    """Non-numeric ids keep their type through the kernel: on string
+    vec_ids the dim-known form equals the fold form exactly, including
+    the lexicographic n_id tie order, and both output string ids."""
+    e = spark.read.parquet(f"{SF}/embeddings.parquet").select(
+        F.concat(F.lit("v"), F.col("vec_id").cast("string")).alias("vec_id"),
+        "embedding")
+    q = e.filter(F.col("vec_id").endswith("00"))
+    fold_df = SIM.brute_force_topk(q, e, k=5)
+    kernel_df = SIM.brute_force_topk(q, e, k=5, dim=64)
+    assert kernel_df.schema == fold_df.schema
+    assert dict(kernel_df.dtypes)["n_id"] == "string"
+    fold, kernel = _topk_map(fold_df), _topk_map(kernel_df)
+    assert fold and fold == kernel
 
 
 def test_word_ngrams_short_texts_yield_empty(spark):
@@ -178,15 +181,18 @@ def test_dedup_pipelines_survive_short_texts(spark):
     assert DD.minhash_lsh_pairs(d, "doc_id", "text").count() >= 0
 
 
-def test_gemm_query_cap_guard(spark):
+def test_gemm_query_cap_guard(spark, monkeypatch):
+    """brute_force_topk(dim=...) collects the query set to the driver;
+    past GEMM_MAX_QUERIES it must refuse instead of collecting."""
     import pytest
 
+    monkeypatch.setattr(SIM, "GEMM_MAX_QUERIES", 5)
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    with pytest.raises(ValueError, match="capped at"):
-        SIM.brute_force_topk_gemm(emb, emb, k=3, max_queries=5)
-    # under the cap the path still works
+    with pytest.raises(ValueError, match="capped at 5"):
+        SIM.brute_force_topk(emb, emb, k=3, dim=64)
+    # at the cap the path still works
     q = emb.filter(F.col("vec_id") < 5)
-    assert SIM.brute_force_topk_gemm(q, emb, k=3, max_queries=5).count() == 15
+    assert SIM.brute_force_topk(q, emb, k=3, dim=64).count() == 15
 
 
 def test_ivf_finds_planted_near_copies(spark):
@@ -467,11 +473,9 @@ def test_ivfpq_recall_dominates_pq_alone(spark):
 
 
 def test_ivfpq_scan_touches_only_probed_cells(spark):
-    """The work bound the composition exists for: with n_probe=1 the
-    ADC scan's input is pre-filtered to the probed cells by a Catalyst
-    ``cid`` predicate — candidates can only come from probed cells, and
-    the scan-input row count equals those cells' population, not the
-    corpus size."""
+    """The work bound the composition exists for: with n_probe=1 a
+    query is scored only against its probed cell, so every candidate
+    comes from a probed cell."""
     import numpy as np_
 
     e = spark.read.parquet(f"{SF}/embeddings.parquet").limit(400) \
@@ -488,47 +492,29 @@ def test_ivfpq_scan_touches_only_probed_cells(spark):
         cell_of = {r["n_id"]: r["cid"] for r in
                    encoded.select("n_id", "cid").collect()}
         assert res and all(cell_of[r["n_id"]] in probed for r in res)
-        # the plan-side prune: scan input == probed-cell population
-        scanned = encoded.filter(F.col("cid").isin(sorted(probed))).count()
-        total = encoded.count()
-        pop = sum(1 for c in cell_of.values() if c in probed)
-        assert scanned == pop < total
+        # and the probe really prunes: other cells hold vectors too
+        assert set(cell_of.values()) - probed
     finally:
         encoded.unpersist()
 
 
-def test_ivfpq_distributed_equals_collected(spark):
-    """The distributed query path must reproduce the collected path
-    bit-for-bit: same ADC arithmetic, same tie-breaks — only the
-    physical plan differs (cogrouped cell join vs broadcast tables).
-    Checked at approximate settings so cell pruning is actually
-    exercised, and across a query repartition (chunk boundaries must
-    not reorder any per-pair arithmetic)."""
+def test_ivfpq_topk_invariant_to_query_partitioning(spark):
+    """ivfpq_topk must return bit-identical results however the query
+    side is partitioned: same ADC arithmetic, same tie-breaks — query
+    grouping and chunk boundaries must not reorder any per-pair
+    arithmetic. Checked at approximate settings so cell pruning is
+    actually exercised."""
     e = spark.read.parquet(f"{SF}/embeddings.parquet").limit(300) \
         .select("vec_id", "embedding")
     q = e.filter(F.col("vec_id") % 10 == 0)
-    old = {(r["q_id"], r["n_id"], r["rank"], r["cos"]) for r in
-           SIM.ivfpq_topk(q, e, dim=64, k=5, n_centroids=8, n_probe=3,
-                          m_blocks=8, k_codes=32).collect()}
-    new = {(r["q_id"], r["n_id"], r["rank"], r["cos"]) for r in
-           SIM.ivfpq_topk_distributed(q.repartition(7), e, dim=64, k=5,
-                                      n_centroids=8, n_probe=3,
-                                      m_blocks=8, k_codes=32).collect()}
-    assert new == old
 
+    def run(queries):
+        return {(r["q_id"], r["n_id"], r["rank"], r["cos"]) for r in
+                SIM.ivfpq_topk(queries, e, dim=64, k=5, n_centroids=8,
+                               n_probe=3, m_blocks=8, k_codes=32).collect()}
 
-def test_ivfpq_distributed_exact_mode_equals_brute_force(spark):
-    e = spark.read.parquet(f"{SF}/embeddings.parquet").limit(300) \
-        .select("vec_id", "embedding")
-    q = e.filter(F.col("vec_id") % 50 == 0)
-    exact = {(r["q_id"], r["n_id"], r["rank"])
-             for r in SIM.brute_force_topk(q, e, k=5).collect()}
-    got = {(r["q_id"], r["n_id"], r["rank"])
-           for r in SIM.ivfpq_topk_distributed(
-               q, e, dim=64, k=5, n_centroids=4, n_probe=4, m_blocks=8,
-               k_codes=1_000_000, train_iters=0,
-               sample_cap=1_000_000).collect()}
-    assert got == exact
+    base = run(q)
+    assert base and run(q.repartition(7)) == base
 
 
 def test_ivfpq_distributed_never_collects_queries(spark):
@@ -547,20 +533,18 @@ def test_ivfpq_distributed_never_collects_queries(spark):
     real_collect = SparkDF.collect
 
     def banned(self, *a, **kw):
-        raise AssertionError("distributed path must not collect")
+        raise AssertionError("ivfpq_topk must not collect")
 
     SparkDF.collect = banned
     try:
-        plan = SIM.ivfpq_topk_distributed(q, None, dim=64, k=5,
-                                          n_probe=4, index=idx)
+        plan = SIM.ivfpq_topk(q, None, dim=64, k=5, n_probe=4, index=idx)
     finally:
         SparkDF.collect = real_collect
     rows = plan.collect()
     assert rows and all(r["rank"] <= 5 for r in rows)
     # and there is no cap parameter on this path at all
     import inspect
-    assert "query_cap" not in inspect.signature(
-        SIM.ivfpq_topk_distributed).parameters
+    assert "query_cap" not in inspect.signature(SIM.ivfpq_topk).parameters
 
 
 def test_ivfpq_distributed_cell_splits_identical(spark):
@@ -572,18 +556,18 @@ def test_ivfpq_distributed_cell_splits_identical(spark):
     e = spark.read.parquet(f"{SF}/embeddings.parquet").limit(300) \
         .select("vec_id", "embedding")
     q = e.filter(F.col("vec_id") % 10 == 0)
-    base = {tuple(r) for r in SIM.ivfpq_topk_distributed(
+    base = {tuple(r) for r in SIM.ivfpq_topk(
         q, e, dim=64, k=5, n_centroids=8, n_probe=3, m_blocks=8,
         k_codes=32).collect()}
-    split = {tuple(r) for r in SIM.ivfpq_topk_distributed(
+    split = {tuple(r) for r in SIM.ivfpq_topk(
         q, e, dim=64, k=5, n_centroids=8, n_probe=3, m_blocks=8,
         k_codes=32, cell_splits=4).collect()}
     assert split == base
     # forced hot cell: ONE coarse centroid → every vector shares it
-    hot1 = {tuple(r) for r in SIM.ivfpq_topk_distributed(
+    hot1 = {tuple(r) for r in SIM.ivfpq_topk(
         q, e, dim=64, k=5, n_centroids=1, n_probe=1, m_blocks=8,
         k_codes=32).collect()}
-    hot8 = {tuple(r) for r in SIM.ivfpq_topk_distributed(
+    hot8 = {tuple(r) for r in SIM.ivfpq_topk(
         q, e, dim=64, k=5, n_centroids=1, n_probe=1, m_blocks=8,
         k_codes=32, cell_splits=8).collect()}
     assert hot8 == hot1 and len(hot1) > 0
@@ -616,8 +600,8 @@ def test_ann_tie_breaks_deterministic_on_duplicate_groups(spark):
     k=5) makes every neighbor score exactly cos=1.0 — the per-cell /
     per-batch partial top-k must break those ties by n_id ASC (the
     global window's order), not by shuffle-dependent arrival order.
-    Pinned across three partitionings on BOTH ANN paths and the brute
-    force."""
+    Pinned across three partitionings on ivfpq_topk, and against both
+    brute-force forms (fold and dim-known kernel)."""
     base = [float(x) for x in np.arange(1, 17)]
     rows = [(i, base) for i in range(8)]                 # 8 exact copies
     rows += [(100 + i, [float(x) for x in np.arange(1, 17) * (i + 2)])
@@ -631,7 +615,7 @@ def test_ann_tie_breaks_deterministic_on_duplicate_groups(spark):
     outs = []
     for parts in (1, 5, 11):
         df = df0.repartition(parts)
-        top = SIM.ivfpq_topk_distributed(
+        top = SIM.ivfpq_topk(
             df, df, dim=16, k=5, n_centroids=2, n_probe=2, m_blocks=4,
             k_codes=1_000_000, train_iters=0, sample_cap=1_000_000,
             c_chunk=3)                                   # force chunk merges
@@ -644,15 +628,12 @@ def test_ann_tie_breaks_deterministic_on_duplicate_groups(spark):
     for q in range(8):
         want = sorted(i for i in range(8) if i != q)[:5]
         assert [n for _r, n in sorted(by_q[q])][:5] == want, (q, by_q[q])
-    # collected path + brute force agree on the same tie-break
-    col = {(r["q_id"], r["rank"], r["n_id"]) for r in SIM.ivfpq_topk(
-        df0, df0, dim=16, k=5, n_centroids=2, n_probe=2, m_blocks=4,
-        k_codes=1_000_000, train_iters=0, sample_cap=1_000_000).collect()}
-    dist = {(q, r, n) for q, n, _c, r in outs[0]}
-    assert col == dist
-    bf = {(r["q_id"], r["rank"], r["n_id"])
-          for r in SIM.brute_force_topk_gemm(df0, df0, k=5).collect()}
-    assert bf == dist
+    # both brute-force forms agree on the same tie-break
+    ann = {(q, r, n) for q, n, _c, r in outs[0]}
+    for dim in (None, 16):
+        bf = {(r["q_id"], r["rank"], r["n_id"]) for r in
+              SIM.brute_force_topk(df0, df0, k=5, dim=dim).collect()}
+        assert bf == ann, dim
 
 
 def test_scrub_repeated_windows_catches_offgrid_repeat(spark):
