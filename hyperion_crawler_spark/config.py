@@ -95,6 +95,13 @@ def bloom_params(expected_keys_per_shard: int, target_fpr: float = 1e-3) -> tupl
     return m_bits, k
 
 
+def _default_driver_mem() -> str:
+    """Half the host's physical memory, capped at 48g: a 48g heap on a
+    smaller host lets the JVM grow until the kernel OOM-kills it."""
+    mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    return f"{min(mb // 2, 48 << 10)}m"
+
+
 def get_spark(
     app: str = "hyperion_crawler_spark",
     master: str | None = None,
@@ -126,7 +133,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -353,14 +353,10 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
             base_version=base.get("results", 0))
 
     def _commit_frontier():
-        # retries/new rows and terminal rows partition one result set
-        # (status != 'queued' exactly complements), and archive_rows
-        # carries one row per urlhash — both merge fast-path flags hold
         return frontier_t.merge(
             spark, frontier_merge, ["urlhash"],
             delete_keys=archive_rows.select("urlhash", "shard"),
-            base_version=base.get("frontier"),
-            disjoint_delete_keys=True, unique_delete_keys=True)
+            base_version=base.get("frontier"))
 
     def _commit_archive():
         return cat.table("archive", "shard").append(

@@ -173,8 +173,6 @@ def fold_filters(spark, seen_table,
     head is this round's own just-rebased append — crashed leftovers
     are already orphaned out, and a crash before this round's
     commit_round orphans the fold itself."""
-    from ..sources.tables import CommitConflict
-
     head = seen_table.current_version()
     if not head:
         return None
@@ -183,22 +181,10 @@ def fold_filters(spark, seen_table,
                   else set())
         if head not in logged:
             return None  # dirty head: in-flight or crashed commits
-    files = seen_table._live_files(head)
-    if len(files) <= 1:
-        return None
-    df = seen_table._read_files(spark, files)
-    folded = (df.select("shard", "filter_bytes", "n_items")
-              .groupBy("shard")
-              .applyInPandas(_fold_kernel,
-                             "shard int, filter_bytes binary, n_items long"))
-    entries = seen_table._write_data(folded)
-    folded_paths = {f["path"] for f in files}
-    while True:
-        cur = seen_table.current_version() or 0
-        live = seen_table._live_files(cur)
-        keep = [f for f in live if f["path"] not in folded_paths]
-        try:
-            return seen_table._commit(keep + entries,
-                                      {"op": "fold_filters"}, ver=cur + 1)
-        except CommitConflict:
-            continue
+    return seen_table.fold_files(
+        spark,
+        lambda df: (df.select("shard", "filter_bytes", "n_items")
+                    .groupBy("shard")
+                    .applyInPandas(_fold_kernel,
+                                   "shard int, filter_bytes binary, n_items long")),
+        {"op": "fold_filters"}, version=head)

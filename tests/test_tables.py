@@ -3,6 +3,7 @@ file pruning / crash invisibility."""
 
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from hyperion_crawler_spark.sources.tables import Catalog
@@ -196,11 +197,12 @@ def test_mor_delete_wins_and_reinsert_later(spark, tmp_path):
     t = Catalog(str(tmp_path)).table("m2", "shard", merge_on_read=True)
     t.append(spark.createDataFrame(
         [(1, 1, "a"), (2, 2, "b")], "k int, shard int, v string"))
-    # same-commit source+delete on k=2 → DELETE branch wins
+    # same-commit source+delete on k=2 → DELETE branch wins, also when
+    # the delete set names the key twice
     t.merge(spark,
             spark.createDataFrame([(2, 2, "B")], "k int, shard int, v string"),
             ["k"],
-            delete_keys=spark.createDataFrame([(2, 2)], "k int, shard int"))
+            delete_keys=spark.createDataFrame([(2, 2), (2, 2)], "k int, shard int"))
     assert _rows(t.read(spark)) == [(1, 1, "a")]
     # later commit re-inserts k=2 → newest _seq wins over the tombstone
     t.merge(spark,
@@ -434,6 +436,10 @@ def test_rewrite_small_files_binpacks_per_partition(spark, tmp_path):
     assert len(after) == 4  # one consolidated file per shard
     stats = sorted((f["part_min"], f["part_max"]) for f in after)
     assert stats == [(0, 0), (1, 1), (2, 2), (3, 3)]
+    # every entry keeps the footer row count merge's fold rule reads
+    assert [f["rows"] for f in after] == [
+        pq.ParquetFile(os.path.join(t.dir, f["path"])).metadata.num_rows
+        for f in after]
     assert _rows(t.read(spark, version=v)) == rows_before
     # meta (e.g. fetched_srcs coverage watermark) carried forward
     assert t._manifest(v)["meta"] == {"upto_round": 5}
@@ -572,30 +578,30 @@ def test_catalog_table_sort_cols_conflict_raises(spark, tmp_path):
     cat.table("sc", "shard", sort_cols=[F.col("a").desc()])
 
 
+def _all_parquet(t):
+    out = set()
+    for dp, _dn, fns in os.walk(os.path.join(t.dir, "data")):
+        out.update(os.path.relpath(os.path.join(dp, f), t.dir)
+                   for f in fns if f.endswith(".parquet"))
+    return out
+
+
+def _referenced(t):
+    out = set()
+    for v in range(1, (t.current_version() or 0) + 1):
+        try:
+            out.update(f["path"] for f in t._manifest(v)["files"])
+        except FileNotFoundError:
+            pass
+    return out
+
+
 def test_compacting_merge_writes_no_orphan_delta(spark, tmp_path):
     """r5: a merge that is going to compact (count OR ratio trigger)
     must fold the in-memory batch directly — writing delta files the
     fold commit immediately orphans is pure write amplification. After
     the fold, every parquet file on disk belongs to a committed
     manifest (no instant orphans from this commit)."""
-    import os as _os
-
-    def _all_parquet(t):
-        out = set()
-        for dp, _dn, fns in _os.walk(_os.path.join(t.dir, "data")):
-            out.update(_os.path.relpath(_os.path.join(dp, f), t.dir)
-                       for f in fns if f.endswith(".parquet"))
-        return out
-
-    def _referenced(t):
-        out = set()
-        for v in range(1, (t.current_version() or 0) + 1):
-            try:
-                out.update(f["path"] for f in t._manifest(v)["files"])
-            except FileNotFoundError:
-                pass
-        return out
-
     # ratio trigger: tiny base, one big merge → folds on the spot
     t = Catalog(str(tmp_path / "r")).table("m9", "shard", merge_on_read=True,
                                            compact_after=99)
@@ -627,3 +633,30 @@ def test_compacting_merge_writes_no_orphan_delta(spark, tmp_path):
     assert _all_parquet(t2) == _referenced(t2), "orphan files written"
     got = dict((r[0], r[2]) for r in _rows(t2.read(spark)))
     assert got[1] == "n1" and got[2] == "n2" and got[5] == "old"
+
+
+def test_small_churn_over_many_shards_appends_delta(spark, tmp_path):
+    """The fold rule counts rows, once, before writing: ~500 changed rows
+    against a ~3,000-row base spread over 32 shards stay under
+    ``compact_ratio`` and append a delta — even though 32 tiny delta
+    files weigh more than 20 % of the base BYTES (per-file parquet
+    overhead, not churn). No file is written and then orphaned."""
+    t = Catalog(str(tmp_path)).table("m10", "shard", merge_on_read=True)
+    t.append(spark.range(3000).select(
+        F.col("id").alias("k"),
+        F.pmod("id", F.lit(32)).cast("int").alias("shard"),
+        F.lit("old").alias("v")))
+    base = t._live_files()
+    assert len(base) == 32
+    src = spark.range(0, 3000, 6).select(           # 500 keys, every shard
+        F.col("id").alias("k"),
+        F.pmod("id", F.lit(32)).cast("int").alias("shard"),
+        F.lit("new").alias("v"))
+    t.merge(spark, src, ["k"])
+    delta = [f for f in t._live_files() if f.get("kind") == "delta"]
+    assert delta, "sub-ratio churn must append a delta, not fold"
+    assert sum(f["rows"] for f in delta) < t.compact_ratio * 3000
+    assert _file_bytes(t, delta) > t.compact_ratio * _file_bytes(t, base)
+    assert _all_parquet(t) == _referenced(t), "orphan files written"
+    assert _rows(t.read(spark)) == [
+        (k, k % 32, "new" if k % 6 == 0 else "old") for k in range(3000)]
