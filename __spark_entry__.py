@@ -14,6 +14,7 @@ probe, LSH recall) are covered by pytest golden tests instead
 
 from __future__ import annotations
 
+import gc
 import os
 import sys
 from collections.abc import Callable
@@ -45,43 +46,16 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-#: DataFrames persisted by operator internals during PREVIOUS query
-#: builds (winnowing/minhash/hamming/scrub pass their cache handles
-#: here). Drained at the START of the next query's build: the driver's
-#: bench and the correctness harness run queries sequentially, so by
-#: then the earlier query's execution is complete — but its persist
-#: registrations would otherwise accumulate in Spark's CacheManager,
-#: and EVERY later action pays plan-canonicalization matching against
-#: each stale entry, scaling with the victim's plan size (measured at
-#: sf1.0: q22's exec run 2.0 s in a clean session vs 4.7–7.5 s with
-#: ~15 stale entries from earlier queries; a clearCache restored it).
-#: This is cache LIFECYCLE hygiene, not result caching — every drained
-#: frame belongs to an already-finished invocation, and each fresh
-#: invocation rebuilds its own caches from the parquet inputs.
-_PLAN_CACHES: list = []
-
-
-def _drain_plan_caches() -> None:
-    while _PLAN_CACHES:
-        df = _PLAN_CACHES.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    # Python-side plan/broadcast wrappers from earlier invocations hold
-    # their JVM counterparts alive until finalizers run; a collection
-    # here lets the ContextCleaner release them before the next timed
-    # execution (measured: the 14th query of a session ran 3.9 s with
-    # ~1k uncollected wrappers vs 1.6-2.2 s after collection — same
-    # query, same plan). Runs at BUILD time, ~10 ms.
-    import gc
-
-    gc.collect()
-
-
-def _with_cache_drain(fn):
+def _with_gc(fn):
     def run(spark, sf_dir):
-        _drain_plan_caches()
+        # Python-side plan/broadcast wrappers from earlier invocations
+        # hold their JVM counterparts alive until finalizers run; a
+        # collection here lets the ContextCleaner release them before
+        # the next timed execution (measured: the 14th query of a
+        # session ran 3.9 s with ~1k uncollected wrappers vs 1.6-2.2 s
+        # after collection — same query, same plan). Runs at BUILD
+        # time, ~10 ms.
+        gc.collect()
         return fn(spark, sf_dir)
     run.__name__ = fn.__name__
     run.__doc__ = fn.__doc__
@@ -293,8 +267,7 @@ def q16_ngram_jaccard(spark, sf):
 
 def q18_minhash_lsh_pairs(spark, sf):
     d = _docs_with_near_dups(spark, sf)
-    return DD.minhash_lsh_pairs(d, "doc_id", "text", jaccard_threshold=0.5,
-                                handles=_PLAN_CACHES)
+    return DD.minhash_lsh_pairs(d, "doc_id", "text", jaccard_threshold=0.5)
 
 
 def q19_simhash(spark, sf):
@@ -563,9 +536,8 @@ def q39_dup_clusters(spark, sf):
     shallow near-dup components here and SQL-mirrorable as an unrolled
     CTE). The keep-one-per-cluster step every pairwise dedup needs."""
     d = _t(spark, sf, "documents").filter(F.col("doc_id") < 200)
-    pairs = DD.winnowing_pairs(d, "doc_id", "text", k=8, w=4, min_shared=2,
-                               handles=_PLAN_CACHES)
-    return DD.dup_clusters(pairs, iters=4, handles=_PLAN_CACHES)
+    pairs = DD.winnowing_pairs(d, "doc_id", "text", k=8, w=4, min_shared=2)
+    return DD.dup_clusters(pairs, iters=4)
 
 
 def q40_bm25(spark, sf):
@@ -621,9 +593,8 @@ def q43_dedup_keep(spark, sf):
     cluster plus all unclustered documents."""
     d = _t(spark, sf, "documents").filter(F.col("doc_id") < 200) \
         .select("doc_id", "text")
-    pairs = DD.winnowing_pairs(d, "doc_id", "text", k=8, w=4, min_shared=30,
-                               handles=_PLAN_CACHES)
-    labels = DD.dup_clusters(pairs, iters=4, handles=_PLAN_CACHES)
+    pairs = DD.winnowing_pairs(d, "doc_id", "text", k=8, w=4, min_shared=30)
+    labels = DD.dup_clusters(pairs, iters=4)
     return DD.keep_cluster_representatives(d, "doc_id", labels).select("doc_id")
 
 
@@ -887,8 +858,7 @@ def q55_span_dedup(spark, sf):
         "doc_id",
         F.concat(F.lit("pad0 pad1 pad2 "), rep, F.lit(" "),
                  F.col("text")).alias("text"))
-    return scrub_repeated_windows(planted, "doc_id", "text", w=10,
-                                  handles=_PLAN_CACHES)
+    return scrub_repeated_windows(planted, "doc_id", "text", w=10)
 
 
 def q57_pq_topk(spark, sf):
@@ -1044,8 +1014,7 @@ def q60_simhash_dup_pairs(spark, sf):
 
     d = _t_spread(spark, sf, "documents")
     sims = simhash_df(d, "doc_id", "text")
-    return hamming_pairs(sims, "doc_id", "simhash", max_dist=4,
-                         handles=_PLAN_CACHES) \
+    return hamming_pairs(sims, "doc_id", "simhash", max_dist=4) \
         .select("id1", "id2", F.col("dist").cast("int").alias("dist"))
 
 
@@ -1110,10 +1079,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q59_quality_classify": q59_quality_classify,
         "q60_simhash_dup_pairs": q60_simhash_dup_pairs,
     }
-    # every entry drains the PREVIOUS invocation's operator caches at
-    # build time (see _PLAN_CACHES above) so stale CacheManager entries
-    # never tax later queries' plan matching
-    return {k: _with_cache_drain(v) for k, v in base.items()}
+    return {k: _with_gc(v) for k, v in base.items()}
 
 
 # =====================================================================

@@ -24,7 +24,7 @@ from pyspark.sql import SparkSession
 @dataclass(frozen=True)
 class CrawlConfig:
     """Tunables for the crawl engine. Defaults sized for local[32] tests;
-    at cluster scale raise n_shards / shuffle_partitions proportionally
+    at cluster scale raise n_shards proportionally
     (design point: 10^10 URLs → n_shards ~ 2^14, bloom_bits_per_shard
     sized for ~10^6 keys/shard at fpr 1e-3 ≈ 14.4 bits/key ≈ 1.8 MB/shard,
     well inside one Arrow batch)."""
@@ -37,7 +37,6 @@ class CrawlConfig:
     backoff_multiplier: int = 2
     default_host_budget: int = 60      # per-host per-round cap (60 req/min analog)
     salt_buckets: int = 8              # hot-host salting fan-out
-    shuffle_partitions: int = 32
     exact_seen_shadow: bool = True     # keep exact urlhash set alongside Bloom
                                        # (parity oracle is exact; Bloom is the
                                        # scale path — SURVEY §7 Phase 2)

@@ -15,6 +15,18 @@ All operators are pure Catalyst expressions (arrays + higher-order
 functions) — no Python UDFs; at 100 TB these run entirely inside
 whole-stage codegen and the only shuffles are the documented
 groupBy/join keys.
+
+Internal fences: a frame that the returned plan references more than
+once, or that a generator must not re-inline, is cut with
+``localCheckpoint`` — never ``persist()``. A local checkpoint registers
+nothing in the CacheManager, so no caller has a cache to release; its
+blocks are freed when the last plan referencing it is garbage-
+collected. The checkpoint is lazy (``eager=False``) unless the operator
+itself runs an action on the frame straight away (``graph.pagerank``'s
+node count, the rescore's max), where the frame has to exist at once.
+Lazy does not defer everything under AQE: over a subplan holding an
+exchange it runs that exchange's map stage when called, so such an
+operator does part of its work while the plan is built.
 """
 
 from __future__ import annotations
@@ -154,7 +166,11 @@ def minhash_signature_rows(df: DataFrame, id_col: str, text_col: str,
     (HOFs are CodegenFallback); the aggregate runs the 16 affine maps
     in codegen and parallelizes across whatever partitioning the input
     has. Zero-shingle documents (< 3 tokens) keep their all-null sig
-    row via the left join back to the id frame."""
+    row via the left join back to the id frame.
+
+    Precondition: ``id_col`` is unique per row. The aggregate groups by
+    id, so rows sharing an id get one signature over the union of their
+    shingles (and the join back repeats it per row)."""
     text = F.col(text_col)
     ids = df.select(F.col(id_col).alias("doc_id"),
                     *([text.alias("_text")] if keep_text else []))
@@ -183,8 +199,7 @@ def minhash_signature_rows(df: DataFrame, id_col: str, text_col: str,
 
 
 def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
-                      jaccard_threshold: float = 0.5,
-                      handles: list | None = None) -> DataFrame:
+                      jaccard_threshold: float = 0.5) -> DataFrame:
     """MinHash → banded LSH candidate generation → exact-Jaccard verify.
 
     Scale path for near-dup at 10^10 docs: signature is one projection
@@ -193,18 +208,16 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     proportional to collisions, not |docs|². Verification re-checks
     exact n-gram Jaccard so false-positive buckets are filtered; LSH
     false negatives are the standard recall trade-off (16 sigs / 4
-    bands → s-curve threshold ≈ (1/4)^(1/4) ≈ 0.71)."""
-    # persisted for the same generator-inlining reason as
+    bands → s-curve threshold ≈ (1/4)^(1/4) ≈ 0.71).
+
+    Precondition: ``id_col`` is unique per row (see
+    ``minhash_signature_rows``)."""
+    # checkpointed for the same generator-inlining reason as
     # winnowing_pairs: the band explode + self-join would otherwise
-    # re-derive all 16 permutation minima per reference. ``handles``:
-    # same release contract as winnowing_pairs/dup_clusters — a
-    # long-running driver passes a list and unpersists after
-    # materializing; one-shot callers rely on ContextCleaner.
+    # re-derive all 16 permutation minima per reference
     with_sig = minhash_signature_rows(
         df, id_col, text_col, keep_text=True).filter(
-            F.col("n_shingles") > 0).persist()
-    if handles is not None:
-        handles.append(with_sig)
+            F.col("n_shingles") > 0).localCheckpoint(eager=False)
     # ^ docs with zero shingles (< 3 tokens) have undefined signatures —
     # all-null sigs would collide into ONE degenerate band bucket and
     # their Jaccard is 0/0; by definition they cannot be n-gram
@@ -324,8 +337,7 @@ def winnowing_fingerprint_rows(df: DataFrame, id_col: str, text_col: str,
 
 
 def winnowing_pairs(df: DataFrame, id_col: str, text_col: str,
-                    k: int = 8, w: int = 4, min_shared: int = 2,
-                    handles: list | None = None) -> DataFrame:
+                    k: int = 8, w: int = 4, min_shared: int = 2) -> DataFrame:
     """Candidate near-dup pairs from shared winnowing fingerprints:
     explode each document's fingerprint set → self-equi-join on the
     fingerprint value (the only shuffle — identical bucketed shape to
@@ -335,19 +347,16 @@ def winnowing_pairs(df: DataFrame, id_col: str, text_col: str,
     sharing a substring of length ≥ k+w-1 appears with at least one
     shared fingerprint; ``min_shared`` > 1 filters incidental single
     collisions. Returns (id1, id2, n_shared) with id1 < id2."""
-    # The fingerprint rows are PERSISTED before the explode: a plain
+    # The fingerprint rows are CHECKPOINTED before the explode: a plain
     # projection boundary does not survive generator extraction — the
     # optimizer inlines the minima expression into the Generate node
     # and the self-join then evaluates the O(L) fingerprint pipeline
     # once per reference (measured minutes vs ~3 s over 200 docs at
-    # sf0.1). The cache is O(docs · fingerprints) longs — tiny next to
-    # the join it feeds — and is exactly the frame both join sides
-    # want to share. ``handles``: as in ``dup_clusters`` — pass a list
-    # to unpersist after materializing; otherwise ContextCleaner
-    # reclaims it when the plan is GC'd.
-    fpr = winnowing_fingerprint_rows(df, id_col, text_col, k, w).persist()
-    if handles is not None:
-        handles.append(fpr)
+    # sf0.1). The checkpoint is O(docs · fingerprints) longs — tiny
+    # next to the join it feeds — and is exactly the frame both join
+    # sides want to share.
+    fpr = winnowing_fingerprint_rows(
+        df, id_col, text_col, k, w).localCheckpoint(eager=False)
     fp = fpr.select("doc_id", F.explode("fps").alias("fp"))
     a, b = fp.alias("a"), fp.alias("b")
     return (
@@ -386,8 +395,7 @@ def simhash_df(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def hamming_pairs(df: DataFrame, id_col: str, hash_col: str,
-                  max_dist: int = 3, blocks: int | None = None,
-                  handles: list | None = None) -> DataFrame:
+                  max_dist: int = 3, blocks: int | None = None) -> DataFrame:
     """All unordered pairs of rows whose 64-bit hashes differ in at
     most ``max_dist`` bits — the near-dup pairing step for SimHash
     (text) and pHash (images; both are 64-bit longs, so one operator
@@ -418,22 +426,18 @@ def hamming_pairs(df: DataFrame, id_col: str, hash_col: str,
 
     Returns (id1, id2, dist) with id1 < id2, one row per pair.
     """
-    if not 1 <= (blocks or (max_dist + 1)) <= 64:   # validate pre-persist
+    if not 1 <= (blocks or (max_dist + 1)) <= 64:   # validate pre-checkpoint
         raise ValueError(f"blocks must be in [1, 64], got "
                          f"{blocks or (max_dist + 1)}")
     h = F.col(hash_col)
-    # persisted before the self-joins: the hash is usually an expensive
-    # upstream computation (simhash's 64 conditional sums, pHash's
-    # image decode) and reps/expansion/intra would re-derive it per
-    # reference — same CSE hazard and same ``handles`` release
-    # contract as minhash_lsh_pairs/winnowing_pairs above
+    # checkpointed before the self-joins: the hash is usually an
+    # expensive upstream computation (simhash's 64 conditional sums,
+    # pHash's image decode) and reps/expansion/intra would re-derive it
+    # per reference — same CSE hazard as minhash_lsh_pairs/
+    # winnowing_pairs above
     hashed = df.filter(h.isNotNull()).select(
-        F.col(id_col).alias("_id"), h.alias("_h")).persist()
-    if handles is not None:
-        handles.append(hashed)
-    reps = hashed.select("_h").distinct().persist()
-    if handles is not None:
-        handles.append(reps)
+        F.col(id_col).alias("_id"), h.alias("_h")).localCheckpoint(eager=False)
+    reps = hashed.select("_h").distinct().localCheckpoint(eager=False)
     hpairs = _hamming_block_pairs(reps, max_dist, blocks)
     cross = (hpairs
              .join(hashed.select(F.col("_id").alias("_ida"),
@@ -453,8 +457,7 @@ def hamming_pairs(df: DataFrame, id_col: str, hash_col: str,
 
 def hamming_join(left: DataFrame, right: DataFrame, max_dist: int = 3,
                  blocks: int | None = None,
-                 id_col: str = "id", hash_col: str = "h",
-                 handles: list | None = None) -> DataFrame:
+                 id_col: str = "id", hash_col: str = "h") -> DataFrame:
     """Cross-frame Hamming pairing: every (left row, right row) pair
     whose 64-bit hashes differ in ≤ ``max_dist`` bits — the
     INCREMENTAL dedup shape (this round's new image pHashes vs the
@@ -473,11 +476,9 @@ def hamming_join(left: DataFrame, right: DataFrame, max_dist: int = 3,
         raise ValueError(f"blocks must be in [1, 64], got {b}")
     h = F.col(hash_col)
     lh = left.filter(h.isNotNull()).select(
-        F.col(id_col).alias("_lid"), h.alias("_lh")).persist()
+        F.col(id_col).alias("_lid"), h.alias("_lh")).localCheckpoint(eager=False)
     rh = right.filter(h.isNotNull()).select(
-        F.col(id_col).alias("_rid"), h.alias("_rh")).persist()
-    if handles is not None:
-        handles.extend([lh, rh])
+        F.col(id_col).alias("_rid"), h.alias("_rh")).localCheckpoint(eager=False)
     lp = _hamming_blocks(lh.select(F.col("_lh").alias("_h")).distinct(), b)
     rp = _hamming_blocks(rh.select(F.col("_rh").alias("_h")).distinct(), b)
     cand = (lp.alias("a").join(rp.alias("c"),
@@ -630,8 +631,7 @@ def dedup_repeated_spans(df: DataFrame, id_col: str, text_col: str,
 # ----------------------------------------------- duplicate-cluster labels
 def dup_clusters(pairs: DataFrame, id1: str = "id1", id2: str = "id2",
                  iters: int | None = None, max_iters: int = 25,
-                 node_col: str = "doc_id", label_col: str = "cluster_id",
-                 handles: list | None = None) -> DataFrame:
+                 node_col: str = "doc_id", label_col: str = "cluster_id") -> DataFrame:
     """Connected components over a near-dup pair list → one canonical
     cluster label (the MIN member id) per document. This is the step
     after every pair generator here (LSH / SimHash / winnowing /
@@ -656,26 +656,17 @@ def dup_clusters(pairs: DataFrame, id1: str = "id1", id2: str = "id2",
 
     Scale shape per iteration: one equi-join (symmetric edges ⨝ labels,
     shuffle on node id) + one min hash-aggregate (map-side combinable).
-    The symmetric edge list is persisted once and reused every
+    The symmetric edge list is checkpointed once and reused every
     iteration.
-
-    ``handles``: as in ``graph.pagerank`` — in fixed-``iters`` mode the
-    returned plan still references the persisted edge list; pass a list
-    to receive the handle and unpersist after materializing (converged
-    mode checkpoints eagerly and releases its cache itself).
     """
     edges = (pairs.select(F.col(id1).alias("src"), F.col(id2).alias("dst"))
              .unionByName(pairs.select(F.col(id2).alias("src"),
                                        F.col(id1).alias("dst"))))
-    # Always persisted: the returned plan references the edge subtree
-    # once for the label init plus once per iteration, and the pairs
-    # pipeline feeding it (LSH / winnowing joins) is expensive —
-    # recomputing it per reference would dwarf the cache cost.
-    # Converged mode releases the cache itself below; fixed-iters
-    # callers pass ``handles`` to unpersist after materializing, and a
-    # one-shot caller that doesn't is reclaimed by ContextCleaner once
-    # the plan is GC'd.
-    edges = edges.persist()
+    # Always checkpointed: the returned plan references the edge
+    # subtree once for the label init plus once per iteration, and the
+    # pairs pipeline feeding it (LSH / winnowing joins) is expensive —
+    # recomputing it per reference would dwarf the checkpoint's cost.
+    edges = edges.localCheckpoint(eager=False)
     labels = (edges.select(F.col("src").alias("node")).distinct()
               .select("node", F.col("node").alias("label")))
 
@@ -689,18 +680,15 @@ def dup_clusters(pairs: DataFrame, id1: str = "id1", id2: str = "id2",
         # LAZY localCheckpoint per iteration: ``step`` references its
         # input labels TWICE (join probe + union), so a plain nested
         # plan doubles per iteration — 2^iters copies of the label
-        # subtree, each re-joining the (cached) edges; measured ~9.6 s
-        # for iters=4 over 200 docs' winnowing pairs vs ~2 s broken.
-        # Lazy (not eager) keeps the returned frame a plan, so callers'
-        # laziness/timing semantics are unchanged; the first action
-        # materializes each iteration exactly once.
+        # subtree, each re-joining the (checkpointed) edges; measured
+        # ~9.6 s for iters=4 over 200 docs' winnowing pairs vs ~2 s
+        # broken. Lazy checkpoints still run each iteration's exchange
+        # map stages here, while the plan is built (under AQE, see the
+        # module docstring); the final step materializes on the first
+        # action.
         out = labels
         for _ in range(iters):
             out = step(out).localCheckpoint(eager=False)
-        if handles is not None:
-            handles.append(edges)
-        return out.select(F.col("node").alias(node_col),
-                          F.col("label").alias(label_col))
     else:
         cur = labels.localCheckpoint(eager=True)
         for _ in range(max_iters):
@@ -711,7 +699,6 @@ def dup_clusters(pairs: DataFrame, id1: str = "id1", id2: str = "id2",
             if changed == 0:
                 break
         out = cur
-    edges.unpersist()
     return out.select(F.col("node").alias(node_col),
                       F.col("label").alias(label_col))
 
@@ -794,8 +781,7 @@ def _scrub_windows_array(s1: DataFrame, w: int) -> DataFrame:
         (F.col("_n") - F.size(F.col("_k"))).alias("n_scrubbed"))
 
 
-def _scrub_windows_exploded(s1: DataFrame, w: int,
-                            handles: list | None = None) -> DataFrame:
+def _scrub_windows_exploded(s1: DataFrame, w: int) -> DataFrame:
     """Long-document form of ``scrub_repeated_windows`` (round-5
     verdict 'Next round' #3): the O(n²)-per-document array_position
     pass is replaced by shuffles — window hashes are posexploded to
@@ -811,22 +797,19 @@ def _scrub_windows_exploded(s1: DataFrame, w: int,
     exactly the scattered-boilerplate docs this path exists for —
     review r6).
 
-    The hashed frame is PERSISTED before the posexplode + rebind
+    The hashed frame is CHECKPOINTED before the posexplode + rebind
     self-join — generator extraction re-inlines computed arrays
     through projection barriers (the winnowing/minhash hazard: without
     the barrier each exploded element re-derives the whole O(n·w) hash
     transform → O(n²·w) total, measured 390 s on one 50k-token doc vs
-    5 s for the hash pass itself). ``handles``: same release contract
-    as winnowing_pairs/dup_clusters.
+    5 s for the hash pass itself).
 
     The token text does shuffle once here (unlike the array form) —
     that is the honest cost of the long-doc branch, bounded by the
     branch's own row volume; a 500k-token book costs O(n·w) hashing +
     O(n log n) shuffle instead of O(n²) codegen. Identical output to
     the array form (equality pinned in tests)."""
-    s2 = _win_hashes(s1, w).persist()
-    if handles is not None:
-        handles.append(s2)
+    s2 = _win_hashes(s1, w).localCheckpoint(eager=False)
     pos = (s2.select("doc_id", F.posexplode("_h").alias("_i0", "_wh"))
            .select("doc_id", (F.col("_i0") + 1).alias("_i"), "_wh"))
     wfirst = Window.partitionBy("doc_id", "_wh")
@@ -856,8 +839,7 @@ def _scrub_windows_exploded(s1: DataFrame, w: int,
 
 
 def scrub_repeated_windows(df: DataFrame, id_col: str, text_col: str,
-                           w: int = 10, long_doc_tokens: int = 4096,
-                           handles: list | None = None) -> DataFrame:
+                           w: int = 10, long_doc_tokens: int = 4096) -> DataFrame:
     """Off-grid intra-document repetition scrub: drop every token
     covered by some ``w``-token window that already occurred EARLIER in
     the same document — at ANY token offset, not just multiples of a
@@ -892,8 +874,8 @@ def scrub_repeated_windows(df: DataFrame, id_col: str, text_col: str,
     toks = F.split(F.col(text_col), " ")
     s1 = df.select(F.col(id_col).alias("doc_id"), toks.alias("_t"))
     if long_doc_tokens <= 0:
-        return _scrub_windows_exploded(s1, w, handles)
+        return _scrub_windows_exploded(s1, w)
     nt = F.size(F.col("_t"))
     return _scrub_windows_array(s1.filter(nt <= long_doc_tokens), w) \
         .unionByName(_scrub_windows_exploded(
-            s1.filter(nt > long_doc_tokens), w, handles))
+            s1.filter(nt > long_doc_tokens), w))

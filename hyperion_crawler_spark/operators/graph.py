@@ -28,7 +28,7 @@ def _pround(col, digits: int):
 
 def pagerank(links: DataFrame, iters: int = 2, damping: float = 0.85,
              src: str = "src_url", dst: str = "dst_url",
-             digits: int = 9, handles: list | None = None) -> DataFrame:
+             digits: int = 9) -> DataFrame:
     """Simplified batch PageRank over an edge list (dangling mass
     dropped — the common simplified form). Returns ``(url, rank)``.
 
@@ -41,26 +41,21 @@ def pagerank(links: DataFrame, iters: int = 2, damping: float = 0.85,
     10^10 edges each iteration is two hash-partitioned shuffles of
     (url, double) pairs — no fanout beyond the edge list itself.
 
-    ``handles``: pass a list to receive the internally persisted
-    frames; unpersist them once the returned plan is materialized. A
-    long-running driver loop that calls this every few rounds must do
-    so — ContextCleaner's lazy reclamation is not enough to keep a
-    multi-day crawl's executor storage flat.
+    The node set is a local checkpoint, not a cache: its blocks are
+    released when the returned plan that references them is garbage-
+    collected, so a long-running driver loop that calls this every few
+    rounds needs no release step to keep executor storage flat.
     """
-    # persisted: the ranks plan references `nodes` twice per iteration
-    # (contribution join + left join back) plus the init — unpersisting
-    # before the caller evaluates would recompute the distinct-union
-    # each time.
+    # checkpointed (eager — the count below is the first action; see
+    # operators/dedup.py on checkpoint fences): the ranks plan
+    # references `nodes` twice per iteration (contribution join + left
+    # join back) plus the init, and would otherwise recompute the
+    # distinct-union each time.
     nodes = (links.select(F.col(src).alias("url"))
              .unionByName(links.select(F.col(dst).alias("url")))
-             .distinct()).persist()
-    if handles is not None:
-        handles.append(nodes)
+             .distinct()).localCheckpoint()
     n = nodes.count()
     if n == 0:  # empty graph (e.g. a rescore before anything is fetched)
-        nodes.unpersist()
-        if handles is not None:
-            handles.remove(nodes)
         return links.sparkSession.createDataFrame([], "url string, rank double")
     deg = links.groupBy(src).agg(F.count("*").alias("deg"))
     edges = links.select(src, dst).join(deg, src)
@@ -80,22 +75,15 @@ def pagerank(links: DataFrame, iters: int = 2, damping: float = 0.85,
 
 
 def rescore_frontier_priority(frontier: DataFrame, links: DataFrame,
-                              iters: int = 2, weight: float = 0.5,
-                              handles: list | None = None) -> DataFrame:
+                              iters: int = 2, weight: float = 0.5) -> DataFrame:
     """Blend the frontier's existing priority with link-graph PageRank:
     ``priority' = (1-w)·priority + w·rank/max(rank)`` — the re-scoring
     pass a long-running crawl runs between rounds so heavily-linked
-    pages climb the queue. Unknown URLs keep their priority.
-
-    ``handles``: as in ``pagerank`` — the caller unpersists the
-    collected frames after materializing the blended frontier (the
-    round does this right after its frontier overwrite commits)."""
-    # persist + materialize via the max() job: without the cache the
-    # full PageRank DAG would execute twice (once for mx, once when the
+    pages climb the queue. Unknown URLs keep their priority."""
+    # eager checkpoint, read back by the max() job: without it the full
+    # PageRank DAG would execute twice (once for mx, once when the
     # caller materializes the blended frontier)
-    pr = pagerank(links, iters=iters, handles=handles).persist()
-    if handles is not None:
-        handles.append(pr)
+    pr = pagerank(links, iters=iters).localCheckpoint()
     mx = pr.agg(F.max("rank")).first()[0] or 1.0
     pr_n = pr.select("url", (F.col("rank") / F.lit(mx)).alias("_pr"))
     return (frontier.join(pr_n, "url", "left")
@@ -107,8 +95,7 @@ def rescore_frontier_priority(frontier: DataFrame, links: DataFrame,
 
 
 def rescore_frontier_delta(frontier: DataFrame, links: DataFrame,
-                           iters: int = 2, weight: float = 0.5,
-                           handles: list | None = None) -> DataFrame:
+                           iters: int = 2, weight: float = 0.5) -> DataFrame:
     """Changed-rows-only rescore: same blend as
     ``rescore_frontier_priority`` but returns ONLY the frontier rows
     whose priority the blend actually moves — the graph-adjacent slice.
@@ -128,9 +115,7 @@ def rescore_frontier_delta(frontier: DataFrame, links: DataFrame,
     ``blended != priority`` drops no-op rows so an already-converged
     rescore commits an empty delta (merge() carries files unchanged).
     """
-    pr = pagerank(links, iters=iters, handles=handles).persist()
-    if handles is not None:
-        handles.append(pr)
+    pr = pagerank(links, iters=iters).localCheckpoint()   # as above
     mx = pr.agg(F.max("rank")).first()[0] or 1.0
     pr_n = pr.select("url", (F.col("rank") / F.lit(mx)).alias("_pr"))
     blended = (1.0 - weight) * F.col("priority") + weight * F.col("_pr")

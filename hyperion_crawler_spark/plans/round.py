@@ -306,10 +306,8 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
         neardups_t = cat.table("image_neardups", "round")
         new_ph = results.filter(F.col("status") == "fetched") \
             .select(F.col("image_id").alias("id"), F.col("phash").alias("h"))
-        nd_handles: list = []
         intra = hamming_pairs(new_ph, "id", "h",
-                              max_dist=cfg.image_neardup_dist,
-                              handles=nd_handles) \
+                              max_dist=cfg.image_neardup_dist) \
             .select(F.col("id1").alias("image_id"),
                     F.col("id2").alias("dup_of"), "dist")
         idx_df = phash_t.read(spark, version=base.get("phash_index", 0))
@@ -321,7 +319,7 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
                 new_ph,
                 idx_df.select(F.col("image_id").alias("id"), "h"),
                 max_dist=cfg.image_neardup_dist,
-                id_col="id", hash_col="h", handles=nd_handles) \
+                id_col="id", hash_col="h") \
                 .withColumnRenamed("left_id", "image_id") \
                 .withColumnRenamed("right_id", "dup_of")
             intra = intra.unionByName(cross)
@@ -330,8 +328,6 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
                            F.col("dist").cast("int").alias("dist"), "round")
                    .persist())
         n_neardups = nd_rows.count()
-        for h in nd_handles:
-            h.unpersist()
 
     # --- commits (snapshot per table; round commit = checkpoint) ----
     # Independent tables commit IN PARALLEL: every input cache is
@@ -482,15 +478,11 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
             # pending queue (a 10^10-row table must not be rewritten
             # to change the graph-adjacent slice). Compaction re-sorts
             # the queue as usual.
-            pinned: list = []
             moved = rescore_frontier_delta(
-                fr_now, known_links, iters=2, weight=cfg.rescore_weight,
-                handles=pinned)
+                fr_now, known_links, iters=2, weight=cfg.rescore_weight)
             versions["frontier"] = frontier_t.merge(
                 spark, moved.select(*FRONTIER_COLS), ["urlhash"],
                 base_version=versions["frontier"])
-            for h in pinned:  # merge() materialized the blend
-                h.unpersist()
         t = _mark("rescore_priority", t)
     if cfg.fold_seen_every and round_idx % cfg.fold_seen_every == 0:
         # OR-compact the append-only seen deltas back to one blob per

@@ -1,7 +1,10 @@
 """Local emulation of the driver's correctness gate: run each
 ``__spark_entry__.queries()`` entry on Spark at sf0.01 and its
 ``oracle_sql()`` mirror on DuckDB, compare row count, column names,
-dtypes, and (order-insensitively) values.
+dtypes, and (order-insensitively) values. A query also fails when it
+leaves an entry in Spark's CacheManager after its result is collected:
+a leaked cache taxes every later action's plan matching for the rest of
+the session.
 
 Usage: python scripts/check_entry.py [--sf /root/testdata/sf0.01] [q_name ...]
 """
@@ -74,6 +77,7 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf}/{t}.parquet')")
 
+    cache = spark._jsparkSession.sharedState().cacheManager()
     qs, oracles = E.queries(), E.oracle_sql()
     names = args.names or list(qs)
     n_ok = 0
@@ -81,18 +85,22 @@ def main():
         try:
             sdf = qs[name](spark, args.sf)
             spark_pdf = sdf.toPandas()
-            if name not in oracles:
-                print(f"{name}: rows={len(spark_pdf)} (rows-only, no oracle)")
-                n_ok += 1
-                continue
-            duck_pdf = con.execute(oracles[name]).df()
-            problems = compare(name, spark_pdf, duck_pdf)
+            problems = []
+            n_cached = cache.numCachedEntries()
+            if n_cached:
+                problems.append(f"leaves {n_cached} CacheManager entries")
+                spark.catalog.clearCache()   # charge no later query
+            if name in oracles:
+                problems += compare(name, spark_pdf, con.execute(oracles[name]).df())
             if problems:
-                print(f"{name}: FAIL  rows={len(spark_pdf)}")
+                print(f"{name}: FAIL  rows={len(spark_pdf)} cached={n_cached}")
                 for p in problems:
                     print(f"    {p}")
+            elif name not in oracles:
+                print(f"{name}: rows={len(spark_pdf)} cached=0 (rows-only, no oracle)")
+                n_ok += 1
             else:
-                print(f"{name}: OK    rows={len(spark_pdf)}")
+                print(f"{name}: OK    rows={len(spark_pdf)} cached=0")
                 n_ok += 1
         except Exception:
             print(f"{name}: ERROR")

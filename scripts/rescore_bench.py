@@ -79,20 +79,15 @@ def run_one(spark, delta: bool, n_rows: int, graph_nodes: int) -> dict:
     v0 = t.overwrite(_frontier(spark, n_rows))
     links = _links(spark, graph_nodes)
     fr = t.read(spark, version=v0)
-    handles: list = []
     t0 = time.perf_counter()
     if delta:
-        moved = rescore_frontier_delta(fr, links, iters=2, weight=0.5,
-                                       handles=handles)
+        moved = rescore_frontier_delta(fr, links, iters=2, weight=0.5)
         ver = t.merge(spark, moved.select(*COLS), ["urlhash"],
                       base_version=v0)
     else:
-        blended = rescore_frontier_priority(fr, links, iters=2, weight=0.5,
-                                            handles=handles)
+        blended = rescore_frontier_priority(fr, links, iters=2, weight=0.5)
         ver = t.overwrite(blended.select(*COLS))
     sec = round(time.perf_counter() - t0, 2)
-    for h in handles:
-        h.unpersist()
     check = (t.read(spark, version=ver)
              .agg(F.count("*").alias("n"),
                   F.floor(F.sum("priority") * 1e6 + F.lit(0.5)).alias("psum"))

@@ -92,14 +92,11 @@ def curate(spark: SparkSession, docs: DataFrame, out_dir: str,
 
     # 2. near-dup: LSH pairs → connected components → keep one per
     # cluster (representative = min doc_id, the operator contract)
-    handles: list = []
-    pairs = DD.minhash_lsh_pairs(cur, "doc_id", "text", handles=handles)
+    pairs = DD.minhash_lsh_pairs(cur, "doc_id", "text")
     labels = DD.dup_clusters(pairs)
     cur = DD.keep_cluster_representatives(cur, "doc_id", labels)
     cur = cur.persist()
     stats["near_dedup"] = cur.count()
-    for h in handles:
-        h.unpersist()
     _lap("near_dedup")
 
     # 2b. semantic dedup over embeddings (SemDeDup)

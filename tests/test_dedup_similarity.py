@@ -302,14 +302,71 @@ def test_dup_clusters_on_winnowing_pairs(spark):
 
 
 def test_dup_clusters_handles_release(spark):
+    """dup_clusters releases its own fences: once the caller materializes
+    the labels, the CacheManager holds no entry the operator created, so
+    there is nothing left for the caller to unpersist."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
     pairs = _pairs(spark, [(1, 2)])
-    handles = []
-    out = DD.dup_clusters(pairs, iters=1, handles=handles)
-    out.count()
-    assert len(handles) == 1
-    for h in handles:
-        h.unpersist()
-    assert not any(h.storageLevel.useMemory or h.storageLevel.useDisk for h in handles)
+    out = DD.dup_clusters(pairs, iters=1)
+    assert sorted(tuple(r) for r in out.collect()) == [(1, 1), (2, 1)]
+    assert cm.numCachedEntries() == before
+
+
+def test_operators_leave_no_cached_plans(
+        spark, fixture_dfs, crawl_cfg, tmp_path):
+    """No operator leaves a CacheManager entry behind once its result is
+    materialized: internal fences are local checkpoints, which the
+    CacheManager never holds (a leaked entry taxes every later action's
+    plan matching for the rest of the session). The crawl round with the
+    image near-dup pass and the rescore on must hold the same."""
+    from dataclasses import replace
+
+    from hyperion_crawler_spark.operators.graph import (
+        pagerank, rescore_frontier_delta, rescore_frontier_priority)
+    from hyperion_crawler_spark.plans.loop import run_crawl
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    docs = _docs(spark, 40)
+    sims = DD.simhash_df(docs, "doc_id", "text")
+    pairs = _pairs(spark, [(1, 2), (2, 3), (5, 6)])
+    links = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("d", "a")],
+        "src_url string, dst_url string")
+    frontier = spark.createDataFrame(
+        [("a", 0.5), ("b", 0.9), ("z", 0.1)], "url string, priority double")
+    ops = {
+        "minhash_lsh_pairs": lambda: DD.minhash_lsh_pairs(docs, "doc_id", "text"),
+        "winnowing_pairs": lambda: DD.winnowing_pairs(docs, "doc_id", "text"),
+        "hamming_pairs": lambda: DD.hamming_pairs(sims, "doc_id", "simhash",
+                                                  max_dist=20),
+        "hamming_join": lambda: DD.hamming_join(
+            sims.select(F.col("doc_id").alias("id"), F.col("simhash").alias("h")),
+            sims.select(F.col("doc_id").alias("id"), F.col("simhash").alias("h")),
+            max_dist=20),
+        "dup_clusters(iters)": lambda: DD.dup_clusters(pairs, iters=2),
+        "dup_clusters(converged)": lambda: DD.dup_clusters(pairs),
+        "scrub_repeated_windows(exploded)": lambda: DD.scrub_repeated_windows(
+            docs, "doc_id", "text", long_doc_tokens=0),
+        "pagerank": lambda: pagerank(links),
+        "rescore_frontier_priority": lambda: rescore_frontier_priority(
+            frontier, links),
+        "rescore_frontier_delta": lambda: rescore_frontier_delta(
+            frontier, links),
+    }
+    for name, op in ops.items():
+        before = cm.numCachedEntries()
+        op().collect()
+        assert cm.numCachedEntries() == before, f"{name} leaked a cache entry"
+
+    before = cm.numCachedEntries()
+    cfg = replace(crawl_cfg, image_neardup_dist=3, rescore_every=1)
+    metrics = run_crawl(spark, str(tmp_path / "store"), cfg,
+                        corpus=fixture_dfs["corpus"], links=fixture_dfs["links"],
+                        robots=fixture_dfs["robots"], seeds=fixture_dfs["seeds"],
+                        n_rounds=2)
+    assert [m["round"] for m in metrics if m["round"] > 0] == [1, 2]
+    assert cm.numCachedEntries() == before, "crawl round leaked a cache entry"
 
 
 def test_keep_cluster_representatives(spark):

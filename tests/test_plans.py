@@ -216,3 +216,59 @@ def test_fetch_broadcast_guard_falls_back_to_shuffle(spark, fixture_dfs, crawl_c
             sorted(map(tuple, fallback.collect()))
     finally:
         sched.unpersist()
+
+
+def _physical_nodes(p):
+    """Every node of an executed physical plan, descending into AQE query
+    stages and reused exchanges."""
+    cls = p.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        kids = [p.executedPlan()]
+    elif cls.endswith("QueryStageExec"):
+        kids = [p.plan()]
+    elif cls == "ReusedExchangeExec":
+        kids = [p.child()]
+    else:
+        kids = [p.children().apply(i) for i in range(p.children().size())]
+    yield p
+    for k in kids:
+        yield from _physical_nodes(k)
+
+
+def test_generators_read_the_checkpoint_fence(spark):
+    """The O(L) fingerprint, signature and window-hash projections are
+    cut by a local checkpoint before they are exploded: each Generate
+    reads the checkpoint's RDD scan through row-local nodes only, so the
+    optimizer cannot re-inline the projection into the generator and
+    evaluate it once per exploded element."""
+    from hyperion_crawler_spark.operators import dedup as DD
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet") \
+        .filter(F.col("doc_id") < 30).select("doc_id", "text")
+    # planted near-dups (first token dropped): with no candidate pairs
+    # AQE would prune the joins, and the generators with them
+    docs = docs.unionByName(docs.select(
+        (F.col("doc_id") + 1000).alias("doc_id"),
+        F.expr("substring(text, instr(text, ' ') + 1)").alias("text")))
+    row_local = {"ProjectExec", "FilterExec", "WholeStageCodegenExec",
+                 "InputAdapter"}
+    cases = {
+        "winnowing_pairs": (DD.winnowing_pairs(docs, "doc_id", "text"), None),
+        "minhash_lsh_pairs": (DD.minhash_lsh_pairs(docs, "doc_id", "text"), None),
+        # the exploded scrub also expands duplicate starts to covered
+        # positions — a Generate over a Window, not over the hashes
+        "scrub_repeated_windows": (DD.scrub_repeated_windows(
+            docs, "doc_id", "text", long_doc_tokens=0), "posexplode"),
+    }
+    for name, (df, generator) in cases.items():
+        df.collect()
+        gens = [n for n in _physical_nodes(df._jdf.queryExecution().executedPlan())
+                if n.getClass().getSimpleName() == "GenerateExec"
+                and generator in (None, n.generator().prettyName())]
+        assert gens, f"{name}: no Generate in the executed plan"
+        for g in gens:
+            node = g.child()
+            while node.getClass().getSimpleName() in row_local:
+                node = node.children().apply(0)
+            assert node.getClass().getSimpleName() == "RDDScanExec", \
+                f"{name}: Generate reads {node.nodeName()}, not the checkpoint"
