@@ -62,21 +62,6 @@ def _with_gc(fn):
     return run
 
 
-def _t_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Fixture tables are single-row-group parquet files, so their scan
-    is ONE task and any per-row-expensive pipeline above it runs on one
-    core while the rest of the cluster idles (guide §2.5 input skew:
-    'one huge unsplittable file — repartition immediately after the
-    read'). Round-robin spread sized from defaultParallelism (scale-
-    adaptive: executor cores on a real cluster, $SPARK_GRAFT_CPUS
-    locally); the shuffled bytes are the table itself — a few MB here,
-    and at 100 TB a properly row-grouped table never takes this path.
-    Used ONLY by queries whose scan-stage compute dominates; cheap
-    scans keep the direct read (the exchange is pure overhead there)."""
-    return _t(spark, sf_dir, name).repartition(
-        spark.sparkContext.defaultParallelism)
-
-
 def _pround(col, n: int):
     """Cross-engine-portable rounding: floor(x·10^n + 0.5)/10^n computed
     on the raw double. Spark's round() re-parses the double's shortest
@@ -276,10 +261,7 @@ def q19_simhash(spark, sf):
 
 
 def q20_embedding_topk(spark, sf):
-    # spread the corpus: the scoring join's parallelism is the stream
-    # (corpus) side's partitioning, and the single-row-group file
-    # arrives as ONE task
-    e = _t_spread(spark, sf, "embeddings")
+    e = _t(spark, sf, "embeddings")
     queries = e.filter(F.col("vec_id") % 25 == 0)
     # peek the (constant) embedding dim at plan-build time so the pair
     # scoring runs in the numpy _exact_scored_rows kernel instead of
@@ -307,7 +289,7 @@ def q22_text_quality(spark, sf):
     # duplicate-bigram fraction) ride the same driver window slot.
     from hyperion_crawler_spark.operators.quality import repetition_profile
 
-    d = _t_spread(spark, sf, "documents")
+    d = R.spread(_t(spark, sf, "documents"))
     rep = repetition_profile(d, "doc_id", "text", n=2)
     # PII scrub (r5 widening #2): the corpus text is PII-free, so each
     # doc_id%4 class gets a deterministic identifier suffix — counts
@@ -544,7 +526,7 @@ def q40_bm25(spark, sf):
     """Okapi BM25 relevance of every document against a keyword query
     (training-data selection: score against a target-domain keyword
     description, keep the top slice)."""
-    d = _t_spread(spark, sf, "documents")
+    d = R.spread(_t(spark, sf, "documents"))
     return RK.bm25_scores(d, "doc_id", "text",
                           ["spark", "table", "scan", "merge", "vector"])
 
@@ -742,8 +724,7 @@ def q51_frame_sample(spark, sf):
 
     # spread BEFORE the Python kernels: a mapInPandas chain inherits the
     # scan's single-task partitioning; only doc_id shuffles (guide §4.1)
-    docs = _t(spark, sf, "documents").select("doc_id") \
-        .repartition(spark.sparkContext.defaultParallelism)
+    docs = R.spread(_t(spark, sf, "documents").select("doc_id"))
 
     def gen(batches):
         for pdf in batches:
@@ -784,8 +765,7 @@ def q52_audio_windows(spark, sf):
     from hyperion_crawler_spark.operators.multimodal import audio_window_stats
 
     # spread BEFORE the Python kernels (same rationale as q51)
-    docs = _t(spark, sf, "documents").select("doc_id") \
-        .repartition(spark.sparkContext.defaultParallelism)
+    docs = R.spread(_t(spark, sf, "documents").select("doc_id"))
 
     def gen(batches):
         for pdf in batches:
@@ -833,7 +813,7 @@ def q54_decontaminate(spark, sf):
     documents share 8-grams with the benchmark and must be dropped."""
     from hyperion_crawler_spark.operators.dedup import decontaminate
 
-    d = _t_spread(spark, sf, "documents").select("doc_id", "source", "text")
+    d = R.spread(_t(spark, sf, "documents")).select("doc_id", "source", "text")
     bench = d.filter(F.col("doc_id") % 23 == 0).select(
         F.array_join(F.slice(F.split(F.col("text"), " "), 5, 16), " ")
         .alias("text"))
@@ -852,7 +832,7 @@ def q55_span_dedup(spark, sf):
     it starts; the reassembled text is value-compared."""
     from hyperion_crawler_spark.operators.dedup import scrub_repeated_windows
 
-    d = _t_spread(spark, sf, "documents").select("doc_id", "text")
+    d = R.spread(_t(spark, sf, "documents")).select("doc_id", "text")
     rep = F.array_join(F.slice(F.split(F.col("text"), " "), 1, 20), " ")
     planted = d.select(
         "doc_id",
@@ -925,7 +905,7 @@ def q56_token_freq(spark, sf):
       all derived counts are bit-deterministic in both engines."""
     from hyperion_crawler_spark.functions import bpe as BPE
 
-    d = _t_spread(spark, sf, "documents")
+    d = _t(spark, sf, "documents")
     ws = (d.select(F.explode(F.split(F.col("text"), " ")).alias("token"))
           .groupBy("token").agg(F.count("*").alias("n"))
           .orderBy(F.col("n").desc(), F.col("token").asc()).limit(50)
@@ -985,7 +965,7 @@ def q59_quality_classify(spark, sf):
     in tests/test_quality.py)."""
     from hyperion_crawler_spark.operators import quality as Q
 
-    d = _t_spread(spark, sf, "documents")
+    d = _t(spark, sf, "documents")
     m = F.col("doc_id") % 2
     txt = (F.when(m == 1, F.concat(F.upper(F.col("text")),
                                    F.lit(" !!! !!! !!! !!! !!!")))
@@ -1012,7 +992,7 @@ def q60_simhash_dup_pairs(spark, sf):
     image near-dup (tests/test_multimodal.py)."""
     from hyperion_crawler_spark.operators.dedup import hamming_pairs, simhash_df
 
-    d = _t_spread(spark, sf, "documents")
+    d = R.spread(_t(spark, sf, "documents"))
     sims = simhash_df(d, "doc_id", "text")
     return hamming_pairs(sims, "doc_id", "simhash", max_dist=4) \
         .select("id1", "id2", F.col("dist").cast("int").alias("dist"))
@@ -1088,7 +1068,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 _H60 = "CAST(CAST(concat('0x', substr(sha256({x}), 1, 15)) AS UBIGINT) AS BIGINT)"
 
 # winnowing candidate-pair CTE chain (shared by q38 + q39): k=8, w=4,
-# documents doc_id < 200 — mirrors dedup.winnowing_fingerprints/_pairs
+# documents doc_id < 200 — mirrors dedup.winnowing_fingerprint_rows/_pairs
 _winnow_pairs_cte = f"""d AS (SELECT doc_id, text FROM documents WHERE doc_id < 200),
             g AS (
               SELECT doc_id,

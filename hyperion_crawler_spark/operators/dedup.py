@@ -40,6 +40,7 @@ MINHASH_P = 2305843009213693951  # 2^61 - 1 (Mersenne)
 MINHASH_DOMAIN = 1 << 30         # tokens reduced mod 2^30 so a*x fits int64
 N_MINHASH = 16
 LSH_BAND_ROWS = 4                # 16 sigs → 4 bands of 4
+LONG_DOC_TOKENS = 4096           # longer docs take the exploded scrub form
 
 
 def _perm_constants() -> list[tuple[int, int]]:
@@ -137,36 +138,23 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
 
 
 # ------------------------------------------------------------- MinHash
-def minhash_signature(text: Column) -> Column:
-    """Array of N_MINHASH signature longs over word 3-gram shingles.
-
-    PERF NOTE: single-Column form — the shingle-hash subtree is
-    re-evaluated once per permutation (no CSE across HOF lambdas),
-    16× the SHA-256 work. Fine for unit vectors / oracle mirrors;
-    DataFrame paths use ``minhash_signature_rows``."""
-    hashes = F.transform(word_ngrams(text, 3), lambda s: portable_hash60(s) % MINHASH_DOMAIN)
-    sigs = [
-        F.array_min(F.transform(hashes, lambda x: (F.lit(a) * x + F.lit(b)) % MINHASH_P))
-        for (a, b) in MINHASH_PERMS
-    ]
-    return F.array(*sigs)
-
-
 def minhash_signature_rows(df: DataFrame, id_col: str, text_col: str,
                            keep_text: bool = False) -> DataFrame:
-    """``(doc_id[, _text], n_shingles, sig)`` — efficient DataFrame
-    form of ``minhash_signature``, identical values.
+    """``(doc_id[, _text], n_shingles, sig)``: the ``N_MINHASH``
+    signature longs of each document over its distinct word 3-gram
+    shingles, ``sig[j] = min((a_j·x + b_j) mod p)`` over the shingles'
+    ``portable_hash60 mod MINHASH_DOMAIN`` values ``x``.
 
-    r7 physical form: the distinct shingle hashes EXPLODE to rows and
-    all N_MINHASH permutation minima are computed as one map-side-
-    combinable hash aggregate (min over the same value set ≡ array_min
-    over the same array — bit-identical signatures, pinned by
-    test_rows_forms_match_column_forms). The previous form evaluated 16
-    interpreted ``array_min(transform(...))`` lambdas per document
-    (HOFs are CodegenFallback); the aggregate runs the 16 affine maps
-    in codegen and parallelizes across whatever partitioning the input
-    has. Zero-shingle documents (< 3 tokens) keep their all-null sig
-    row via the left join back to the id frame.
+    Physical form: the distinct shingle hashes EXPLODE to rows and all
+    N_MINHASH permutation minima are computed as one map-side-
+    combinable hash aggregate — the 16 affine maps run in codegen (no
+    per-permutation ``array_min(transform(...))`` lambda, which is
+    CodegenFallback and re-hashes every shingle per permutation) and
+    parallelize across whatever partitioning the input has. Values
+    equal the DuckDB oracle's list-form signatures
+    (test_rows_forms_match_duckdb_twins). Zero-shingle documents (< 3
+    tokens) keep their all-null sig row via the left join back to the
+    id frame.
 
     Precondition: ``id_col`` is unique per row. The aggregate groups by
     id, so rows sharing an id get one signature over the union of their
@@ -268,50 +256,23 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
 
 
 # ------------------------------------------------------------ winnowing
-def winnowing_fingerprints(text: Column, k: int = 8, w: int = 4) -> Column:
-    """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
-    SIGMOD'03 — the MOSS rolling-hash scheme): hash every character
-    k-gram, slide a window of ``w`` consecutive hashes, keep each
-    window's minimum; the distinct minima (sorted for a stable value)
-    are the fingerprint set. Guarantees any shared substring of length
-    ≥ k+w-1 contributes at least one common fingerprint — the classic
-    local-dedup/plagiarism sketch, here as a pure Catalyst expression
-    (portable-hash60 so the DuckDB oracle reproduces values exactly).
-
-    Scale shape: one projection pass per document; candidate pairs come
-    from an equi-join on exploded fingerprints (same bucketed shape as
-    the shingle join in ngram_jaccard_pairs).
-
-    PERF NOTE: this single-Column form re-evaluates the gram-hash
-    subtree per window (no CSE across HOF lambdas) — O(L²) hashing.
-    Fine for unit vectors / oracle mirrors; every DataFrame path must
-    use ``winnowing_fingerprint_rows`` (identical values, O(L))."""
-    n_grams = F.length(text) - (k - 1)
-    grams = F.when(
-        n_grams >= 1,
-        F.transform(F.sequence(F.lit(1), n_grams),
-                    lambda i: text.substr(i, F.lit(k))),
-    ).otherwise(F.array().cast("array<string>"))
-    hashes = F.transform(grams, lambda g: portable_hash60(g))
-    n_win = F.size(hashes) - (w - 1)
-    minima = F.when(
-        n_win >= 1,
-        F.transform(F.sequence(F.lit(1), n_win),
-                    lambda i: F.array_min(F.slice(hashes, i, w))),
-    ).otherwise(F.array().cast("array<long>"))
-    return F.array_sort(F.array_distinct(minima))
-
-
 def winnowing_fingerprint_rows(df: DataFrame, id_col: str, text_col: str,
                                k: int = 8, w: int = 4) -> DataFrame:
-    """``(doc_id, fps array<long>)`` — the efficient DataFrame form of
-    ``winnowing_fingerprints``, identical values.
+    """``(doc_id, fps array<long>)``: winnowing document fingerprints
+    (Schleimer/Wilkerson/Aiken, SIGMOD'03 — the MOSS rolling-hash
+    scheme). Hash every character k-gram, slide a window of ``w``
+    consecutive hashes, keep each window's minimum; the distinct minima
+    (sorted for a stable value) are the fingerprint set. Any shared
+    substring of length ≥ k+w-1 contributes at least one common
+    fingerprint — the classic local-dedup/plagiarism sketch, with
+    portable-hash60 k-gram hashes so the DuckDB oracle reproduces the
+    values exactly. Texts shorter than ``k`` fingerprint to ``[]``.
 
-    The split into TWO projections is load-bearing: in the one-Column
-    form the k-gram hash array is an expression SUBTREE, and Catalyst
-    does not common-subexpression-eliminate across higher-order-
-    function lambdas — every window's ``array_min(slice(hashes,i,w))``
-    re-evaluates ALL O(L) SHA-256 gram hashes, i.e. O(L²) hashing per
+    The split into TWO projections is load-bearing: with the k-gram
+    hash array as an expression SUBTREE, Catalyst does not
+    common-subexpression-eliminate across higher-order-function
+    lambdas — every window's ``array_min(slice(hashes,i,w))`` would
+    re-evaluate ALL O(L) SHA-256 gram hashes, i.e. O(L²) hashing per
     document (measured 46 s vs 0.7 s over 200 × 300-char docs at
     sf0.1). Materializing the hash array as a real ATTRIBUTE between
     projections makes each slice an O(w) array read; CollapseProject
@@ -426,9 +387,7 @@ def hamming_pairs(df: DataFrame, id_col: str, hash_col: str,
 
     Returns (id1, id2, dist) with id1 < id2, one row per pair.
     """
-    if not 1 <= (blocks or (max_dist + 1)) <= 64:   # validate pre-checkpoint
-        raise ValueError(f"blocks must be in [1, 64], got "
-                         f"{blocks or (max_dist + 1)}")
+    b = _n_blocks(max_dist, blocks)
     h = F.col(hash_col)
     # checkpointed before the self-joins: the hash is usually an
     # expensive upstream computation (simhash's 64 conditional sums,
@@ -438,7 +397,8 @@ def hamming_pairs(df: DataFrame, id_col: str, hash_col: str,
     hashed = df.filter(h.isNotNull()).select(
         F.col(id_col).alias("_id"), h.alias("_h")).localCheckpoint(eager=False)
     reps = hashed.select("_h").distinct().localCheckpoint(eager=False)
-    hpairs = _hamming_block_pairs(reps, max_dist, blocks)
+    hpairs = _hamming_block_pairs(reps, reps, max_dist, b) \
+        .filter(F.col("h1") < F.col("h2"))
     cross = (hpairs
              .join(hashed.select(F.col("_id").alias("_ida"),
                                  F.col("_h").alias("h1")), "h1")
@@ -471,25 +431,15 @@ def hamming_join(left: DataFrame, right: DataFrame, max_dist: int = 3,
     Returns (left_id, right_id, dist) — one row per cross pair;
     intra-left/intra-right pairs are NOT emitted (use
     ``hamming_pairs`` on one frame for those)."""
-    b = blocks or (max_dist + 1)
-    if not 1 <= b <= 64:
-        raise ValueError(f"blocks must be in [1, 64], got {b}")
+    b = _n_blocks(max_dist, blocks)
     h = F.col(hash_col)
     lh = left.filter(h.isNotNull()).select(
         F.col(id_col).alias("_lid"), h.alias("_lh")).localCheckpoint(eager=False)
     rh = right.filter(h.isNotNull()).select(
         F.col(id_col).alias("_rid"), h.alias("_rh")).localCheckpoint(eager=False)
-    lp = _hamming_blocks(lh.select(F.col("_lh").alias("_h")).distinct(), b)
-    rp = _hamming_blocks(rh.select(F.col("_rh").alias("_h")).distinct(), b)
-    cand = (lp.alias("a").join(rp.alias("c"),
-                               (F.col("a.bi") == F.col("c.bi"))
-                               & (F.col("a.bv") == F.col("c.bv")))
-            .select(F.col("a._h").alias("h1"), F.col("c._h").alias("h2"))
-            .distinct())
-    hpairs = (cand.select(
-        "h1", "h2",
-        F.bit_count(F.col("h1").bitwiseXOR(F.col("h2"))).alias("dist"))
-        .filter(F.col("dist") <= max_dist))
+    hpairs = _hamming_block_pairs(
+        lh.select(F.col("_lh").alias("_h")).distinct(),
+        rh.select(F.col("_rh").alias("_h")).distinct(), max_dist, b)
     return (hpairs
             .join(lh.select("_lid", F.col("_lh").alias("h1")), "h1")
             .join(rh.select("_rid", F.col("_rh").alias("h2")), "h2")
@@ -514,28 +464,34 @@ def _hamming_blocks(reps: DataFrame, b: int) -> DataFrame:
     ).select("_h", "_blk.bi", "_blk.bv")
 
 
-def _hamming_block_pairs(reps: DataFrame, max_dist: int,
-                         blocks: int | None = None) -> DataFrame:
-    """Manku block-permutation pairing over a frame of DISTINCT hashes
-    ``(_h)``: returns (h1, h2, dist) with h1 < h2 (signed-long order —
-    any total order works, values are distinct) and dist ≤ max_dist.
-    Split out of ``hamming_pairs`` so tests can pin that candidate
-    work is ∝ collisions among distinct values, independent of how
-    many rows share each hash."""
-    b = blocks or (max_dist + 1)
-    if not 1 <= b <= 64:
-        raise ValueError(f"blocks must be in [1, 64], got {b}")
-    parts = _hamming_blocks(reps, b)
-    a, c = parts.alias("a"), parts.alias("c")
+def _hamming_block_pairs(left: DataFrame, right: DataFrame, max_dist: int,
+                         b: int) -> DataFrame:
+    """Manku block-permutation pairing between two frames of DISTINCT
+    hashes ``(_h)``: returns every (h1 from left, h2 from right, dist)
+    with dist ≤ max_dist. The self-pairing of ``hamming_pairs`` is this
+    over one frame on both sides plus ``h1 < h2`` (signed-long order —
+    any total order works, values are distinct), which Catalyst pushes
+    into the join condition. Tests call it directly to pin that
+    candidate work is ∝ collisions among distinct values, independent
+    of how many rows share each hash."""
+    a, c = _hamming_blocks(left, b).alias("a"), _hamming_blocks(right, b).alias("c")
     cand = (a.join(c, (F.col("a.bi") == F.col("c.bi"))
-                      & (F.col("a.bv") == F.col("c.bv"))
-                      & (F.col("a._h") < F.col("c._h")))
+                      & (F.col("a.bv") == F.col("c.bv")))
              .select(F.col("a._h").alias("h1"), F.col("c._h").alias("h2"))
              .distinct())  # a pair may agree on several blocks
     return (cand.select(
                 "h1", "h2",
                 F.bit_count(F.col("h1").bitwiseXOR(F.col("h2"))).alias("dist"))
             .filter(F.col("dist") <= max_dist))
+
+
+def _n_blocks(max_dist: int, blocks: int | None) -> int:
+    """Manku block count (default max_dist+1, the pigeonhole minimum),
+    range-checked before an operator checkpoints anything."""
+    b = blocks or (max_dist + 1)
+    if not 1 <= b <= 64:
+        raise ValueError(f"blocks must be in [1, 64], got {b}")
+    return b
 
 
 # ------------------------------------------------------ decontamination
@@ -839,7 +795,7 @@ def _scrub_windows_exploded(s1: DataFrame, w: int) -> DataFrame:
 
 
 def scrub_repeated_windows(df: DataFrame, id_col: str, text_col: str,
-                           w: int = 10, long_doc_tokens: int = 4096) -> DataFrame:
+                           w: int = 10) -> DataFrame:
     """Off-grid intra-document repetition scrub: drop every token
     covered by some ``w``-token window that already occurred EARLIER in
     the same document — at ANY token offset, not just multiples of a
@@ -860,7 +816,7 @@ def scrub_repeated_windows(df: DataFrame, id_col: str, text_col: str,
 
     Physical form auto-selects per DOCUMENT by token count (round-5
     verdict 'Next round' #3): documents at or under
-    ``long_doc_tokens`` take the shuffle-free pure-array Catalyst form
+    ``LONG_DOC_TOKENS`` take the shuffle-free pure-array Catalyst form
     (``_scrub_windows_array`` — window hashes and first-occurrence
     indices as attribute barriers, O(n·w + n²) per document, all in
     codegen — right for web-page-sized rows), longer ones take the
@@ -868,14 +824,11 @@ def scrub_repeated_windows(df: DataFrame, id_col: str, text_col: str,
     a (doc_id, hash) shuffle, merged-interval reassembly, O(n·w)
     hashing + O(n log n) shuffle — right for book-length documents
     where the n² array pass would crawl). Both forms are exactly
-    equal (pinned in tests); ``long_doc_tokens=0`` forces the
-    exploded form everywhere. Returns
+    equal (pinned in tests). Returns
     (doc_id, text_clean, n_tokens, n_scrubbed)."""
     toks = F.split(F.col(text_col), " ")
     s1 = df.select(F.col(id_col).alias("doc_id"), toks.alias("_t"))
-    if long_doc_tokens <= 0:
-        return _scrub_windows_exploded(s1, w)
     nt = F.size(F.col("_t"))
-    return _scrub_windows_array(s1.filter(nt <= long_doc_tokens), w) \
+    return _scrub_windows_array(s1.filter(nt <= LONG_DOC_TOKENS), w) \
         .unionByName(_scrub_windows_exploded(
-            s1.filter(nt > long_doc_tokens), w))
+            s1.filter(nt > LONG_DOC_TOKENS), w))

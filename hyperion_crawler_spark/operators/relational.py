@@ -146,6 +146,27 @@ def apply_defaults(df: DataFrame, defaults: dict) -> DataFrame:
     return df.fillna(defaults)
 
 
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` to ``defaultParallelism`` partitions, but only
+    when it has fewer than half that many: the input-skew repair for a
+    scan that arrives as too few tasks for the per-row-expensive
+    pipeline above it (guide §2.5: repartition right after the read).
+
+    Decided while the plan is built, with no Spark job: a scan's count
+    is its list of planned splits. A frame already holding an exchange
+    under AQE is returned as is (asking its RDD would run the map
+    stages). A file scan counts BYTE-RANGE SPLITS, not row groups: at
+    sf0.1 ``lineitem`` is one row group but 2 splits on ``local[2]``,
+    while the ``documents`` and ``embeddings`` scans are one split at
+    sf0.01 and sf0.1 and do spread. A 100 TB table scans as far more
+    splits than cores and never takes this shuffle."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if (df._jdf.queryExecution().executedPlan().nodeName() == "AdaptiveSparkPlan"
+            or df.rdd.getNumPartitions() * 2 >= par):
+        return df
+    return df.repartition(par)
+
+
 def price_validity_predicate() -> Column:
     """P7 — the reference's OHLCV row-validity rule as one boolean expr.
     Expects columns open/high/low/close/volume (aliased by caller).

@@ -65,6 +65,7 @@ def curate(spark: SparkSession, docs: DataFrame, out_dir: str,
     from hyperion_crawler_spark.functions import bpe as B
     from hyperion_crawler_spark.operators import dedup as DD
     from hyperion_crawler_spark.operators.packing import pack_sequences
+    from hyperion_crawler_spark.operators.relational import spread
     from hyperion_crawler_spark.operators.selection import temperature_mix
 
     timings: dict = {}
@@ -76,12 +77,11 @@ def curate(spark: SparkSession, docs: DataFrame, out_dir: str,
         timings[stage] = round(t1 - t0, 3)
         t0 = t1
 
-    # spread the corpus before the chain: a single-file input arrives
-    # as one scan task and every per-row-expensive stage (shingle
-    # hashing, signatures, PII regexes) would run on one core (guide
-    # §2.5 input skew). Scale-adaptive (defaultParallelism); every
-    # stage below is pinned partitioning-independent by test_curate.
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
+    # a single-file input arrives as one scan task, and every per-row-
+    # expensive stage (shingle hashing, signatures, PII regexes) would
+    # run on one core; every stage below is pinned partitioning-
+    # independent by test_curate.
+    docs = spread(docs)
     stats: dict = {"input": docs.count()}
     _lap("input")
 

@@ -176,8 +176,12 @@ def test_dedup_pipelines_survive_short_texts(spark):
         "doc_id int, text string").withColumn("doc_id", F.col("doc_id").cast("long"))
     d = base.unionByName(shorties)
     assert DD.ngram_jaccard_pairs(d, "doc_id", "text").count() >= 0
-    sigs = d.select("doc_id", DD.minhash_signature(F.col("text")).alias("sig")).collect()
+    sigs = {r["doc_id"]: r for r in
+            DD.minhash_signature_rows(d, "doc_id", "text").collect()}
     assert len(sigs) == 23
+    for short in (900001, 900002, 900003):
+        assert sigs[short]["n_shingles"] == 0
+        assert sigs[short]["sig"] == [None] * DD.N_MINHASH
     assert DD.minhash_lsh_pairs(d, "doc_id", "text").count() >= 0
 
 
@@ -250,15 +254,15 @@ def test_winnowing_guarantee_and_short_text(spark):
          (3, "completely different content with no overlap at all here"),
          (4, "tiny")],
         "doc_id int, text string")
-    rows = df.select("doc_id", DD.winnowing_fingerprints(
-        F.col("text"), 8, 4).alias("fps")).collect()
+    rows = DD.winnowing_fingerprint_rows(df, "doc_id", "text", 8, 4).collect()
     fps = {r["doc_id"]: set(r["fps"]) for r in rows}
     assert fps[1] & fps[2], "shared substring must share a fingerprint"
     assert not fps[4], "sub-k text must fingerprint to empty"
-    assert fps[1] == set(sorted(fps[1])), "fingerprints are distinct-sorted"
+    assert all(r["fps"] == sorted(set(r["fps"])) for r in rows), \
+        "fingerprints are distinct-sorted"
     # determinism
-    again = {r["doc_id"]: set(r["fps"]) for r in df.select(
-        "doc_id", DD.winnowing_fingerprints(F.col("text"), 8, 4).alias("fps")).collect()}
+    again = {r["doc_id"]: set(r["fps"]) for r in
+             DD.winnowing_fingerprint_rows(df, "doc_id", "text", 8, 4).collect()}
     assert fps == again
 
 
@@ -314,7 +318,7 @@ def test_dup_clusters_handles_release(spark):
 
 
 def test_operators_leave_no_cached_plans(
-        spark, fixture_dfs, crawl_cfg, tmp_path):
+        spark, fixture_dfs, crawl_cfg, tmp_path, monkeypatch):
     """No operator leaves a CacheManager entry behind once its result is
     materialized: internal fences are local checkpoints, which the
     CacheManager never holds (a leaked entry taxes every later action's
@@ -327,6 +331,7 @@ def test_operators_leave_no_cached_plans(
     from hyperion_crawler_spark.plans.loop import run_crawl
 
     cm = spark._jsparkSession.sharedState().cacheManager()
+    monkeypatch.setattr(DD, "LONG_DOC_TOKENS", 0)   # every doc: exploded scrub
     docs = _docs(spark, 40)
     sims = DD.simhash_df(docs, "doc_id", "text")
     pairs = _pairs(spark, [(1, 2), (2, 3), (5, 6)])
@@ -347,7 +352,7 @@ def test_operators_leave_no_cached_plans(
         "dup_clusters(iters)": lambda: DD.dup_clusters(pairs, iters=2),
         "dup_clusters(converged)": lambda: DD.dup_clusters(pairs),
         "scrub_repeated_windows(exploded)": lambda: DD.scrub_repeated_windows(
-            docs, "doc_id", "text", long_doc_tokens=0),
+            docs, "doc_id", "text"),
         "pagerank": lambda: pagerank(links),
         "rescore_frontier_priority": lambda: rescore_frontier_priority(
             frontier, links),
@@ -381,20 +386,43 @@ def test_keep_cluster_representatives(spark):
     assert "Exchange hashpartitioning" not in plan.split("BroadcastHashJoin")[0]
 
 
-def test_rows_forms_match_column_forms(spark):
-    """The attribute-barrier (O(L)) forms must produce byte-identical
-    values to the single-Column reference forms on the same docs."""
-    d = _with_variants(_docs(spark, 20))
-    col_fp = {(r["doc_id"], tuple(r["f"])) for r in d.select(
-        "doc_id", DD.winnowing_fingerprints(F.col("text"), 8, 4).alias("f")).collect()}
-    row_fp = {(r["doc_id"], tuple(r["fps"])) for r in
-              DD.winnowing_fingerprint_rows(d, "doc_id", "text", 8, 4).collect()}
-    assert col_fp == row_fp
-    col_sig = {(r["doc_id"], tuple(r["s"])) for r in d.select(
-        "doc_id", DD.minhash_signature(F.col("text")).alias("s")).collect()}
-    row_sig = {(r["doc_id"], tuple(r["sig"])) for r in
+def test_rows_forms_match_duckdb_twins(spark):
+    """The Spark signature and fingerprint forms equal the DuckDB list
+    forms the oracle gate runs (``_sql_minhash_sigs`` and the ``m``
+    stage of ``_winnow_pairs_cte``): signatures exactly, including the
+    all-null signature of a document under 3 tokens; fingerprints as
+    sets, since DuckDB's ``list_distinct`` does not sort. The CTE reads
+    ``documents`` with doc_id < 200, so every id here is below 200."""
+    import duckdb
+
+    import __spark_entry__ as E
+
+    d = _docs(spark, 20)
+    d = d.unionByName(d.select(
+        (F.col("doc_id") + 100).alias("doc_id"),
+        F.expr("substring(text, instr(text, ' ') + 1)").alias("text")))
+    d = d.unionByName(spark.createDataFrame(
+        [(150, "tiny"), (151, "two words"), (152, "")],
+        "doc_id long, text string"))
+    con = duckdb.connect()
+    con.register("documents", d.toPandas())
+
+    sigs = E._sql_minhash_sigs("text")
+    duck_sig = {r[0]: tuple(r[1:]) for r in con.execute(
+        f"SELECT doc_id, {', '.join(sigs)} FROM documents").fetchall()}
+    row_sig = {r["doc_id"]: tuple(r["sig"]) for r in
                DD.minhash_signature_rows(d, "doc_id", "text").collect()}
-    assert col_sig == row_sig
+    assert len(row_sig) == 43
+    assert row_sig == duck_sig
+    assert row_sig[150] == (None,) * DD.N_MINHASH
+
+    duck_fp = {r[0]: set(r[1]) for r in con.execute(
+        f"WITH {E._winnow_pairs_cte} SELECT doc_id, fps FROM m").fetchall()}
+    row_fp = {r["doc_id"]: set(r["fps"]) for r in
+              DD.winnowing_fingerprint_rows(d, "doc_id", "text", 8, 4).collect()}
+    assert len(row_fp) == 43
+    assert row_fp == duck_fp
+    assert not row_fp[150] and not row_fp[152]
 
 
 def test_merge_topk_string_ids_break_ties_lexicographically():
@@ -718,7 +746,7 @@ def test_scrub_repeated_windows_catches_offgrid_repeat(spark):
     assert out[4]["n_scrubbed"] == 0         # repeats shorter than w survive
 
 
-def test_scrub_exploded_form_equals_array_form(spark):
+def test_scrub_exploded_form_equals_array_form(spark, monkeypatch):
     """The two physical forms of the rolling scrub must be exactly
     equal (round-5 verdict 'Next round' #3's acceptance bar): the
     array form (shuffle-free, O(n²)/doc codegen) and the exploded
@@ -743,21 +771,21 @@ def test_scrub_exploded_form_equals_array_form(spark):
         (7, "solo"),                                    # shorter than w
     ]
     df = spark.createDataFrame(rows, "doc_id int, text string")
-    arr = {tuple(r) for r in
-           DD.scrub_repeated_windows(df, "doc_id", "text", w=10,
-                                     long_doc_tokens=10**9).collect()}
-    exp = {tuple(r) for r in
-           DD.scrub_repeated_windows(df, "doc_id", "text", w=10,
-                                     long_doc_tokens=0).collect()}
+
+    def scrub(long_doc_tokens):
+        monkeypatch.setattr(DD, "LONG_DOC_TOKENS", long_doc_tokens)
+        return {tuple(r) for r in
+                DD.scrub_repeated_windows(df, "doc_id", "text", w=10).collect()}
+
+    arr = scrub(10**9)
+    exp = scrub(0)
     assert exp == arr
     # and the auto-cutover (mixed routing) agrees too
-    mix = {tuple(r) for r in
-           DD.scrub_repeated_windows(df, "doc_id", "text", w=10,
-                                     long_doc_tokens=20).collect()}
+    mix = scrub(20)
     assert mix == arr
 
 
-def test_scrub_exploded_many_scattered_repeats_linear(spark):
+def test_scrub_exploded_many_scattered_repeats_linear(spark, monkeypatch):
     """The review-r6 pathological shape for the long-doc path: a
     10-token boilerplate line repeated 2,000 times, interleaved with
     unique lines — thousands of DISJOINT covered intervals. The
@@ -771,9 +799,9 @@ def test_scrub_exploded_many_scattered_repeats_linear(spark):
         blocks.append(boiler)
     df = spark.createDataFrame([(1, " ".join(blocks))],
                                "doc_id int, text string")
+    monkeypatch.setattr(DD, "LONG_DOC_TOKENS", 0)
     t0 = time.monotonic()
-    out = DD.scrub_repeated_windows(df, "doc_id", "text", w=10,
-                                    long_doc_tokens=0).collect()[0]
+    out = DD.scrub_repeated_windows(df, "doc_id", "text", w=10).collect()[0]
     dt = time.monotonic() - t0
     assert out["n_tokens"] == 2000 * 15
     # first boilerplate occurrence survives; the 1,999 repeats scrub
@@ -865,7 +893,8 @@ def test_hamming_pairs_constant_hash_skew_guard(spark):
     df = spark.createDataFrame(rows, "id long, h long")
     # rep-level candidate generation is tiny — the guard's contract
     reps = df.select(F.col("h").alias("_h")).distinct()
-    rep_pairs = DD._hamming_block_pairs(reps, max_dist=3).collect()
+    rep_pairs = DD._hamming_block_pairs(reps, reps, max_dist=3, b=4) \
+        .filter(F.col("h1") < F.col("h2")).collect()
     assert len(rep_pairs) == 1                        # (h0, h0^bit7) only
     got = DD.hamming_pairs(df, "id", "h", max_dist=3)
     n_intra = got.filter(F.col("dist") == 0).count()

@@ -77,6 +77,45 @@ def test_no_row_udfs_in_source_tree():
     assert not bad, f"row-at-a-time UDFs found: {bad}"
 
 
+def test_spread_gates_on_partition_count_without_a_job(spark):
+    """``relational.spread`` shuffles an under-parallel scan once and
+    leaves a frame that is already as wide as the cluster alone, and it
+    decides from the plan: no Spark job starts while it runs."""
+    from hyperion_crawler_spark.operators.relational import spread
+
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    scan = spark.read.parquet(f"{SF}/documents.parquet")
+    wide = spark.range(1000, numPartitions=sc.defaultParallelism)
+    # one partition, but behind an exchange: its RDD would run the map stage
+    shuffled = spark.range(1000).repartition(1)
+    bus.waitUntilEmpty()
+    jobs = set(sc.statusTracker().getJobIdsForGroup(None))
+    spread_scan, spread_wide = spread(scan), spread(wide)
+    spread_shuffled = spread(shuffled)
+    bus.waitUntilEmpty()
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) == jobs, \
+        "the spread gate ran a Spark job"
+    assert scan.rdd.getNumPartitions() == 1
+    assert _plan(spread_scan).count("RoundRobinPartitioning") == 1
+    assert "Exchange" not in _plan(spread_wide)
+    assert spread_shuffled is shuffled
+
+
+def test_no_ungated_spread_in_source_tree():
+    """The input spread lives in one gated helper
+    (``relational.spread``): no other code repartitions to a count
+    sized from defaultParallelism."""
+    paths = (glob.glob("hyperion_crawler_spark/**/*.py", recursive=True)
+             + glob.glob("scripts/*.py") + ["__spark_entry__.py"])
+    bad = []
+    for path in paths:
+        src = open(path).read()
+        for m in re.finditer(r"repartition\(\s*[^()]*defaultParallelism", src):
+            bad.append(f"{path}:{src.count(chr(10), 0, m.start()) + 1}")
+    assert not bad, f"ungated spread (use relational.spread): {bad}"
+
+
 def test_embedding_topk_broadcasts_queries(spark):
     """q20's scoring must never shuffle the corpus by a pair key: the
     query set rides to the executors as a broadcast — a task broadcast
@@ -235,7 +274,7 @@ def _physical_nodes(p):
         yield from _physical_nodes(k)
 
 
-def test_generators_read_the_checkpoint_fence(spark):
+def test_generators_read_the_checkpoint_fence(spark, monkeypatch):
     """The O(L) fingerprint, signature and window-hash projections are
     cut by a local checkpoint before they are exploded: each Generate
     reads the checkpoint's RDD scan through row-local nodes only, so the
@@ -252,13 +291,14 @@ def test_generators_read_the_checkpoint_fence(spark):
         F.expr("substring(text, instr(text, ' ') + 1)").alias("text")))
     row_local = {"ProjectExec", "FilterExec", "WholeStageCodegenExec",
                  "InputAdapter"}
+    monkeypatch.setattr(DD, "LONG_DOC_TOKENS", 0)   # every doc: exploded scrub
     cases = {
         "winnowing_pairs": (DD.winnowing_pairs(docs, "doc_id", "text"), None),
         "minhash_lsh_pairs": (DD.minhash_lsh_pairs(docs, "doc_id", "text"), None),
         # the exploded scrub also expands duplicate starts to covered
         # positions — a Generate over a Window, not over the hashes
         "scrub_repeated_windows": (DD.scrub_repeated_windows(
-            docs, "doc_id", "text", long_doc_tokens=0), "posexplode"),
+            docs, "doc_id", "text"), "posexplode"),
     }
     for name, (df, generator) in cases.items():
         df.collect()
