@@ -176,10 +176,6 @@ class ETLPipeline:
         self.quality_threshold: float = self.DEFAULT_QUALITY_THRESHOLD
         self.quality_thresholds: dict[str, float] = {}  # per-source override
         self.latency_thresholds: dict[str, float] = {}  # seconds per run (yaml:42-43)
-        # frames extract_data persisted for its record_count, released
-        # by _load at the end of the phase chain — a long-lived session
-        # driving many per-phase tasks must not accumulate caches
-        self._pinned: dict[str, list[DataFrame]] = {}
 
     def register(self, source, default_mode: LoadMode | None = None) -> None:
         self.sources[source.name] = source
@@ -199,12 +195,11 @@ class ETLPipeline:
     def extract_data(self, source_name: str, params: dict | None = None) -> dict:
         src = self.sources[source_name]
         params = params or {}
-        # persisted: the envelope's record_count would otherwise run the
-        # extraction once for the count and again when the downstream
-        # phase consumes `data`; released by _load once the chain's sink
-        # commit materialized everything downstream of it
-        raw = src.extract(self.spark, params).persist()
-        self._pinned.setdefault(source_name, []).append(raw)
+        # fenced (README "Caching"): the envelope's record_count would
+        # otherwise run the extraction once for the count and again when
+        # the downstream phase consumes `data`; eager, because the count
+        # runs at once
+        raw = src.extract(self.spark, params).localCheckpoint()
         return {
             "task_id": f"{source_name}_extract_{self._task_suffix(params)}",
             "source": source_name, "status": "success",
@@ -243,13 +238,11 @@ class ETLPipeline:
                           mode: LoadMode | None = None) -> LoadResult:
         src = self.sources[source_name]
         params = params or {}
-        # persist the extract exactly like the phase API does
-        # (extract_data → _pinned): the load runs up to four actions
-        # over the E→T lineage (merge, latest-slice, quarantine count,
-        # quarantine append) and would otherwise re-run the extraction
-        # per action; _load's finally releases the pin
-        raw = src.extract(self.spark, params).persist()
-        self._pinned.setdefault(source_name, []).append(raw)
+        # fence the extract exactly like the phase API does: the load
+        # runs up to four actions over the E→T lineage (merge, latest-
+        # slice, quarantine count, quarantine append) and would
+        # otherwise re-run the extraction per action
+        raw = src.extract(self.spark, params).localCheckpoint()
         dim = src.asset_master(self.spark)
         valid, quarantine = src.transform(raw, dim)
         return self._load(source_name, valid, quarantine, mode, params)
@@ -257,19 +250,6 @@ class ETLPipeline:
     def _load(self, source_name: str, valid: DataFrame,
               quarantine: DataFrame | None, mode: LoadMode | None,
               params: dict) -> LoadResult:
-        """Exception-safe wrapper: the extract-phase caches recorded in
-        ``_pinned`` are released even when the load fails (e.g. an
-        INSERT conflict raising mid-commit) — a long-lived session that
-        catches per-batch errors must not accumulate pinned frames."""
-        try:
-            return self._load_inner(source_name, valid, quarantine, mode, params)
-        finally:
-            for df in self._pinned.pop(source_name, []):
-                df.unpersist()
-
-    def _load_inner(self, source_name: str, valid: DataFrame,
-                    quarantine: DataFrame | None, mode: LoadMode | None,
-                    params: dict) -> LoadResult:
         import time
 
         t0 = time.perf_counter()
@@ -299,12 +279,12 @@ class ETLPipeline:
         if mode == LoadMode.APPEND:
             table.append(observed)
         elif mode == LoadMode.UPSERT:
-            table.merge(self.spark, observed, src.conflict_keys)  # merge persists internally
+            table.merge(self.spark, observed, src.conflict_keys)  # merge fences its source
         elif mode == LoadMode.INSERT:
             # reference INSERT: a key conflict is an integrity ERROR
             # (krx/loader.py:146-158 — the DB raises, the batch rolls
             # back). insert_strict carries those semantics through
-            # concurrent writers: probe at a pinned head, verify the
+            # concurrent writers: probe at a fixed head, verify the
             # commit landed directly on it, and roll the append back on
             # an interleaved conflict (r5 review — the old probe-then-
             # append let two racing INSERTs both pass their probes).
@@ -321,12 +301,11 @@ class ETLPipeline:
             # Observation hits a toPyRow metrics assertion whenever the
             # observed plan contains (or is later fed into) a join, and
             # the match probe is inherently a join. Instead the probe is
-            # ONE left join with a match flag, persisted once: a single
-            # aggregate over the cache yields total AND matched together
-            # (one driver action, where the previous form ran two
-            # count() jobs over two separate persists), and the merge
+            # ONE left join with a match flag, fenced once (eager: the
+            # aggregate reads it at once): a single aggregate over the
+            # fence yields total AND matched together, and the merge
             # source + the latest-slice batch are cheap filters over the
-            # same cache. loaded = matched (the reference's `updated`
+            # same fence. loaded = matched (the reference's `updated`
             # counter), skipped = the unmatched remainder so
             # success_rate sees the drops.
             existing = table.read(self.spark)
@@ -336,10 +315,7 @@ class ETLPipeline:
                 ks = src.conflict_keys
                 flagged = deduped.join(
                     existing.select(*ks).distinct().withColumn("_m", F.lit(1)),
-                    ks, "left").persist()
-                # registered in _pinned so the _load wrapper's finally
-                # releases it even when a later step raises
-                self._pinned.setdefault(source_name, []).append(flagged)
+                    ks, "left").localCheckpoint()
                 m = flagged.agg(F.count(F.lit(1)).alias("total"),
                                 F.sum("_m").alias("matched")).first()
                 n_update = int(m["matched"] or 0)

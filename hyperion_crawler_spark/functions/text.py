@@ -10,6 +10,8 @@ The reference's nearest analog is its per-row normalization pass
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -53,7 +55,7 @@ def stopword_hits(text: Column, lang: str) -> Column:
     to ``size(filter(split(text,' '), t -> t in stopwords))`` (the
     words are regex-literal), but whole-stage codegen instead of an
     interpreted lambda per token."""
-    alt = "|".join(STOPWORDS[lang])
+    alt = "|".join(map(re.escape, STOPWORDS[lang]))
     return F.regexp_count(F.concat(F.lit(" "), text, F.lit(" ")),
                           F.lit(f"(?<= )(?:{alt})(?= )"))
 

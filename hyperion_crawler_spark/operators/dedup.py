@@ -16,17 +16,11 @@ functions) — no Python UDFs; at 100 TB these run entirely inside
 whole-stage codegen and the only shuffles are the documented
 groupBy/join keys.
 
-Internal fences: a frame that the returned plan references more than
-once, or that a generator must not re-inline, is cut with
-``localCheckpoint`` — never ``persist()``. A local checkpoint registers
-nothing in the CacheManager, so no caller has a cache to release; its
-blocks are freed when the last plan referencing it is garbage-
-collected. The checkpoint is lazy (``eager=False``) unless the operator
-itself runs an action on the frame straight away (``graph.pagerank``'s
-node count, the rescore's max), where the frame has to exist at once.
-Lazy does not defer everything under AQE: over a subplan holding an
-exchange it runs that exchange's map stage when called, so such an
-operator does part of its work while the plan is built.
+Internal fences follow the engine's one caching rule (README
+"Caching"): a frame that the returned plan references more than once,
+or that a generator must not re-inline, is cut with ``localCheckpoint``,
+lazily unless the operator itself runs an action on the frame straight
+away (``graph.pagerank``'s node count, the rescore's max).
 """
 
 from __future__ import annotations

@@ -100,27 +100,24 @@ def train_quality_linear(df: DataFrame, text_col: str, label: Column,
     bit, on any partitioning (fixed-point gradient sums)."""
     feats = quality_features(F.col(text_col))
     # the feature projection (regex-heavy text work) is identical every
-    # iteration — materialize it ONCE and run the per-iteration
-    # aggregations over 7 cached doubles per row instead of re-scanning
-    # the text (r7; guide §5 caching: reused AND expensive to recompute)
+    # iteration — fence it ONCE (eager: the first iteration reads it at
+    # once; README "Caching") and run the per-iteration aggregations
+    # over 7 doubles per row instead of re-scanning the text
     base = df.select(*[f.alias(f"_f{j}") for j, f in enumerate(feats)],
-                     label.cast("double").alias("_y")).persist()
+                     label.cast("double").alias("_y")).localCheckpoint()
     fcols = [F.col(f"_f{j}") for j in range(len(feats))]
     w = [0.0] * len(feats)
-    try:
-        for _ in range(iters):
-            err = F.col("_y") - _dot(w, fcols)
-            agg = base.agg(
-                F.count(F.lit(1)).alias("n"),
-                *[F.sum(F.floor(err * fj * F.lit(GRAD_SCALE))).alias(f"g{j}")
-                  for j, fj in enumerate(fcols)]).collect()[0]
-            n = agg["n"]
-            if not n:
-                return w
-            w = [w[j] + lr * ((agg[f"g{j}"] / n) / GRAD_SCALE)
-                 for j in range(len(feats))]
-    finally:
-        base.unpersist()
+    for _ in range(iters):
+        err = F.col("_y") - _dot(w, fcols)
+        agg = base.agg(
+            F.count(F.lit(1)).alias("n"),
+            *[F.sum(F.floor(err * fj * F.lit(GRAD_SCALE))).alias(f"g{j}")
+              for j, fj in enumerate(fcols)]).collect()[0]
+        n = agg["n"]
+        if not n:
+            return w
+        w = [w[j] + lr * ((agg[f"g{j}"] / n) / GRAD_SCALE)
+             for j in range(len(feats))]
     return w
 
 

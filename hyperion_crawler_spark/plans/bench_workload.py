@@ -46,15 +46,14 @@ def run_full_round(spark: SparkSession, n_urls: int, n_hosts: int = 2000,
 
     from ..synth import gen_links_distributed
 
-    corpus = gen_corpus_distributed(spark, n_urls).persist()
-    corpus.count()
+    # inputs fenced eagerly (README "Caching") so datagen cost stays
+    # out of the timed round
+    corpus = gen_corpus_distributed(spark, n_urls).localCheckpoint()
     # seed HALF the URL space; the link graph points into all of it so
     # the round exercises discovery, batch dedup, and the Bloom probe
     seeds = gen_frontier_distributed(spark, n_urls // 2, n_hosts).select(
-        "url", "image_id", "priority").persist()
-    seeds.count()
-    links = gen_links_distributed(spark, n_urls, n_hosts).persist()
-    links.count()
+        "url", "image_id", "priority").localCheckpoint()
+    links = gen_links_distributed(spark, n_urls, n_hosts).localCheckpoint()
     robots = spark.createDataFrame(
         [], "host string, disallow_prefixes array<string>, crawl_delay_s double, max_per_round int")
 
@@ -64,8 +63,6 @@ def run_full_round(spark: SparkSession, n_urls: int, n_hosts: int = 2000,
     t0 = time.perf_counter()
     metrics = run_crawl(spark, store, cfg, corpus, links, robots, seeds, n_rounds=1)
     dt = time.perf_counter() - t0
-    corpus.unpersist()
-    seeds.unpersist()
     m = metrics[-1]
     return {
         "n_input": n_urls,
@@ -82,7 +79,7 @@ def run_scheduling_round(spark: SparkSession, n_urls: int, n_hosts: int = 2000,
     cfg = cfg or CrawlConfig()
     frontier = gen_frontier_distributed(spark, n_urls, n_hosts)
     # materialize input first so datagen cost stays out of the timing
-    frontier = frontier.persist()
+    frontier = frontier.localCheckpoint()
     n_input = frontier.count()
 
     t0 = time.perf_counter()
@@ -92,7 +89,6 @@ def run_scheduling_round(spark: SparkSession, n_urls: int, n_hosts: int = 2000,
     scheduled = topk_per_host(cand.withColumn("budget", F.lit(budget).cast("long")), cfg)
     n_scheduled = scheduled.count()
     dt = time.perf_counter() - t0
-    frontier.unpersist()
     return {
         "n_input": n_input,
         "n_scheduled": n_scheduled,

@@ -241,7 +241,7 @@ def read_corpus_for_schedule(spark, table, scheduled: DataFrame,
     write_bucketed_corpus); passing ``n_buckets`` explicitly asserts it
     matches — a mismatch is a hard error, never silent mis-pruning.
     The bucket set is ≤ n_buckets small ints (one tiny aggregate over
-    the already-persisted schedule); file skipping happens at the
+    the schedule, which the round fences); file skipping happens at the
     manifest level, so a round that touches 3 of 1024 buckets reads 3
     buckets' payload files and nothing else — the 'never rescan cold
     payload files' clause of the 100 TB design."""

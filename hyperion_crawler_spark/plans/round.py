@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..config import CrawlConfig
 from ..operators.politeness import ROUND_SECONDS, schedule_round
-from ..state.seen import probe_and_update
+from ..state.seen import count_new, probe_and_update
 from ..functions.urls import canonicalize_df, host_expr
 from .fetch import fetch_and_validate
 
@@ -128,7 +128,7 @@ def init_frontier(spark: SparkSession, cat, cfg: CrawlConfig, seeds: DataFrame) 
     if current is None:
         current = spark.createDataFrame(
             [], "shard int, filter_bytes binary, n_items long")
-    unseen, filters, probe_cache = probe_and_update(cand, current, cfg)
+    unseen, filters = probe_and_update(cand, current, cfg)
     rows = (
         unseen.withColumn("status", F.lit("queued"))
         .withColumn("retry_count", F.lit(0))
@@ -148,9 +148,7 @@ def init_frontier(spark: SparkSession, cat, cfg: CrawlConfig, seeds: DataFrame) 
             unseen.select("urlhash", "shard"),
             base_version=base.get("seen_exact", 0))
     cat.commit_round(0, versions, fold=True)
-    n = rows.count()
-    probe_cache.unpersist()
-    return {"round": 0, "seeded": n}
+    return {"round": 0, "seeded": count_new(filters)}
 
 
 def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
@@ -195,14 +193,17 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
     )
 
     scheduled, excluded = schedule_round(eligible, robots, cfg)
-    scheduled = scheduled.persist()
+    # fences (README "Caching"): each frame below with two or more
+    # readers is cut once, lazily, here; projections of a fenced frame
+    # get none, and nothing is released by hand
+    scheduled = scheduled.localCheckpoint(eager=False)
 
     if corpus_table is not None:
         from .fetch import read_corpus_for_schedule
 
         corpus = read_corpus_for_schedule(spark, corpus_table, scheduled,
                                           corpus_buckets or None)
-    results = fetch_and_validate(scheduled, corpus).persist()
+    results = fetch_and_validate(scheduled, corpus).localCheckpoint(eager=False)
     fetched = results.filter(F.col("status") == "fetched")
 
     # --- link expansion → new frontier candidates -------------------
@@ -217,13 +218,12 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
     cand = canonical_url_rows(
         discoveries_raw, "_raw_url", "_image_id", "_priority", cfg,
         [F.col("_src"), F.col("_image_id")],
-    ).persist()
+    ).localCheckpoint(eager=False)
 
     current_filters = seen_t.read(spark, version=base.get("seen_filters"))
     if current_filters is None:
         current_filters = spark.createDataFrame([], "shard int, filter_bytes binary, n_items long")
-    unseen, new_filters, probe_cache = probe_and_update(cand, current_filters, cfg)
-    unseen = unseen.persist()
+    unseen, new_filters = probe_and_update(cand, current_filters, cfg)
 
     # --- frontier state transitions ----------------------------------
     # The frontier holds PENDING work only (the 10^10-scale invariant:
@@ -245,7 +245,7 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
         F.when(F.col("status") == "failed", F.lit(round_ts) + backoff)
          .otherwise(F.lit(round_ts)).cast("long").alias("next_fetch_ts"),
         "discovered_round",
-    ).persist()
+    )
     excl_updates = excluded.select(
         "urlhash", "url", "host", "image_id", "shard", "priority",
         F.lit("excluded").alias("status"), "retry_count",
@@ -259,19 +259,19 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
     retry_rows = res_updates.filter(F.col("status") == "queued")
     terminal_rows = (res_updates.filter(F.col("status") != "queued")
                      .unionByName(excl_updates.select(*FRONTIER_COLS)))
-    # merge() persists its source internally; archive_rows stays pinned
-    # here because it also feeds the archive append below
+    # merge() fences its own source and delete set; archive_rows is
+    # fenced here because the archive append reads it too
     frontier_merge = (
         retry_rows.select(*FRONTIER_COLS)
         .unionByName(new_rows.select(*FRONTIER_COLS))
     )
     archive_rows = terminal_rows.select(*FRONTIER_COLS) \
-        .withColumn("archived_round", F.lit(round_idx)).persist()
+        .withColumn("archived_round", F.lit(round_idx)).localCheckpoint(eager=False)
 
-    # --- metrics: ONE scan of the results cache produces BOTH the
+    # --- metrics: ONE scan of the results fence produces BOTH the
     # per-partition lineage rows (collected — bounded by partition
     # count) and, summed driver-side, the round totals. This is the
-    # action that materializes the fetch/validate cache, so it runs
+    # action that materializes the fetch/validate fence, so it runs
     # alone; the discovery-side counts live in the commit phase below,
     # overlapped with the results commit.
     t = _mark("plan_build", t)
@@ -297,7 +297,6 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
     # keyed by phash (O(new) delta appends); pairs are evidence rows
     # in `image_neardups`, committed inside the round checkpoint so a
     # redo reproduces them exactly.
-    nd_rows = None
     n_neardups = 0
     if cfg.image_neardup_dist > 0:
         from ..operators.dedup import hamming_join, hamming_pairs
@@ -326,12 +325,12 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
         nd_rows = (intra.withColumn("round", F.lit(round_idx))
                    .select("image_id", "dup_of",
                            F.col("dist").cast("int").alias("dist"), "round")
-                   .persist())
+                   .localCheckpoint())
         n_neardups = nd_rows.count()
 
     # --- commits (snapshot per table; round commit = checkpoint) ----
-    # Independent tables commit IN PARALLEL: every input cache is
-    # materialized above, so the five jobs only scan caches, and Spark
+    # Independent tables commit IN PARALLEL: every input fence is
+    # materialized above, so the five jobs only scan fences, and Spark
     # schedules them concurrently across the executor cores a single
     # sequential job leaves idle (measured ~1.6x on the full round at
     # sf0.1). Each table still gets exactly one deterministic commit —
@@ -402,21 +401,22 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
         jobs["phash_index"] = _commit_phash_index
         jobs["image_neardups"] = _commit_neardups
     with ThreadPoolExecutor(max_workers=1 + len(jobs)) as pool:
-        # the results commit only scans the results cache (materialized
+        # the results commit only scans the results fence (materialized
         # by lin_rows above), so it runs IN PARALLEL with the discovery-
-        # side aggregate that materializes every cache the remaining
-        # commits read (cand, probe/unseen, res_updates via
-        # archive_rows) — the commit hides under the probe's shadow.
-        # (r7 note: submitting the frontier merge — the commit phase's
-        # long pole — ahead of this aggregate was measured and NOT
-        # kept: both then compute the same un-materialized cached
-        # partitions concurrently and the duplicated work beat the
-        # overlap, 6.7 → 7.7 s commit phase.)
+        # side aggregate. That aggregate is the barrier that materializes
+        # every fence the remaining commits share (cand, the probe
+        # output, archive_rows): n_arch is never read, it is there so
+        # archive_rows exists before the frontier merge and the archive
+        # append both read it. (r7 note: submitting the frontier merge —
+        # the commit phase's long pole — ahead of this barrier was
+        # measured and NOT kept: both then compute the same
+        # un-materialized shared partitions concurrently and the
+        # duplicated work beat the overlap, 6.7 → 7.7 s commit phase.)
         fut_results = pool.submit(_commit_results)
         mrow = (cand.agg(F.count("*").alias("n_cand"))
-                .crossJoin(unseen.agg(F.count("*").alias("n_unseen")))
+                .crossJoin(new_filters.agg(F.sum("n_items").alias("n_unseen")))
                 .crossJoin(archive_rows.agg(F.count("*").alias("n_arch"))).first())
-        n_cand, n_unseen = mrow["n_cand"], mrow["n_unseen"]
+        n_cand, n_unseen = mrow["n_cand"], mrow["n_unseen"] or 0
         futs = {name: pool.submit(fn) for name, fn in jobs.items()}
         versions["results"] = fut_results.result()
         for name, fut in futs.items():
@@ -513,12 +513,6 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
     versions["lineage"] = lineage_t.append(lineage_row, base_version=base.get("lineage", 0))
     t = _mark("write_lineage", t)
     cat.commit_round(round_idx, versions)
-
-    for df in (scheduled, results, cand, unseen, probe_cache,
-               res_updates, archive_rows):
-        df.unpersist()
-    if nd_rows is not None:
-        nd_rows.unpersist()
     out = {
         "round": round_idx, "scheduled": n_sched, "fetched": n_fetched,
         "failed": n_failed, "discovered": n_cand, "new_urls": n_unseen,

@@ -43,7 +43,6 @@ import json
 import os
 import time
 import uuid
-from dataclasses import dataclass
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -108,13 +107,6 @@ def _exclusive_write_json(path: str, obj) -> None:
         raise CommitConflict(path) from e
     finally:
         os.unlink(tmp)
-
-
-@dataclass
-class FileEntry:
-    path: str                   # relative to table root
-    part_min: int | None = None  # partition-column stats (None = unknown)
-    part_max: int | None = None
 
 
 class SnapshotTable:
@@ -556,38 +548,34 @@ class SnapshotTable:
         ``probe``: plan used for the conflict probes (defaults to
         ``source``). Callers whose source carries an ``Observation``
         pass the unobserved twin — Spark 4 Observations break when the
-        observed plan feeds a join."""
-        probe = probe if probe is not None else source
-        pinned = None
-        lvl = probe.storageLevel
-        if not (lvl.useMemory or lvl.useDisk):
-            probe = probe.persist()
-            pinned = probe
+        observed plan feeds a join. The probe is read by up to two
+        conflict checks, the first straight away, so it is fenced here
+        with an eager local checkpoint (README "Caching")."""
+        if probe is None:
+            source = probe = source.localCheckpoint()
+        else:
+            probe = probe.localCheckpoint()
 
         def _conflicts(state: DataFrame | None) -> bool:
             return state is not None and bool(
                 probe.join(state.select(*keys).distinct(), keys,
                            "left_semi").limit(1).count())
 
-        try:
-            head = self.current_version() or 0
-            if _conflicts(self.read(spark, version=head) if head else None):
-                raise ValueError(
-                    f"INSERT conflict on {keys} into {self.name!r}")
-            ver = self.append(source, meta=meta, base_version=head)
-            if ver == head + 1:
-                return ver
-            if _conflicts(self.read(spark, version=ver - 1)):
-                ours = ({f["path"] for f in self._manifest(ver)["files"]}
-                        - {f["path"] for f in self._manifest(ver - 1)["files"]})
-                self._replace_files(ours, [], {"op": "insert_rollback"})
-                raise ValueError(
-                    f"INSERT conflict on {keys} into {self.name!r} "
-                    f"(concurrent writer; append rolled back)")
+        head = self.current_version() or 0
+        if _conflicts(self.read(spark, version=head) if head else None):
+            raise ValueError(
+                f"INSERT conflict on {keys} into {self.name!r}")
+        ver = self.append(source, meta=meta, base_version=head)
+        if ver == head + 1:
             return ver
-        finally:
-            if pinned is not None:
-                pinned.unpersist()
+        if _conflicts(self.read(spark, version=ver - 1)):
+            ours = ({f["path"] for f in self._manifest(ver)["files"]}
+                    - {f["path"] for f in self._manifest(ver - 1)["files"]})
+            self._replace_files(ours, [], {"op": "insert_rollback"})
+            raise ValueError(
+                f"INSERT conflict on {keys} into {self.name!r} "
+                f"(concurrent writer; append rolled back)")
+        return ver
 
     def _replace_files(self, drop: set[str], entries: list[dict],
                        meta: dict) -> int:
@@ -658,12 +646,11 @@ class SnapshotTable:
         only a mid-flight foreign race refuses."""
         base = (base_version if base_version is not None
                 else self.current_version() or 0)
-        # pre-flight the foreign check BEFORE paying the full-table
-        # write: a refused overwrite should not leave a whole
-        # replacement table orphaned on disk (review r6)
-        if not allow_bury_foreign:
-            head0 = self.current_version() or 0
-            foreign = [v for v in range(base + 1, head0 + 1)
+
+        def _refuse_foreign(head: int) -> None:
+            if allow_bury_foreign:
+                return
+            foreign = [v for v in range(base + 1, head + 1)
                        if self._writer_of(v) != self.writer]
             if foreign:
                 raise ForeignOverwriteError(
@@ -671,18 +658,15 @@ class SnapshotTable:
                     f"bury foreign-writer commit(s) {foreign}; re-derive "
                     f"from the new head, use merge(), or pass "
                     f"allow_bury_foreign=True")
+
+        # pre-flight the foreign check BEFORE paying the full-table
+        # write: a refused overwrite should not leave a whole
+        # replacement table orphaned on disk (review r6)
+        _refuse_foreign(self.current_version() or 0)
         entries = self._write_data(df)
         while True:
             head = self.current_version() or 0
-            if not allow_bury_foreign:
-                foreign = [v for v in range(base + 1, head + 1)
-                           if self._writer_of(v) != self.writer]
-                if foreign:
-                    raise ForeignOverwriteError(
-                        f"overwrite of '{self.name}' from base v{base} would "
-                        f"bury foreign-writer commit(s) {foreign}; re-derive "
-                        f"from the new head, use merge(), or pass "
-                        f"allow_bury_foreign=True")
+            _refuse_foreign(head)
             try:
                 return self._commit(entries, meta, ver=head + 1)
             except CommitConflict:
@@ -744,41 +728,31 @@ class SnapshotTable:
         commits the carried file list unchanged (an idle round must not
         rewrite a 10^10-row table).
 
-        The source (and delete set) are evaluated up to three times
-        (partition-value collect, survivor anti-join, union write) —
-        merge persists them internally; callers need not.
+        The source (and delete set) are read up to three times (row
+        count or partition-value collect, survivor anti-join, union
+        write), the first straight away, so merge fences each with an
+        eager local checkpoint (README "Caching"); callers need not. An
+        eager fence also fires an ``Observation`` on the source, where a
+        lazy one would lose it.
         """
-        pinned: list[DataFrame] = []
-
-        def _pin(df: DataFrame) -> DataFrame:
-            lvl = df.storageLevel
-            if not (lvl.useMemory or lvl.useDisk):  # respect caller's cache
-                df.persist()
-                pinned.append(df)
-            return df
-
-        source = _pin(source)
+        source = source.localCheckpoint()
         if delete_keys is not None:
-            delete_keys = _pin(delete_keys)
-        try:
-            # optimistic-commit loop: compute against the (rebased) base,
-            # commit at head+1 via exclusive create; a lost race re-reads
-            # the new head, rebases the file list (carrying a concurrent
-            # writer's commits, orphaning a crashed same-writer attempt)
-            # and recomputes — the Iceberg retry protocol. The pinned
-            # source makes retries cheap (no plan re-evaluation).
-            while True:
-                head = self.current_version() or 0
-                base = base_version if base_version is not None else head
-                files = self._rebased_files(base, head)
-                try:
-                    return self._merge_impl(
-                        spark, source, keys, delete_keys, meta, files, head + 1)
-                except CommitConflict:
-                    continue
-        finally:
-            for df in pinned:
-                df.unpersist()
+            delete_keys = delete_keys.localCheckpoint()
+        # optimistic-commit loop: compute against the (rebased) base,
+        # commit at head+1 via exclusive create; a lost race re-reads
+        # the new head, rebases the file list (carrying a concurrent
+        # writer's commits, orphaning a crashed same-writer attempt)
+        # and recomputes — the Iceberg retry protocol. The fenced
+        # source makes retries cheap (no plan re-evaluation).
+        while True:
+            head = self.current_version() or 0
+            base = base_version if base_version is not None else head
+            files = self._rebased_files(base, head)
+            try:
+                return self._merge_impl(
+                    spark, source, keys, delete_keys, meta, files, head + 1)
+            except CommitConflict:
+                continue
 
     def _merge_impl(self, spark: SparkSession, source: DataFrame, keys: list[str],
                     delete_keys: DataFrame | None, meta: dict | None,
@@ -863,7 +837,7 @@ class SnapshotTable:
         it reconciles the unwritten batch directly instead of writing
         files only to orphan them."""
         # ONE job answers both the idle probe and the churn count: the
-        # union scans the two pinned caches and its count is exactly
+        # union scans the two fenced inputs and its count is exactly
         # count(source)+count(delete_keys)
         probe = source.select(F.lit(1).alias("_p"))
         if delete_keys is not None:

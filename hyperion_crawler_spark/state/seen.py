@@ -108,26 +108,33 @@ def _probe_kernel(cfg: CrawlConfig):
 
 
 def probe_and_update(candidates: DataFrame, filters: DataFrame, cfg: CrawlConfig
-                     ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Returns (unseen_candidates, updated_filters, cached_handle).
+                     ) -> tuple[DataFrame, DataFrame]:
+    """Returns (unseen_candidates, new_filter_deltas).
 
     ``candidates`` must carry (shard, urlhash, url, host, image_id,
     priority) and be pre-deduped within the batch (first-wins — the
-    kernel dedups *across* rounds only). The result DataFrames both
-    derive from one persisted cogroup pass — splitting by ``kind`` does
-    not recompute the kernel.
+    kernel dedups *across* rounds only). Both results are projections
+    of one cogroup pass, fenced here with a lazy local checkpoint, so
+    splitting by ``kind`` does not recompute the kernel and there is
+    nothing for the caller to release. A filter row's ``n_items`` is
+    the number of fresh URLs in its shard, so their sum is the unseen
+    count without a scan of the unseen rows.
     """
     cand = candidates.select("shard", "urlhash", "url", "host", "image_id", "priority")
     out = (
         cand.groupBy("shard")
         .cogroup(filters.select("shard", "filter_bytes", "n_items").groupBy("shard"))
         .applyInPandas(_probe_kernel(cfg), PROBE_OUT_SCHEMA)
-    ).persist()
+    ).localCheckpoint(eager=False)
     unseen = out.filter(F.col("kind") == "url").select(
         "shard", "urlhash", "url", "host", "image_id", "priority")
     new_filters = out.filter(F.col("kind") == "filter").select("shard", "filter_bytes", "n_items")
-    # caller must unpersist the returned handle after its writes commit
-    return unseen, new_filters, out
+    return unseen, new_filters
+
+
+def count_new(new_filters: DataFrame) -> int:
+    """Unseen-URL count of one probe, read from its filter rows."""
+    return int(new_filters.agg(F.sum("n_items")).first()[0] or 0)
 
 
 def _fold_kernel(pdf: pd.DataFrame) -> pd.DataFrame:

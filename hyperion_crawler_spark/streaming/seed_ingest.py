@@ -49,7 +49,7 @@ def _make_batch(spark: SparkSession, cat, cfg: CrawlConfig):
     exact function, so their exactly-once/replay semantics are the
     same by construction."""
     from ..plans.round import FRONTIER_COLS, _frontier_table, canonical_url_rows
-    from ..state.seen import probe_and_update
+    from ..state.seen import count_new, probe_and_update
 
     frontier_t = _frontier_table(cat)
     seen_t = cat.table("seen_filters", "shard")
@@ -65,46 +65,33 @@ def _make_batch(spark: SparkSession, cat, cfg: CrawlConfig):
         if current is None:
             current = spark.createDataFrame(
                 [], "shard int, filter_bytes binary, n_items long")
-        unseen, filters, cache = probe_and_update(cand, current, cfg)
-        # The new-URL counter shares the merge's materialization via an
-        # explicit persist: merge() respects a caller-persisted source
-        # (storageLevel probe), so the later count() is a cache scan,
-        # not a re-run of the probe/dedup plan. (An observe() on the
-        # merge source would make the counter ride the merge action
-        # itself, but Spark 4's Observation hits a toPyRow metrics
-        # assertion whenever the observed plan contains a join — the
-        # probe pipeline does — so the cache-shared count is the
-        # cheapest working form.)
+        unseen, filters = probe_and_update(cand, current, cfg)
         rows = (unseen.withColumn("status", F.lit("queued"))
                 .withColumn("retry_count", F.lit(0))
                 .withColumn("next_fetch_ts", F.lit(0).cast("long"))
                 .withColumn("discovered_round", F.lit(round_idx))
-                .select(*FRONTIER_COLS)).persist()
-        try:
-            # only the tables THIS batch touches: commit_round(fold=True)
-            # merges them into the round entry under the round lock, so a
-            # concurrently-checkpointing crawl's versions of OTHER tables
-            # are never clobbered (carrying a stale full copy of the
-            # entry was the old lost-update shape)
-            versions = {}
-            versions["frontier"] = frontier_t.merge(
-                spark, rows, ["urlhash"], base_version=base.get("frontier"))
-            versions["seen_filters"] = seen_t.append(
-                filters, base_version=base.get("seen_filters", 0))
-            if cfg.exact_seen_shadow:
-                versions["seen_exact"] = seen_exact_t.append(
-                    unseen.select("urlhash", "shard"),
-                    base_version=base.get("seen_exact", 0))
-            totals["new_urls"] += rows.count()  # served from the cache
-            totals["batches"] += 1
-            # durability point: fold into the round log LAST — Spark
-            # marks the micro-batch done only after this returns
-            cat.commit_round(round_idx, versions, fold=True)
-        finally:
-            # exception-safe: a failing/retried batch in the long-running
-            # daemon must not accumulate pinned caches (ADVICE r4)
-            rows.unpersist()
-            cache.unpersist()
+                .select(*FRONTIER_COLS))
+        # only the tables THIS batch touches: commit_round(fold=True)
+        # merges them into the round entry under the round lock, so a
+        # concurrently-checkpointing crawl's versions of OTHER tables
+        # are never clobbered (carrying a stale full copy of the
+        # entry was the old lost-update shape)
+        versions = {}
+        versions["frontier"] = frontier_t.merge(
+            spark, rows, ["urlhash"], base_version=base.get("frontier"))
+        versions["seen_filters"] = seen_t.append(
+            filters, base_version=base.get("seen_filters", 0))
+        if cfg.exact_seen_shadow:
+            versions["seen_exact"] = seen_exact_t.append(
+                unseen.select("urlhash", "shard"),
+                base_version=base.get("seen_exact", 0))
+        # the probe's filter rows carry the fresh-URL count; the probe
+        # fences its own output, so this is a scan of that fence
+        totals["new_urls"] += count_new(filters)
+        totals["batches"] += 1
+        # durability point: fold into the round log LAST — Spark
+        # marks the micro-batch done only after this returns
+        cat.commit_round(round_idx, versions, fold=True)
 
     return totals, _batch
 

@@ -41,7 +41,9 @@ def curate(spark: SparkSession, docs: DataFrame, out_dir: str,
     """Run the curation chain; returns the per-stage stats dict
     (counts + per-stage wall seconds under ``"timings"`` — each stage
     materializes at its count, so the delta around it is that stage's
-    cost; bench.py tracks these round-over-round).
+    cost; bench.py tracks these round-over-round). A stage output that
+    later stages re-read is fenced with an eager local checkpoint
+    (README "Caching"), so the chain leaves nothing cached behind.
 
     ``bpe_merges`` > 0 switches token accounting from whitespace
     counts to REAL subword counts: a BPE tokenizer is trained on the
@@ -95,7 +97,7 @@ def curate(spark: SparkSession, docs: DataFrame, out_dir: str,
     pairs = DD.minhash_lsh_pairs(cur, "doc_id", "text")
     labels = DD.dup_clusters(pairs)
     cur = DD.keep_cluster_representatives(cur, "doc_id", labels)
-    cur = cur.persist()
+    cur = cur.localCheckpoint()
     stats["near_dedup"] = cur.count()
     _lap("near_dedup")
 
@@ -121,14 +123,14 @@ def curate(spark: SparkSession, docs: DataFrame, out_dir: str,
                 n_centroids=16, n_probe=4, m_blocks=mb)
             slabels = DD.dup_clusters(spairs)
             cur = DD.keep_cluster_representatives(cur, "doc_id", slabels)
-            cur = cur.persist()
+            cur = cur.localCheckpoint()
             stats["semantic_dedup"] = cur.count()
             _lap("semantic_dedup")
 
     # 3. benchmark decontamination (8-gram overlap rule)
     if benchmark is not None:
         cur = DD.decontaminate(cur, benchmark, "doc_id", "text", n=8)
-        cur = cur.persist()
+        cur = cur.localCheckpoint()
         stats["decontaminate"] = cur.count()
         _lap("decontaminate")
 
@@ -159,7 +161,7 @@ def curate(spark: SparkSession, docs: DataFrame, out_dir: str,
         _lap("bpe_train")
     else:
         n_tok = token_count(F.col("text"))
-    cur = cur.withColumn("n_tok", n_tok).persist()
+    cur = cur.withColumn("n_tok", n_tok).localCheckpoint()
     stats["mixed"] = cur.count()
     _lap("mix_tokenize")
 
@@ -175,7 +177,7 @@ def curate(spark: SparkSession, docs: DataFrame, out_dir: str,
     stats["pack_buckets"] = n_buckets
     packs = pack_sequences(cur, "doc_id", "n_tok", window,
                            n_buckets=n_buckets)
-    packs = packs.persist()
+    packs = packs.localCheckpoint()
     stats["packs"] = packs.count()
     stats["pack_fill_frac"] = round(
         packs.agg(F.sum("fill")).first()[0] / (window * stats["packs"]), 4)
@@ -183,8 +185,6 @@ def curate(spark: SparkSession, docs: DataFrame, out_dir: str,
 
     cur.write.mode("overwrite").parquet(os.path.join(out_dir, "documents.parquet"))
     packs.write.mode("overwrite").parquet(os.path.join(out_dir, "packs.parquet"))
-    cur.unpersist()
-    packs.unpersist()
     _lap("write")
     stats["timings"] = timings
     return stats

@@ -84,7 +84,7 @@ def main() -> None:
         if state is None:
             state = spark.createDataFrame(
                 [], "shard int, filter_bytes binary, n_items long")
-        _, filters, cache = probe_and_update(cand, state, cfg)
+        _, filters = probe_and_update(cand, state, cfg)
 
         b0 = _live_paths(delta_t)
         t0 = time.perf_counter()
@@ -105,7 +105,6 @@ def main() -> None:
         replace_t.merge(spark, full, ["shard"])
         dt_repl = time.perf_counter() - t1
         repl_bytes = _written_bytes(replace_t, b1)
-        cache.unpersist()
         per_round.append({"round": r + 1,
                           "delta_bytes": delta_bytes, "delta_sec": round(dt_delta, 2),
                           "replace_bytes": repl_bytes, "replace_sec": round(dt_repl, 2)})
@@ -122,9 +121,8 @@ def main() -> None:
                         .cast("int").alias("shard"), "urlhash",
                         F.lit("u").alias("url"), F.lit("h").alias("host"),
                         F.lit("i").alias("image_id"), F.lit(0.5).alias("priority")))
-    unseen, _, c2 = probe_and_update(all_cand, delta_t.read(spark), cfg)
+    unseen, _ = probe_and_update(all_cand, delta_t.read(spark), cfg)
     leaked = unseen.count()
-    c2.unpersist()
 
     report = {
         "rounds": args.rounds, "urls_per_round": args.urls_per_round,

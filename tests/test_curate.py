@@ -44,7 +44,10 @@ def test_curate_end_to_end(spark, tmp_path):
     bench = spark.createDataFrame([(f"report about {CONTAM} here",)],
                                   "text string")
     out = str(tmp_path / "cur")
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
     stats = curate(spark, docs, out, window=256, benchmark=bench)
+    assert cm.numCachedEntries() == before, "curate leaked cache entries"
 
     assert stats["exact_dedup"] == stats["input"] - 1          # doc 100
     assert stats["near_dedup"] <= stats["exact_dedup"] - 1     # doc 101

@@ -373,6 +373,39 @@ def test_operators_leave_no_cached_plans(
     assert [m["round"] for m in metrics if m["round"] > 0] == [1, 2]
     assert cm.numCachedEntries() == before, "crawl round leaked a cache entry"
 
+    from hyperion_crawler_spark.sources.tables import Catalog
+    from hyperion_crawler_spark.streaming.seed_ingest import ingest_seed_stream
+
+    seed_dir = str(tmp_path / "seed_drop")
+    fixture_dfs["seeds"].limit(20).coalesce(1).write.parquet(seed_dir)
+    before = cm.numCachedEntries()
+    totals = ingest_seed_stream(spark, Catalog(str(tmp_path / "ingest")),
+                                crawl_cfg, seed_dir, str(tmp_path / "ckpt"))
+    assert totals["batches"] == 1 and totals["new_urls"] > 0
+    assert cm.numCachedEntries() == before, "seed ingest leaked a cache entry"
+
+    from hyperion_crawler_spark.etl import ETLPipeline, LoadMode, MarketDataSource
+
+    class _DaySource(MarketDataSource):
+        # an integer partition column, so REPLACE has partitions to swap
+        partition_col = "day"
+
+        def transform(self, df, dim):
+            valid, quarantine = super().transform(df, dim)
+            return valid.withColumn("day", F.dayofmonth("trade_date")), quarantine
+
+    p = ETLPipeline(spark, str(tmp_path / "etl"))
+    p.register(_DaySource(n_tickers=20))
+    # each mode loads into the table the modes before it left; INSERT
+    # takes a fresh date so it does not conflict, UPDATE one that matches
+    for mode, day in ((LoadMode.UPSERT, "2024-01-05"), (LoadMode.APPEND, "2024-01-08"),
+                      (LoadMode.INSERT, "2024-01-09"), (LoadMode.UPDATE, "2024-01-05"),
+                      (LoadMode.REPLACE, "2024-01-05")):
+        before = cm.numCachedEntries()
+        res = p.run_full_pipeline("market", {"trade_date": day}, mode=mode)
+        assert res.loaded == 20, mode
+        assert cm.numCachedEntries() == before, f"ETL {mode.value} leaked a cache entry"
+
 
 def test_keep_cluster_representatives(spark):
     docs = spark.createDataFrame(

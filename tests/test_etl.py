@@ -108,17 +108,21 @@ def test_latency_alert_trips_with_zero_threshold(spark, tmp_path):
 
 
 def test_phase_chain_releases_extract_cache(spark, tmp_path):
-    # ADVICE r2: extract_data persisted the envelope frame and nothing
-    # unpersisted it — _load must release it at the end of the chain
+    # ADVICE r2: the extract envelope's frame must not stay cached once
+    # the chain ends — it is fenced with a local checkpoint, which the
+    # CacheManager never holds, so nothing is left to release
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
     p = _pipeline(spark, tmp_path)
     ex = p.extract_data("market", {"trade_date": "2024-01-05"})
     raw = ex["data"]
-    assert raw.storageLevel.useMemory or raw.storageLevel.useDisk
+    assert ex["record_count"] == 60
     tr = p.transform_data("market", raw)
-    p.load_data("market", tr["data"], tr["quarantine"])
-    assert not (raw.storageLevel.useMemory or raw.storageLevel.useDisk), \
-        "extract cache must be released after the load commits"
-    assert p._pinned == {}
+    res = p.load_data("market", tr["data"], tr["quarantine"])["result"]
+    assert res.loaded == 60
+    assert not (raw.storageLevel.useMemory or raw.storageLevel.useDisk)
+    assert cm.numCachedEntries() == before, \
+        "the extract → load chain must leave no cache entry"
 
 
 def test_insert_mode_clean_then_conflict(spark, tmp_path):
@@ -177,13 +181,16 @@ def test_update_mode_counts_skipped_and_trips_quality_gate(spark, tmp_path):
 def test_insert_conflict_releases_pinned_extract(spark, tmp_path):
     import pytest
 
+    cm = spark._jsparkSession.sharedState().cacheManager()
     p = _pipeline(spark, tmp_path)
     p.run_full_pipeline("market", {"trade_date": "2024-01-05"})
+    before = cm.numCachedEntries()
     env = p.extract_data("market", {"trade_date": "2024-01-05"})
     tr = p.transform_data("market", env["data"])
     with pytest.raises(ValueError, match="INSERT conflict"):
         p.load_data("market", tr["data"], tr["quarantine"], mode=LoadMode.INSERT)
-    assert p._pinned == {}, "failed load must still release extract caches"
+    assert cm.numCachedEntries() == before, \
+        "a failed load must leave no cache entry"
     assert not (env["data"].storageLevel.useMemory or env["data"].storageLevel.useDisk)
 
 

@@ -116,6 +116,53 @@ def test_no_ungated_spread_in_source_tree():
     assert not bad, f"ungated spread (use relational.spread): {bad}"
 
 
+def test_no_cache_calls_in_source_tree():
+    """One caching rule (README "Caching"): a frame with two or more
+    readers is fenced by the function that makes it, with
+    ``localCheckpoint``. No engine module or CLI driver persists,
+    caches or releases a frame by hand."""
+    paths = (glob.glob("hyperion_crawler_spark/**/*.py", recursive=True)
+             + glob.glob("scripts/run_*.py"))
+    bad = []
+    for path in paths:
+        src = open(path).read()
+        for m in re.finditer(r"\.persist\(|\.cache\(|\.unpersist\(", src):
+            bad.append(f"{path}:{src.count(chr(10), 0, m.start()) + 1}")
+    assert not bad, f"persist/cache/unpersist (fence with localCheckpoint): {bad}"
+
+
+def test_failed_round_leaves_no_cached_plans(spark, fixture_dfs, crawl_cfg,
+                                             tmp_path, monkeypatch):
+    """A round whose archive append raises propagates the error and
+    leaves the CacheManager as it found it: the round's fences are
+    local checkpoints, so there is no release step for the error to
+    skip."""
+    import pytest
+
+    from hyperion_crawler_spark.plans.loop import run_crawl
+    from hyperion_crawler_spark.sources.tables import SnapshotTable
+
+    store = str(tmp_path / "store")
+    run_crawl(spark, store, crawl_cfg, fixture_dfs["corpus"],
+              fixture_dfs["links"], fixture_dfs["robots"],
+              fixture_dfs["seeds"], n_rounds=0)
+    orig_append = SnapshotTable.append
+
+    def failing_append(self, df, *args, **kwargs):
+        if self.name == "archive":
+            raise RuntimeError("archive append failed")
+        return orig_append(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(SnapshotTable, "append", failing_append)
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    with pytest.raises(RuntimeError, match="archive append failed"):
+        run_crawl(spark, store, crawl_cfg, fixture_dfs["corpus"],
+                  fixture_dfs["links"], fixture_dfs["robots"],
+                  fixture_dfs["seeds"], n_rounds=1)
+    assert cm.numCachedEntries() == before, "failed round leaked cache entries"
+
+
 def test_embedding_topk_broadcasts_queries(spark):
     """q20's scoring must never shuffle the corpus by a pair key: the
     query set rides to the executors as a broadcast — a task broadcast

@@ -17,7 +17,7 @@ def _cands(spark, hashes, cfg):
 
 def test_probe_empty_state_passes_all(spark, crawl_cfg):
     empty = spark.createDataFrame([], "shard int, filter_bytes binary, n_items long")
-    unseen, filters, _c = probe_and_update(_cands(spark, range(100), crawl_cfg), empty, crawl_cfg)
+    unseen, filters = probe_and_update(_cands(spark, range(100), crawl_cfg), empty, crawl_cfg)
     assert unseen.count() == 100
     f = filters.collect()
     assert sum(r["n_items"] for r in f) == 100
@@ -27,14 +27,14 @@ def test_probe_empty_state_passes_all(spark, crawl_cfg):
 def test_no_false_negatives_and_exact_parity(spark, crawl_cfg):
     empty = spark.createDataFrame([], "shard int, filter_bytes binary, n_items long")
     first = list(range(0, 500))
-    _, filters, _c = probe_and_update(_cands(spark, first, crawl_cfg), empty, crawl_cfg)
+    _, filters = probe_and_update(_cands(spark, first, crawl_cfg), empty, crawl_cfg)
     filters = filters.persist()
     # re-probe same keys: ALL must be seen (no false negatives)
-    again, _, _c2 = probe_and_update(_cands(spark, first, crawl_cfg), filters, crawl_cfg)
+    again, _ = probe_and_update(_cands(spark, first, crawl_cfg), filters, crawl_cfg)
     assert again.count() == 0
     # fresh keys: at this scale bloom must agree with exact set (FPR ~0)
     fresh = list(range(10_000, 10_500))
-    unseen2, _, _c3 = probe_and_update(_cands(spark, fresh, crawl_cfg), filters, crawl_cfg)
+    unseen2, _ = probe_and_update(_cands(spark, fresh, crawl_cfg), filters, crawl_cfg)
     assert unseen2.count() == len(fresh)
     filters.unpersist()
 
@@ -46,7 +46,7 @@ def test_untouched_shard_not_rewritten_but_survives_append(spark, crawl_cfg, tmp
     seen_t = Catalog(str(tmp_path)).table("seen_filters", "shard")
     # round A: keys only in shard 0
     keys0 = [h for h in range(2000) if h % crawl_cfg.n_shards == 0][:50]
-    _, f1, _c4 = probe_and_update(_cands(spark, keys0, crawl_cfg), empty, crawl_cfg)
+    _, f1 = probe_and_update(_cands(spark, keys0, crawl_cfg), empty, crawl_cfg)
     seen_t.append(f1)
     blob0 = {r["shard"]: (bytes(r["filter_bytes"]), r["n_items"])
              for r in seen_t.read(spark).collect()}
@@ -54,7 +54,7 @@ def test_untouched_shard_not_rewritten_but_survives_append(spark, crawl_cfg, tmp
     # row for shard 0 (no rewrite), yet the stored blob survives
     keys1 = [h for h in range(2000) if h % crawl_cfg.n_shards == 1][:50]
     current = seen_t.read(spark)
-    _, f2, _c5 = probe_and_update(_cands(spark, keys1, crawl_cfg), current, crawl_cfg)
+    _, f2 = probe_and_update(_cands(spark, keys1, crawl_cfg), current, crawl_cfg)
     emitted = {r["shard"] for r in f2.collect()}
     assert emitted == {1}, "untouched shards must not be re-emitted"
     seen_t.append(f2)
@@ -82,8 +82,8 @@ def test_concurrent_shard_deltas_both_survive_and_fold(spark, crawl_cfg, tmp_pat
     s = crawl_cfg.n_shards
     a_keys = [0 * s + i * s for i in range(1, 30)]        # all shard 0
     b_keys = [i * s for i in range(100, 130)]             # all shard 0, disjoint
-    _, fa, _ca = probe_and_update(_cands(spark, a_keys, crawl_cfg), empty, crawl_cfg)
-    _, fb, _cb = probe_and_update(_cands(spark, b_keys, crawl_cfg), empty, crawl_cfg)
+    _, fa = probe_and_update(_cands(spark, a_keys, crawl_cfg), empty, crawl_cfg)
+    _, fb = probe_and_update(_cands(spark, b_keys, crawl_cfg), empty, crawl_cfg)
     # both writers computed against the same (empty) base, then commit
     seen_t.append(fa, base_version=0)
     seen_t2.append(fb, base_version=0)
@@ -91,14 +91,14 @@ def test_concurrent_shard_deltas_both_survive_and_fold(spark, crawl_cfg, tmp_pat
     state = seen_t.read(spark)
     assert state.count() == 2  # two delta rows for shard 0
     both = sorted(set(a_keys) | set(b_keys))
-    again, _, _c2 = probe_and_update(_cands(spark, both, crawl_cfg), state, crawl_cfg)
+    again, _ = probe_and_update(_cands(spark, both, crawl_cfg), state, crawl_cfg)
     assert again.count() == 0, "a writer's bits were lost"
 
     v = fold_filters(spark, seen_t)
     assert v is not None
     folded = seen_t.read(spark).collect()
     assert len(folded) == 1 and folded[0]["n_items"] == len(both)
-    again2, _, _c3 = probe_and_update(
+    again2, _ = probe_and_update(
         _cands(spark, both, crawl_cfg), seen_t.read(spark), crawl_cfg)
     assert again2.count() == 0, "fold dropped membership"
 
@@ -107,7 +107,7 @@ def test_within_batch_duplicates_survive_probe(spark, crawl_cfg):
     # probe dedups ACROSS rounds only; batch dedup is the caller's
     # first-wins row_number (reference: loader.py:188-209)
     empty = spark.createDataFrame([], "shard int, filter_bytes binary, n_items long")
-    unseen, _, _c6 = probe_and_update(_cands(spark, [7, 7], crawl_cfg), empty, crawl_cfg)
+    unseen, _ = probe_and_update(_cands(spark, [7, 7], crawl_cfg), empty, crawl_cfg)
     assert unseen.count() >= 1
 
 
@@ -126,11 +126,11 @@ def test_gc_fold_refuses_dirty_head(spark, crawl_cfg, tmp_path):
     seen_t = cat.table("seen_filters", "shard")
     s = crawl_cfg.n_shards
 
-    _, f1, _c1 = probe_and_update(
+    _, f1 = probe_and_update(
         _cands(spark, [i * s for i in range(1, 20)], crawl_cfg), empty, crawl_cfg)
     v1 = seen_t.append(f1, base_version=0)
     cat.commit_round(1, {"seen_filters": v1})
-    _, f2, _c2 = probe_and_update(
+    _, f2 = probe_and_update(
         _cands(spark, [i * s for i in range(50, 60)], crawl_cfg), empty, crawl_cfg)
     seen_t.append(f2, base_version=v1)  # crashed attempt: never logged
 
@@ -141,7 +141,7 @@ def test_gc_fold_refuses_dirty_head(spark, crawl_cfg, tmp_path):
 
     # once checkpointed, the same fold proceeds (needs >1 file: add a
     # second LOGGED delta first)
-    _, f3, _c3 = probe_and_update(
+    _, f3 = probe_and_update(
         _cands(spark, [i * s for i in range(80, 90)], crawl_cfg), empty, crawl_cfg)
     v3 = seen_t.append(f3)
     cat.commit_round(2, {"seen_filters": v3})
