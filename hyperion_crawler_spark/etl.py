@@ -279,7 +279,9 @@ class ETLPipeline:
         if mode == LoadMode.APPEND:
             table.append(observed)
         elif mode == LoadMode.UPSERT:
-            table.merge(self.spark, observed, src.conflict_keys)  # merge fences its source
+            # eager: the Observation fires once, on the checkpoint job
+            table.merge(self.spark, observed.localCheckpoint(),
+                        src.conflict_keys)
         elif mode == LoadMode.INSERT:
             # reference INSERT: a key conflict is an integrity ERROR
             # (krx/loader.py:146-158 — the DB raises, the batch rolls
@@ -289,10 +291,11 @@ class ETLPipeline:
             # an interleaved conflict (r5 review — the old probe-then-
             # append let two racing INSERTs both pass their probes).
             # ``observed`` is appended (the Observation rides the write
-            # scan); the UNobserved ``deduped`` twin feeds the probes
-            # (Spark 4 Observations break under joins).
+            # scan); the UNobserved ``deduped`` twin feeds the up to two
+            # conflict probes (Spark 4 Observations break under joins),
+            # fenced eagerly as the first probe runs at once.
             table.insert_strict(self.spark, observed, src.conflict_keys,
-                                probe=deduped)
+                                probe=deduped.localCheckpoint())
         elif mode == LoadMode.UPDATE:
             # update-only-matched: rows whose key is absent are SKIPPED,
             # never inserted (the enum's "업데이트만" semantics; the
@@ -392,4 +395,4 @@ class ETLPipeline:
                                  .withColumn("_new", F.lit(1))))
             cand = latest_per_key(both, lk, oc,
                                   [F.col("_new").asc()]).drop("_new")
-        latest_t.merge(self.spark, cand, lk)
+        latest_t.merge(self.spark, cand.localCheckpoint(eager=False), lk)

@@ -80,17 +80,16 @@ def _frontier_table(cat):
     analog (north_rule). Sort Columns built lazily (needs a live
     SparkContext).
 
-    Merge-on-read: a round's frontier MERGE appends O(changed-rows)
-    delta files (new/retried URLs + tombstones for retired ones)
-    instead of rewriting the whole pending queue — at a 10^10-row
-    queue CoW wrote 10^10 rows to change ~10^5. Deltas fold into
-    fresh sorted base files every ``compact_after`` rounds, which also
+    A round's frontier MERGE appends O(changed-rows) delta files
+    (new/retried URLs + tombstones for retired ones) instead of
+    rewriting the whole pending queue — at a 10^10-row queue a rewrite
+    writes 10^10 rows to change ~10^5. Deltas fold into fresh sorted
+    base files when the store's compaction triggers fire, which also
     re-materializes the queue in priority order. The shard partition
     column is pmod(urlhash, n_shards) — a pure function of the merge
     key, as merge-on-read pruning requires."""
     return cat.table("frontier", "shard",
-                     sort_cols=[F.col("priority").desc(), F.col("urlhash").asc()],
-                     merge_on_read=True)
+                     sort_cols=[F.col("priority").desc(), F.col("urlhash").asc()])
 
 
 def init_frontier(spark: SparkSession, cat, cfg: CrawlConfig, seeds: DataFrame) -> dict:
@@ -259,8 +258,10 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
     retry_rows = res_updates.filter(F.col("status") == "queued")
     terminal_rows = (res_updates.filter(F.col("status") != "queued")
                      .unionByName(excl_updates.select(*FRONTIER_COLS)))
-    # merge() fences its own source and delete set; archive_rows is
-    # fenced here because the archive append reads it too
+    # the merge source and delete set are projections of the results,
+    # probe and archive fences, so they get none of their own;
+    # archive_rows is fenced because the merge and the archive append
+    # both read it
     frontier_merge = (
         retry_rows.select(*FRONTIER_COLS)
         .unionByName(new_rows.select(*FRONTIER_COLS))
@@ -301,7 +302,7 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
     if cfg.image_neardup_dist > 0:
         from ..operators.dedup import hamming_join, hamming_pairs
 
-        phash_t = cat.table("phash_index", "shard", merge_on_read=True)
+        phash_t = cat.table("phash_index", "shard")
         neardups_t = cat.table("image_neardups", "round")
         new_ph = results.filter(F.col("status") == "fetched") \
             .select(F.col("image_id").alias("id"), F.col("phash").alias("h"))
@@ -389,8 +390,9 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
             prior = phash_t.read(spark, version=base.get("phash_index", 0))
             if prior is not None:
                 new_idx = new_idx.join(prior.select("h"), "h", "left_anti")
-            return phash_t.merge(spark, new_idx.select("h", "shard",
-                                                       "image_id"), ["h"],
+            new_idx = new_idx.select("h", "shard", "image_id") \
+                .localCheckpoint(eager=False)
+            return phash_t.merge(spark, new_idx, ["h"],
                                  base_version=base.get("phash_index", 0))
 
         def _commit_neardups():
@@ -479,10 +481,10 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
             # to change the graph-adjacent slice). Compaction re-sorts
             # the queue as usual.
             moved = rescore_frontier_delta(
-                fr_now, known_links, iters=2, weight=cfg.rescore_weight)
+                fr_now, known_links, iters=2, weight=cfg.rescore_weight
+            ).select(*FRONTIER_COLS).localCheckpoint(eager=False)
             versions["frontier"] = frontier_t.merge(
-                spark, moved.select(*FRONTIER_COLS), ["urlhash"],
-                base_version=versions["frontier"])
+                spark, moved, ["urlhash"], base_version=versions["frontier"])
         t = _mark("rescore_priority", t)
     if cfg.fold_seen_every and round_idx % cfg.fold_seen_every == 0:
         # OR-compact the append-only seen deltas back to one blob per

@@ -15,10 +15,13 @@ Layout per table::
 
 A manifest lists live files plus per-file min/max stats of the table's
 partition column (collected from parquet footers via pyarrow — the
-analog of Iceberg manifest file stats). ``merge`` rewrites ONLY files
-whose stat range intersects the source's partition values; everything
-else is carried over by reference. This is what keeps a per-round MERGE
-from rewriting a 10^10-row frontier (SURVEY §7 "what's hard" #3).
+analog of Iceberg manifest file stats) and footer row counts. Every
+``merge`` is merge-on-read (Iceberg v2): it appends one delta batch of
+upserts and delete-key tombstones and carries every base file by
+reference; readers reconcile newest-wins per key, and a churn- or
+count-triggered fold rewrites base files. This is what keeps a
+per-round MERGE from rewriting a 10^10-row frontier (SURVEY §7 "what's
+hard" #3).
 
 Crash safety: data files are written first, the manifest rename is the
 commit point. A kill between the two leaves orphan data that no
@@ -49,6 +52,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# Merge-on-read tuning, shared by every table (tests monkeypatch these).
+# A merge folds its deltas into fresh base files once the pending delta
+# rows plus its own batch reach COMPACT_RATIO of the base rows, or once
+# it would be the COMPACT_AFTER-th live delta commit (see _merge_delta);
+# 0 disables a trigger.
+COMPACT_RATIO = 0.2
+COMPACT_AFTER = 32
+# Broadcast ceiling for the read-side delta application (the Iceberg
+# equality-delete plan); above it _reconcile's anti-join shuffles.
+# Parquet bytes, not rows — on an object store the manifest
+# would carry sizes, here the local stat is exact.
+MOR_BROADCAST_BYTES = 256 << 20
+
 
 class CommitConflict(Exception):
     """A concurrent writer committed the snapshot version this commit
@@ -64,8 +80,7 @@ class ForeignOverwriteError(Exception):
     would silently bury that writer's data, and replace semantics
     offer no rebase rule to carry it. NOT retryable (deliberately not
     a ``CommitConflict``): the caller must re-derive from the new
-    head, switch to ``merge``, or opt in with
-    ``allow_bury_foreign=True``."""
+    head or switch to ``merge``."""
 
 
 class ForeignDeltaPending(Exception):
@@ -111,8 +126,7 @@ def _exclusive_write_json(path: str, obj) -> None:
 
 class SnapshotTable:
     def __init__(self, root: str, name: str, partition_col: str | None = None,
-                 sort_cols: list | None = None, merge_on_read: bool = False,
-                 compact_after: int = 32, schema_evolving: bool = False,
+                 sort_cols: list | None = None, schema_evolving: bool = False,
                  writer: str | None = None):
         """``sort_cols``: Column sort expressions applied within each
         data file at write time (Iceberg table sort-order analog) — the
@@ -121,20 +135,9 @@ class SnapshotTable:
         order (north_rule: 'priority queue materialized as a sorted
         MERGE INTO').
 
-        ``merge_on_read``: switch ``merge`` from copy-on-write (rewrite
-        every file whose partition stats the source touches) to
-        Iceberg-v2 merge-on-read: each merge APPENDS a delta commit
-        (upsert rows + delete-key tombstones, stamped with a ``_seq``
-        version column) and readers reconcile max-``_seq``-wins per key
-        at scan time. A round's commit then writes O(changed rows), not
-        O(queue) — the difference between rewriting a 10^10-row pending
-        frontier every round and appending the ~10^5 rows that changed.
-        Requires the partition column (when set) to be a deterministic
+        ``partition_col`` of a merged table must be a deterministic
         function of the merge keys, so tombstones prune the same files
-        as the base rows they kill. After ``compact_after`` delta
-        commits the merge folds everything into fresh base files
-        (Iceberg ``rewrite_data_files`` analog) so read-side reconcile
-        cost stays bounded."""
+        as the base rows they kill (see ``merge``)."""
         self.dir = os.path.join(root, name)
         self.name = name
         self.partition_col = partition_col
@@ -150,23 +153,9 @@ class SnapshotTable:
         # table's versions referenced by ANY round-log entry — a logged
         # same-writer commit is durable, not an orphan
         self.log_lookup = None
-        self.merge_on_read = merge_on_read
-        self.compact_after = compact_after
         # widened-schema tables (lineage-style) opt into footer-merged
         # reads; see _read_files
         self.schema_evolving = schema_evolving
-        # churn-proportional compaction trigger: a merge folds when the
-        # pending delta rows plus its own batch reach this fraction of
-        # the base rows, checked before anything is written (see
-        # _merge_delta). 0 disables, leaving only the commit-count
-        # trigger.
-        self.compact_ratio = 0.2
-        # broadcast ceiling for the read-side delta application (the
-        # Iceberg equality-delete plan); above it _reconcile falls back
-        # to the full hash reconcile. Parquet bytes, not rows — on an
-        # object store the manifest would carry sizes, here the local
-        # stat is exact.
-        self.mor_broadcast_bytes = 256 << 20
         os.makedirs(os.path.join(self.dir, "data"), exist_ok=True)
         os.makedirs(os.path.join(self.dir, "snapshots"), exist_ok=True)
         # Durable table properties (Iceberg table-metadata analog):
@@ -174,17 +163,16 @@ class SnapshotTable:
         # handle — a maintenance process, a fresh Catalog in a CLI —
         # recovers the table's declared behavior instead of silently
         # downgrading it (a schema-evolving table read without
-        # mergeSchema drops columns; a MoR table merged CoW mixes
-        # layouts). sort_cols hold live Column objects and can't
-        # round-trip, so only a boolean "sorted" marker is stored —
-        # enough for maintenance code to refuse order-destroying
-        # rewrites it can't reproduce.
+        # mergeSchema drops columns). sort_cols hold live Column objects
+        # and can't round-trip, so only a boolean "sorted" marker is
+        # stored — enough for maintenance code to refuse order-
+        # destroying rewrites it can't reproduce. (A merge-mode key
+        # that older stores wrote is ignored and dropped on the next
+        # sync: every table merges on read.)
         props = {}
         if os.path.exists(self._props_path):
             with open(self._props_path) as f:
                 props = json.load(f)
-        if props.get("merge_on_read"):
-            self.merge_on_read = True
         if props.get("schema_evolving"):
             self.schema_evolving = True
         if self.partition_col is None:
@@ -217,8 +205,7 @@ class SnapshotTable:
                     on_disk = json.load(f)
         self.sorted_declared = (getattr(self, "sorted_declared", False)
                                 or self.sort_cols is not None)
-        new_props = {"merge_on_read": self.merge_on_read,
-                     "schema_evolving": self.schema_evolving,
+        new_props = {"schema_evolving": self.schema_evolving,
                      "partition_col": self.partition_col,
                      "sorted": self.sorted_declared}
         if new_props != on_disk:
@@ -393,15 +380,14 @@ class SnapshotTable:
         """Newest row per key among DELTA rows only (tombstone beats
         upsert at equal ``_seq`` — a key merged and deleted in the same
         commit is deleted). Small: O(changed rows) over ≤
-        ``compact_after`` commits. Keeps ``_tomb``."""
+        ``COMPACT_AFTER`` commits. Keeps ``_tomb``."""
         user_cols = [c for c in d.columns if c not in ("_seq", "_tomb")]
         val_cols = [c for c in user_cols if c not in keys]
         # Tie-break: two upsert rows for the SAME key in the SAME merge
         # commit share (_seq, _tomb) — without a further ordering the
         # winner is whichever row the hash-agg saw last, i.e.
-        # nondeterministic across runs (a resume-bit-identity hazard;
-        # the CoW path keeps both duplicates, so the two paths would
-        # also diverge silently). Extend the ordering struct with the
+        # nondeterministic across runs (a resume-bit-identity hazard).
+        # Extend the ordering struct with the
         # orderable value columns (maps aren't orderable in Spark) so
         # ties resolve to the max value row, deterministically — the
         # same total-order trick the as-of join tiebreak uses. The
@@ -429,26 +415,26 @@ class SnapshotTable:
     def _reconcile(self, spark: SparkSession, files: list[dict],
                    keys: list[str],
                    extra_delta: DataFrame | None = None) -> DataFrame:
-        """Merge-on-read scan: base files ∪ delta files, newest ``_seq``
-        wins per key, base rows implicitly ``_seq=0``.
+        """Merge-on-read scan: base files with the deltas applied, newest
+        ``_seq`` wins per key among the deltas.
 
         ``extra_delta``: an UNWRITTEN delta batch (already stamped with
         ``_seq``/``_tomb``) folded in alongside the on-disk deltas —
         the pre-write fold path of ``_merge_delta`` uses this so a
         compacting merge never writes delta files its own commit
-        orphans. Its size is unknown, so its presence always routes to
-        the full hash reconcile, never the broadcast plan.
+        orphans. Its size is unknown, so its presence never broadcasts.
 
         Scale shape (the Iceberg equality-delete plan): reconcile the
         DELTAS among themselves first (one small hash agg ∝ changed
-        rows), then apply them to the base as ``base ANTI-JOIN
-        broadcast(delta keys) UNION delta survivors`` — the base table
-        NEVER shuffles. A 10^10-row frontier read costs a broadcast
-        filter over the base scan, not a full-queue hash exchange (that
-        naive shape would have traded the CoW write amplification for
-        equal read amplification). Falls back to the full hash
-        reconcile when the deltas outgrow ``mor_broadcast_bytes``
-        (compaction normally folds them long before that)."""
+        rows), then apply them to the base as ``base ANTI-JOIN (delta
+        keys) UNION delta survivors``. Base rows are never grouped by
+        key: rows that share a key in the base (APPEND loads) stay
+        until a delta touches that key, which then replaces all of
+        them, as a copy-on-write MERGE would. The keys are broadcast
+        while the deltas stay within ``MOR_BROADCAST_BYTES``, so the
+        base table NEVER shuffles and a 10^10-row frontier read costs a
+        broadcast filter over the base scan; above it (compaction
+        normally folds long before that) the anti-join shuffles."""
         base = [f for f in files if f.get("kind", "base") == "base"]
         delta = [f for f in files if f.get("kind") == "delta"]
         if not delta and extra_delta is None:
@@ -462,18 +448,17 @@ class SnapshotTable:
                     .filter(~F.col("_tomb")).select(*user_cols))
         b = self._read_files(spark, base)
         user_cols = list(b.columns)  # table column order = base order
+        winners = self._delta_winners(d, keys)
+        gone = winners.select(*keys)
         delta_bytes = sum(
             os.path.getsize(os.path.join(self.dir, f["path"])) for f in delta)
-        if extra_delta is None and delta_bytes <= self.mor_broadcast_bytes:
-            winners = self._delta_winners(d, keys)
-            survivors = b.join(F.broadcast(winners.select(*keys)), keys, "left_anti")
-            return survivors.unionByName(
-                winners.filter(~F.col("_tomb")).select(*user_cols))
-        rows = (b.withColumn("_seq", F.lit(0).cast("long"))
-                 .withColumn("_tomb", F.lit(False))
-                 .unionByName(d))
-        return (self._delta_winners(rows, keys)
-                .filter(~F.col("_tomb")).select(*user_cols))
+        if extra_delta is None and delta_bytes <= MOR_BROADCAST_BYTES:
+            gone = F.broadcast(gone)
+        # a using-column join puts the keys first: restore the table's
+        # column order
+        survivors = b.join(gone, keys, "left_anti").select(*user_cols)
+        return survivors.unionByName(
+            winners.filter(~F.col("_tomb")).select(*user_cols))
 
     def _delta_keys(self, head: int) -> list[str]:
         """Reconcile keys for a (possibly rebased) delta-carrying file
@@ -549,12 +534,10 @@ class SnapshotTable:
         ``source``). Callers whose source carries an ``Observation``
         pass the unobserved twin — Spark 4 Observations break when the
         observed plan feeds a join. The probe is read by up to two
-        conflict checks, the first straight away, so it is fenced here
-        with an eager local checkpoint (README "Caching")."""
+        conflict checks, so the caller that makes it fences it
+        (README "Caching")."""
         if probe is None:
-            source = probe = source.localCheckpoint()
-        else:
-            probe = probe.localCheckpoint()
+            probe = source
 
         def _conflicts(state: DataFrame | None) -> bool:
             return state is not None and bool(
@@ -605,8 +588,8 @@ class SnapshotTable:
         is higher). So a delta-carrying table is compacted first:
         the fold applies the existing tombstones to the OLD base only,
         and the appended rows land untouched afterwards. Appends to
-        merge-on-read tables are rare (the crawl never does it); the
-        fold cost is the documented trade."""
+        merged tables are rare (the crawl never does it); the fold cost
+        is the documented trade."""
         entries: list[dict] | None = None
         while True:
             head = self.current_version() or 0
@@ -624,7 +607,6 @@ class SnapshotTable:
                 continue  # optimistic retry: re-read head, rebase
 
     def overwrite(self, df: DataFrame, meta: dict | None = None,
-                  allow_bury_foreign: bool = False,
                   base_version: int | None = None) -> int:
         """Whole-table REPLACE. Unlike ``merge``/``append`` there is no
         rebase rule — replace semantics can't replay a foreign writer's
@@ -633,9 +615,7 @@ class SnapshotTable:
         round-5 verdict flagged), an overwrite that would drop a
         FOREIGN writer's commit landed after the caller's entry point
         raises ``ForeignOverwriteError``. The caller decides: re-read +
-        re-derive, switch to ``merge``, or pass
-        ``allow_bury_foreign=True`` when replacement is genuinely
-        intended regardless (e.g. a rebuild-from-source job). Losing
+        re-derive, or switch to ``merge``. Losing
         races against the caller's OWN interleaved commits (retries,
         round-logged steps) still resolve by simple retry — replacing
         your own earlier state is what overwrite means.
@@ -648,16 +628,13 @@ class SnapshotTable:
                 else self.current_version() or 0)
 
         def _refuse_foreign(head: int) -> None:
-            if allow_bury_foreign:
-                return
             foreign = [v for v in range(base + 1, head + 1)
                        if self._writer_of(v) != self.writer]
             if foreign:
                 raise ForeignOverwriteError(
                     f"overwrite of '{self.name}' from base v{base} would "
                     f"bury foreign-writer commit(s) {foreign}; re-derive "
-                    f"from the new head, use merge(), or pass "
-                    f"allow_bury_foreign=True")
+                    f"from the new head or use merge()")
 
         # pre-flight the foreign check BEFORE paying the full-table
         # write: a refused overwrite should not leave a whole
@@ -687,8 +664,7 @@ class SnapshotTable:
         """REPLACE semantics on the partition column (reference:
         DELETE WHERE key IN (...) then insert — krx/loader.py:163-176).
 
-        On a delta-carrying merge-on-read table the deltas are folded
-        first (``compact``): partition overwrite reasons about BASE
+        On a delta-carrying table the deltas are folded first (``compact``): partition overwrite reasons about BASE
         files only — rewriting raw delta rows as base files would
         resurrect tombstoned keys and leak ``_seq``/``_tomb`` columns."""
         assert self.partition_col is not None
@@ -722,83 +698,44 @@ class SnapshotTable:
         frontier uses this to retire fetched/terminal URLs so the
         pending queue stays the working set, not all-URLs-ever. A key
         present in BOTH source and delete_keys is DELETED (the DELETE
-        branch wins, as the docstring semantics require). Only files
-        whose partition stats intersect the source's (and delete set's)
-        partition values are rewritten; an all-empty source+delete set
-        commits the carried file list unchanged (an idle round must not
-        rewrite a 10^10-row table).
+        branch wins, as the docstring semantics require).
 
-        The source (and delete set) are read up to three times (row
-        count or partition-value collect, survivor anti-join, union
-        write), the first straight away, so merge fences each with an
-        eager local checkpoint (README "Caching"); callers need not. An
-        eager fence also fires an ``Observation`` on the source, where a
-        lazy one would lose it.
+        Every merge is merge-on-read, in one of three cases:
+
+        * first write — a table with no live files gets the source,
+          minus the delete keys, written as base files;
+        * idle merge — an empty source and delete set commit the
+          carried file list unchanged (an idle round must not rewrite
+          a 10^10-row table);
+        * otherwise ``_merge_delta`` appends one delta batch, or folds
+          the table, deciding which before it writes anything.
+
+        ``keys`` must be stable across a table's merges (the manifest
+        records them for readers). The source and delete set are read
+        up to twice (the batch count, then the write), so a caller
+        whose frame is costly to recompute, or carries an
+        ``Observation``, fences it (README "Caching").
         """
-        source = source.localCheckpoint()
-        if delete_keys is not None:
-            delete_keys = delete_keys.localCheckpoint()
         # optimistic-commit loop: compute against the (rebased) base,
         # commit at head+1 via exclusive create; a lost race re-reads
         # the new head, rebases the file list (carrying a concurrent
         # writer's commits, orphaning a crashed same-writer attempt)
-        # and recomputes — the Iceberg retry protocol. The fenced
-        # source makes retries cheap (no plan re-evaluation).
+        # and recomputes — the Iceberg retry protocol
         while True:
             head = self.current_version() or 0
             base = base_version if base_version is not None else head
             files = self._rebased_files(base, head)
             try:
-                return self._merge_impl(
-                    spark, source, keys, delete_keys, meta, files, head + 1)
+                if files:
+                    return self._merge_delta(spark, source, keys, delete_keys,
+                                             meta, files, head + 1)
+                alive = source
+                if delete_keys is not None:  # DELETE wins
+                    alive = source.join(delete_keys.select(*keys).distinct(),
+                                        keys, "left_anti")
+                return self._commit(self._write_data(alive), meta, ver=head + 1)
             except CommitConflict:
                 continue
-
-    def _merge_impl(self, spark: SparkSession, source: DataFrame, keys: list[str],
-                    delete_keys: DataFrame | None, meta: dict | None,
-                    files: list[dict], ver: int) -> int:
-        # the manifest is authoritative: once a table carries live delta
-        # files it IS merge-on-read, even for a caller that constructed
-        # the handle without the flag (a CoW rewrite over delta files
-        # would mix schemas and mis-merge)
-        if files and (self.merge_on_read
-                      or any(f.get("kind") == "delta" for f in files)):
-            return self._merge_delta(spark, source, keys, delete_keys,
-                                     meta, files, ver)
-        # DELETE-wins: drop source rows whose key is also in delete_keys
-        alive = source
-        if delete_keys is not None:
-            alive = source.join(delete_keys.select(*keys).distinct(), keys, "left_anti")
-
-        if not files:
-            return self._commit(self._write_data(alive), meta, ver=ver)
-
-        touch_cols = [source]
-        if delete_keys is not None:
-            touch_cols.append(delete_keys)
-        if self.partition_col is not None and all(
-                self.partition_col in d.columns for d in touch_cols):
-            parts = set()
-            for d in touch_cols:
-                parts.update(r[0] for r in d.select(self.partition_col).distinct().collect())
-            if not parts:  # idle merge: nothing touched, carry files as-is
-                return self._commit(files, meta, ver=ver)
-            keep, rewrite = self._prune(sorted(parts), files)
-        else:
-            keep, rewrite = [], files
-
-        new_entries = list(keep)
-        if rewrite:
-            target = self._read_files(spark, rewrite)
-            gone = source.select(*keys)
-            if delete_keys is not None:
-                gone = gone.unionByName(delete_keys.select(*keys))
-            survivors = target.join(gone.distinct(), keys, "left_anti")
-            merged = survivors.select(*target.columns).unionByName(alive.select(*target.columns))
-            new_entries += self._write_data(merged)
-        else:
-            new_entries += self._write_data(alive)
-        return self._commit(new_entries, meta, ver=ver)
 
     def _merge_delta(self, spark: SparkSession, source: DataFrame,
                      keys: list[str], delete_keys: DataFrame | None,
@@ -807,11 +744,9 @@ class SnapshotTable:
         ``_seq=<this version>``, tombstones from ``delete_keys`` with
         ``_tomb=true``) instead of rewriting touched base files. Write
         cost is O(len(source)+len(delete_keys)) regardless of table
-        size — the fix for the CoW write amplification where a round's
-        uniform urlhash scatter touched every shard file and rewrote
-        the whole pending queue (round-2 verdict, "what's wrong" #1).
-        ``keys`` must be stable across a table's merges (the manifest
-        records them for readers).
+        size — a round's uniform urlhash scatter touches every shard
+        file, so rewriting touched files would rewrite the whole
+        pending queue (round-2 verdict, "what's wrong" #1).
 
         The batch is ``source ∪ tombstones`` as given: ``_delta_winners``
         makes a tombstone beat an upsert at equal ``_seq`` (DELETE wins)
@@ -824,12 +759,12 @@ class SnapshotTable:
         trigger fires:
 
         * churn — pending delta rows plus this batch reach
-          ``compact_ratio`` of the base rows, so a fold costs ≤
+          ``COMPACT_RATIO`` of the base rows, so a fold costs ≤
           (1 + 1/ratio)× the churn already written: total write
           amplification stays a constant multiple of churn however big
           the table. (A count-only trigger rewrites a quiet 10^10-row
           table every N tiny merges.)
-        * commit count — this would be the ``compact_after``-th live
+        * commit count — this would be the ``COMPACT_AFTER``-th live
           delta commit; caps read-side delta fan-in for tables whose
           churn rarely reaches the ratio.
 
@@ -837,7 +772,7 @@ class SnapshotTable:
         it reconciles the unwritten batch directly instead of writing
         files only to orphan them."""
         # ONE job answers both the idle probe and the churn count: the
-        # union scans the two fenced inputs and its count is exactly
+        # union scans the two inputs and its count is exactly
         # count(source)+count(delete_keys)
         probe = source.select(F.lit(1).alias("_p"))
         if delete_keys is not None:
@@ -870,10 +805,10 @@ class SnapshotTable:
         # merely fires a touch earlier; the trigger is a heuristic, not
         # a contract)
         churn = sum(f["rows"] for f in pending) + n_new
-        fold = ((self.compact_ratio
-                 and churn >= self.compact_ratio * sum(f["rows"] for f in base))
-                or (self.compact_after and len({f["seq"] for f in pending}) + 1
-                    >= self.compact_after))
+        fold = ((COMPACT_RATIO
+                 and churn >= COMPACT_RATIO * sum(f["rows"] for f in base))
+                or (COMPACT_AFTER and len({f["seq"] for f in pending}) + 1
+                    >= COMPACT_AFTER))
         # fold only when no live delta belongs to an unlogged FOREIGN
         # commit (in-flight or crashed-pending-redo — baking it would
         # make the redo double-apply); deferring just appends another
@@ -1163,13 +1098,11 @@ class Catalog:
         return out
 
     def table(self, name: str, partition_col: str | None = None,
-              sort_cols: list | None = None, merge_on_read: bool = False,
-              compact_after: int = 32,
+              sort_cols: list | None = None,
               schema_evolving: bool = False) -> SnapshotTable:
         if name not in self._tables:
             self._tables[name] = SnapshotTable(
                 self.root, name, partition_col, sort_cols,
-                merge_on_read=merge_on_read, compact_after=compact_after,
                 schema_evolving=schema_evolving, writer=self.writer)
             self._tables[name].log_lookup = \
                 lambda n=name: self._logged_versions(n)
@@ -1177,15 +1110,12 @@ class Catalog:
         # caller-ORDER-INDEPENDENT: a first caller that omits a flag
         # must not silently downgrade the table for a later caller that
         # declares it (e.g. a bare cat.table('frontier') before the
-        # crawl's MoR declaration would otherwise make the first merge
-        # CoW and the writes unsorted). Flags upgrade in place;
-        # conflicting partition-column re-declarations are an error.
+        # crawl's declaration would otherwise leave the writes
+        # unsorted). Flags upgrade in place; conflicting partition-
+        # column or sort re-declarations are an error.
         t = self._tables[name]
         if schema_evolving:
             t.schema_evolving = True
-        if merge_on_read and not t.merge_on_read:
-            t.merge_on_read = True
-            t.compact_after = compact_after
         if partition_col is not None:
             if t.partition_col is None:
                 t.partition_col = partition_col

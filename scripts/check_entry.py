@@ -6,7 +6,11 @@ leaves an entry in Spark's CacheManager after its result is collected:
 a leaked cache taxes every later action's plan matching for the rest of
 the session.
 
-Usage: python scripts/check_entry.py [--sf /root/testdata/sf0.01] [q_name ...]
+Usage: python scripts/check_entry.py [--sf DIR | --sf SCALE] [q_name ...]
+
+``--sf`` takes a scale directory holding the tables' parquet files, or a
+bare scale name such as ``sf0.1``, resolved next to the default
+directory.
 """
 
 from __future__ import annotations
@@ -68,6 +72,11 @@ def main():
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
+    if not os.path.isdir(args.sf) and os.sep not in args.sf:
+        args.sf = os.path.join(os.path.dirname(ap.get_default("sf")), args.sf)
+    if not os.path.isfile(os.path.join(args.sf, "region.parquet")):
+        ap.error(f"--sf {args.sf}: no region.parquet there; pass a scale "
+                 f"directory or a scale name such as sf0.01")
 
     import __spark_entry__ as E
     from hyperion_crawler_spark.config import get_spark

@@ -35,6 +35,7 @@ from hyperion_crawler_spark.operators.graph import (  # noqa: E402
     rescore_frontier_delta,
     rescore_frontier_priority,
 )
+from hyperion_crawler_spark.sources import tables  # noqa: E402
 from hyperion_crawler_spark.sources.tables import Catalog  # noqa: E402
 
 COLS = ["urlhash", "url", "host", "image_id", "shard", "priority",
@@ -74,8 +75,7 @@ def _commit_bytes(t, ver):
 
 def run_one(spark, delta: bool, n_rows: int, graph_nodes: int) -> dict:
     cat = Catalog(tempfile.mkdtemp(prefix="rescorebench_"))
-    t = cat.table("frontier", "shard", merge_on_read=True)
-    t.compact_ratio = 0
+    t = cat.table("frontier", "shard")
     v0 = t.overwrite(_frontier(spark, n_rows))
     links = _links(spark, graph_nodes)
     fr = t.read(spark, version=v0)
@@ -103,6 +103,7 @@ def main() -> None:
     ap.add_argument("--graph-nodes", type=int, default=20_000)
     args = ap.parse_args()
     spark = get_spark(app="rescore-bench")
+    tables.COMPACT_RATIO = 0  # measure the steady delta path, not a fold
     full = run_one(spark, False, args.rows, args.graph_nodes)
     delta = run_one(spark, True, args.rows, args.graph_nodes)
     assert full["rows"] == delta["rows"], "modes diverged on row count"

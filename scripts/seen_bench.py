@@ -46,7 +46,7 @@ def _live_paths(table) -> set[str]:
 
 def _written_bytes(table, before: set[str]) -> int:
     """Bytes of files the last commit WROTE (new live files) — the
-    write-volume metric; live-size growth would hide a CoW rewrite."""
+    write-volume metric; live-size growth would hide a rewrite."""
     return sum(os.path.getsize(os.path.join(table.dir, p))
                for p in _live_paths(table) - before)
 
@@ -94,15 +94,18 @@ def main() -> None:
 
         # the replacement scheme's write: the full cumulative blob per
         # touched shard (fold of everything so far = exactly the row
-        # the old kernel emitted and the old merge rewrote)
+        # the old kernel emitted), replacing those shards' rows
+        touched = sorted(r["shard"] for r in filters.select("shard")
+                         .distinct().collect())
         full = (delta_t.read(spark)
+                .filter(F.col("shard").isin(touched))
                 .groupBy("shard")
                 .applyInPandas(
                     _fold_kernel,
                     "shard int, filter_bytes binary, n_items long"))
         b1 = _live_paths(replace_t)
         t1 = time.perf_counter()
-        replace_t.merge(spark, full, ["shard"])
+        replace_t.overwrite_partitions(spark, full, touched)
         dt_repl = time.perf_counter() - t1
         repl_bytes = _written_bytes(replace_t, b1)
         per_round.append({"round": r + 1,

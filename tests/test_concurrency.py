@@ -12,15 +12,12 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from hyperion_crawler_spark.config import CrawlConfig
+from hyperion_crawler_spark.sources import tables
 from hyperion_crawler_spark.sources.tables import Catalog
 
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
-
-
-def _mor_table(cat):
-    return cat.table("t", "shard", merge_on_read=True, compact_after=1000)
 
 
 def test_forced_version_collision_both_merges_survive(spark, tmp_path):
@@ -31,8 +28,8 @@ def test_forced_version_collision_both_merges_survive(spark, tmp_path):
     fix, the second os.rename silently replaced the first manifest and
     orphaned its delta)."""
     root = str(tmp_path / "store")
-    t1 = _mor_table(Catalog(root, writer="crawl"))
-    t2 = _mor_table(Catalog(root, writer="seed_ingest"))
+    t1 = Catalog(root, writer="crawl").table("t", "shard")
+    t2 = Catalog(root, writer="seed_ingest").table("t", "shard")
     base = spark.createDataFrame([(1, 1, "a"), (2, 2, "b")],
                                  "k int, shard int, v string")
     t1.append(base)
@@ -68,8 +65,8 @@ def test_stale_base_merge_carries_foreign_commit(spark, tmp_path):
     must carry a foreign commit that landed since — the daemon's delta
     is not orphaned by the crawl's base_version-pinned merge."""
     root = str(tmp_path / "store")
-    t_crawl = _mor_table(Catalog(root, writer="crawl"))
-    t_ingest = _mor_table(Catalog(root, writer="seed_ingest"))
+    t_crawl = Catalog(root, writer="crawl").table("t", "shard")
+    t_ingest = Catalog(root, writer="seed_ingest").table("t", "shard")
     v1 = t_crawl.append(spark.createDataFrame([(1, 1, "a")],
                                               "k int, shard int, v string"))
     # daemon commits on top of v1
@@ -291,8 +288,7 @@ def test_overwrite_refuses_to_bury_foreign_commit(spark, tmp_path):
     would silently drop a FOREIGN writer's commit (landed after the
     overwriter's entry point) raises ForeignOverwriteError instead of
     last-writer-wins; replacing the caller's OWN interleaved commits
-    stays allowed (that's what overwrite means), and the explicit
-    allow_bury_foreign opt-in restores replace-regardless."""
+    stays allowed (that's what overwrite means)."""
     import pytest as _pytest
 
     from hyperion_crawler_spark.sources.tables import (Catalog,
@@ -340,13 +336,8 @@ def test_overwrite_refuses_to_bury_foreign_commit(spark, tmp_path):
     rows = sorted((r["k"], r["v"]) for r in t1.read(spark).collect())
     assert rows == [(5, "late"), (9, "x")]
 
-    # explicit opt-in buries by design
-    t1.overwrite(spark.createDataFrame([(7, "z")], "k int, v string"),
-                 allow_bury_foreign=True)
-    assert [tuple(r) for r in t1.read(spark).collect()] == [(7, "z")]
 
-
-def test_fold_defers_on_foreign_unlogged_delta(spark, tmp_path):
+def test_fold_defers_on_foreign_unlogged_delta(spark, tmp_path, monkeypatch):
     """Closing the r5 known limit: a fold (merge-triggered or explicit
     compact) must not bake a delta committed by ANOTHER writer in an
     unlogged version — that delta may be a crashed attempt's leftovers
@@ -360,9 +351,10 @@ def test_fold_defers_on_foreign_unlogged_delta(spark, tmp_path):
 
     cat_a = Catalog(str(tmp_path), writer="crawl")
     cat_b = Catalog(str(tmp_path), writer="daemon")
-    ta = cat_a.table("t", "shard", merge_on_read=True, compact_after=2)
-    tb = cat_b.table("t", "shard", merge_on_read=True, compact_after=2)
-    ta.compact_ratio = tb.compact_ratio = 0   # isolate the count trigger
+    monkeypatch.setattr(tables, "COMPACT_AFTER", 2)
+    monkeypatch.setattr(tables, "COMPACT_RATIO", 0)   # isolate the count trigger
+    ta = cat_a.table("t", "shard")
+    tb = cat_b.table("t", "shard")
 
     base = spark.createDataFrame([(1, 1, "a"), (2, 2, "b")],
                                  "k int, shard int, v string")
@@ -374,7 +366,7 @@ def test_fold_defers_on_foreign_unlogged_delta(spark, tmp_path):
         [(3, 3, "crashed")], "k int, shard int, v string"), ["k"])
     assert any(f.get("kind") == "delta" for f in ta._live_files(v2))
 
-    # daemon's merge would hit compact_after=2 — must DEFER the fold
+    # daemon's merge would hit COMPACT_AFTER=2 — must DEFER the fold
     v3 = tb.merge(spark, spark.createDataFrame(
         [(4, 4, "daemon")], "k int, shard int, v string"), ["k"])
     assert any(f.get("kind") == "delta" for f in tb._live_files(v3)), \
@@ -404,4 +396,4 @@ def test_fold_defers_on_foreign_unlogged_delta(spark, tmp_path):
     v6 = ta.merge(spark, spark.createDataFrame(
         [(6, 6, "own2")], "k int, shard int, v string"), ["k"])
     assert not any(f.get("kind") == "delta" for f in ta._live_files(v6)), \
-        "own unlogged deltas must still hit the compact_after fold"
+        "own unlogged deltas must still hit the COMPACT_AFTER fold"

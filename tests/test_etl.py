@@ -1,9 +1,11 @@
 """E→T→L facade: mode dispatch, upsert idempotence, lookup-or-create,
 LoadResult accounting (reference service semantics)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from hyperion_crawler_spark.etl import ETLPipeline, LoadMode, MarketDataSource
+from hyperion_crawler_spark.sources import tables
 
 
 def _pipeline(spark, tmp_path):
@@ -55,6 +57,31 @@ def test_append_mode_duplicates(spark, tmp_path):
     p.run_full_pipeline("market", {"trade_date": "2024-01-05"}, mode=LoadMode.APPEND)
     p.run_full_pipeline("market", {"trade_date": "2024-01-05"}, mode=LoadMode.APPEND)
     assert p.cat.table("market_daily_prices", None).read(spark).count() == 120
+
+
+@pytest.mark.parametrize("knobs", [
+    {},  # the UPSERT batch reaches COMPACT_RATIO of the base: it folds
+    {"COMPACT_RATIO": 0, "MOR_BROADCAST_BYTES": 0},  # a delta, shuffled read
+], ids=["fold", "delta"])
+def test_upsert_after_append_keeps_untouched_duplicates(spark, tmp_path,
+                                                        monkeypatch, knobs):
+    # an UPSERT replaces only the keys it carries; APPEND duplicates of
+    # other keys stay, and a key it does carry keeps one row
+    for name, value in knobs.items():
+        monkeypatch.setattr(tables, name, value)
+    p = _pipeline(spark, tmp_path)
+    t = p.cat.table("market_daily_prices", None)
+    for _ in range(2):
+        p.run_full_pipeline("market", {"trade_date": "2024-01-05"},
+                            mode=LoadMode.APPEND)
+    p.run_full_pipeline("market", {"trade_date": "2024-01-08"})
+    assert t.read(spark).count() == 180
+    p.run_full_pipeline("market", {"trade_date": "2024-01-05"})
+    assert t.read(spark).count() == 120
+    t.compact(spark)
+    days = t.read(spark).groupBy("trade_date").count().collect()
+    assert sorted((r[0].isoformat(), r[1]) for r in days) == [
+        ("2024-01-05", 60), ("2024-01-08", 60)]
 
 
 def test_add_metadata_stamped_on_loaded_rows(spark, tmp_path):

@@ -6,6 +6,7 @@ import os
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+from hyperion_crawler_spark.sources import tables
 from hyperion_crawler_spark.sources.tables import Catalog
 
 
@@ -108,6 +109,23 @@ def test_merge_empty_source_carries_files_unchanged(spark, tmp_path):
     assert t.read(spark).count() == 100
 
 
+def test_unpartitioned_merge_writes_only_the_batch(spark, tmp_path):
+    """An unpartitioned table (the ETL loader's targets) merges like
+    every other: 10 rows merged into a 1,000-row base write those 10
+    rows and carry every base file, not a rewrite of the table."""
+    t = Catalog(str(tmp_path)).table("u", None)
+    t.append(spark.range(1000).select(F.col("id").alias("k"),
+                                      F.lit("old").alias("v")))
+    base = {f["path"] for f in t._live_files()}
+    t.merge(spark, spark.range(995, 1005).select(
+        F.col("id").alias("k"), F.lit("new").alias("v")), ["k"])
+    after = t._live_files()
+    assert base <= {f["path"] for f in after}, "base files must be carried"
+    assert sum(f["rows"] for f in after if f["path"] not in base) == 10
+    assert _rows(t.read(spark)) == [
+        (k, "new" if k >= 995 else "old") for k in range(1005)]
+
+
 def test_read_pruned_skips_cold_partitions(spark, tmp_path):
     t = Catalog(str(tmp_path)).table("t9", "shard")
     t.append(spark.range(200).select(
@@ -169,7 +187,7 @@ def _file_bytes(t, entries):
 def test_mor_merge_writes_delta_not_queue(spark, tmp_path):
     # a merge on a big table must write O(changed rows), not O(table):
     # every base file is carried by reference and the new bytes are tiny
-    t = Catalog(str(tmp_path)).table("m1", "shard", merge_on_read=True)
+    t = Catalog(str(tmp_path)).table("m1", "shard")
     big = spark.range(100_000).select(
         F.col("id").alias("k"),
         F.pmod("id", F.lit(8)).cast("int").alias("shard"),
@@ -194,7 +212,7 @@ def test_mor_merge_writes_delta_not_queue(spark, tmp_path):
 
 
 def test_mor_delete_wins_and_reinsert_later(spark, tmp_path):
-    t = Catalog(str(tmp_path)).table("m2", "shard", merge_on_read=True)
+    t = Catalog(str(tmp_path)).table("m2", "shard")
     t.append(spark.createDataFrame(
         [(1, 1, "a"), (2, 2, "b")], "k int, shard int, v string"))
     # same-commit source+delete on k=2 → DELETE branch wins, also when
@@ -211,16 +229,16 @@ def test_mor_delete_wins_and_reinsert_later(spark, tmp_path):
     assert _rows(t.read(spark)) == [(1, 1, "a"), (2, 2, "b2")]
 
 
-def test_mor_compaction_folds_deltas(spark, tmp_path):
-    t = Catalog(str(tmp_path)).table("m3", "shard", merge_on_read=True,
-                                     compact_after=3)
+def test_mor_compaction_folds_deltas(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(tables, "COMPACT_AFTER", 3)
+    t = Catalog(str(tmp_path)).table("m3", "shard")
     t.append(spark.createDataFrame([(1, 1, "a")], "k int, shard int, v string"))
     for i in range(2, 5):  # 3 delta commits → third triggers compaction
         t.merge(spark, spark.createDataFrame(
             [(i, i % 8, f"v{i}")], "k int, shard int, v string"), ["k"])
     files = t._live_files()
     assert not any(f.get("kind") == "delta" for f in files), \
-        "compact_after delta commits must fold into base files"
+        "COMPACT_AFTER delta commits must fold into base files"
     assert "keys" not in t._manifest(t.current_version())
     assert _rows(t.read(spark)) == [
         (1, 1, "a"), (2, 2, "v2"), (3, 3, "v3"), (4, 4, "v4")]
@@ -229,7 +247,7 @@ def test_mor_compaction_folds_deltas(spark, tmp_path):
 
 
 def test_mor_idle_merge_carries_files(spark, tmp_path):
-    t = Catalog(str(tmp_path)).table("m4", "shard", merge_on_read=True)
+    t = Catalog(str(tmp_path)).table("m4", "shard")
     t.append(spark.createDataFrame([(1, 1, "a")], "k int, shard int, v string"))
     before = {f["path"] for f in t._live_files()}
     t.merge(spark, spark.createDataFrame([], "k int, shard int, v string"), ["k"],
@@ -238,7 +256,7 @@ def test_mor_idle_merge_carries_files(spark, tmp_path):
 
 
 def test_mor_read_pruned_reconciles(spark, tmp_path):
-    t = Catalog(str(tmp_path)).table("m5", "shard", merge_on_read=True)
+    t = Catalog(str(tmp_path)).table("m5", "shard")
     t.append(spark.range(64).select(
         F.col("id").alias("k"),
         F.pmod("id", F.lit(8)).cast("int").alias("shard"),
@@ -255,7 +273,7 @@ def test_mor_read_pruned_reconciles(spark, tmp_path):
 def test_mor_time_travel_and_resume_base(spark, tmp_path):
     # a redo bound to base_version must not see (and must orphan) a
     # later uncheckpointed delta
-    t = Catalog(str(tmp_path)).table("m6", "shard", merge_on_read=True)
+    t = Catalog(str(tmp_path)).table("m6", "shard")
     v1 = t.append(spark.createDataFrame([(1, 1, "a")], "k int, shard int, v string"))
     v2 = t.merge(spark, spark.createDataFrame(
         [(2, 2, "b")], "k int, shard int, v string"), ["k"])
@@ -271,14 +289,14 @@ def test_mor_time_travel_and_resume_base(spark, tmp_path):
         (1, 1, "a"), (2, 2, "b"), (3, 3, "redo")]
 
 
-def test_mor_read_never_shuffles_base(spark, tmp_path):
+def test_mor_read_never_shuffles_base(spark, tmp_path, monkeypatch):
     """The read-side delta application must be the equality-delete plan
     (base ANTI-JOIN broadcast(delta keys) ∪ delta survivors) — at a
     10^10-row frontier the base scan must not feed a hash exchange.
-    The over-threshold fallback (full hash reconcile) must produce the
-    identical table."""
+    The over-threshold fallback (the same anti-join, shuffled) must
+    produce the identical table."""
     cat = Catalog(str(tmp_path))
-    t = cat.table("m7", "shard", merge_on_read=True)
+    t = cat.table("m7", "shard")
     t.append(spark.range(50_000).select(
         F.col("id").alias("k"),
         F.pmod("id", F.lit(8)).cast("int").alias("shard"),
@@ -292,16 +310,23 @@ def test_mor_read_never_shuffles_base(spark, tmp_path):
     plan = fast._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, \
         "delta application must broadcast, not shuffle the base"
-    # fallback equivalence: force the hash path
-    t.mor_broadcast_bytes = 0
-    slow = t.read(spark)
-    splan = slow._jdf.queryExecution().executedPlan().toString()
-    assert "LeftAnti" not in splan
-    assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, slow.collect()))
+    # fallback equivalence: no broadcast hint, and no size-driven
+    # broadcast by Spark either, so the anti-join must shuffle
+    monkeypatch.setattr(tables, "MOR_BROADCAST_BYTES", 0)
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        slow = t.read(spark)
+        splan = slow._jdf.queryExecution().executedPlan().toString()
+        assert "LeftAnti" in splan and "BroadcastHashJoin" not in splan
+        slow_rows = sorted(map(tuple, slow.collect()))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    assert sorted(map(tuple, fast.collect())) == slow_rows
     assert fast.count() == 50_000  # +1 inserted, -1 deleted
 
 
-def test_mor_random_ops_match_dict_model(spark, tmp_path):
+def test_mor_random_ops_match_dict_model(spark, tmp_path, monkeypatch):
     """Model-based check: an arbitrary merge/delete/compact sequence on
     a merge-on-read table must equal a plain dict replay. Deterministic
     seed; covers same-commit upsert+delete, re-inserts after tombstone,
@@ -309,8 +334,8 @@ def test_mor_random_ops_match_dict_model(spark, tmp_path):
     import random
 
     rng = random.Random(7)
-    t = Catalog(str(tmp_path)).table("mm", "shard", merge_on_read=True,
-                                     compact_after=4)
+    monkeypatch.setattr(tables, "COMPACT_AFTER", 4)
+    t = Catalog(str(tmp_path)).table("mm", "shard")
     model: dict[int, str] = {}
     keyspace = list(range(40))
 
@@ -340,14 +365,14 @@ def test_mor_random_ops_match_dict_model(spark, tmp_path):
         assert got == model, f"diverged at step {step}"
 
 
-def test_mor_append_after_deltas_read_ok(spark, tmp_path):
+def test_mor_append_after_deltas_read_ok(spark, tmp_path, monkeypatch):
     """append on a delta-carrying MoR table folds the deltas first:
     tombstones apply to the PRE-EXISTING base only, and appended rows —
     even one re-using a previously tombstoned key, or duplicating an
     upserted key — survive untouched (APPEND allows duplicates; a
     base-next-to-deltas write would have been retro-killed)."""
-    t = Catalog(str(tmp_path)).table("ma", "shard", merge_on_read=True)
-    t.compact_ratio = 0  # keep deltas live so append really sees them
+    monkeypatch.setattr(tables, "COMPACT_RATIO", 0)  # keep deltas live for the append
+    t = Catalog(str(tmp_path)).table("ma", "shard")
     t.append(spark.createDataFrame(
         [(1, 1, "a"), (2, 2, "b")], "k int, shard int, v string"))
     t.merge(spark, spark.createDataFrame([(3, 3, "c")], "k int, shard int, v string"),
@@ -362,11 +387,11 @@ def test_mor_append_after_deltas_read_ok(spark, tmp_path):
     assert not any(f.get("kind") == "delta" for f in files),         "append must fold deltas so appended rows sit outside the reconcile"
 
 
-def test_mor_overwrite_partitions_folds_deltas_first(spark, tmp_path):
+def test_mor_overwrite_partitions_folds_deltas_first(spark, tmp_path, monkeypatch):
     """partition overwrite on a delta-carrying table must not resurrect
     tombstoned keys or leak _seq/_tomb columns."""
-    t = Catalog(str(tmp_path)).table("mo", "shard", merge_on_read=True)
-    t.compact_ratio = 0  # keep deltas live so the overwrite sees them
+    monkeypatch.setattr(tables, "COMPACT_RATIO", 0)  # keep deltas live for the overwrite
+    t = Catalog(str(tmp_path)).table("mo", "shard")
     t.append(spark.createDataFrame(
         [(1, 1, "a"), (2, 2, "b"), (9, 1, "z")], "k int, shard int, v string"))
     t.merge(spark, spark.createDataFrame([(3, 2, "c")], "k int, shard int, v string"),
@@ -378,14 +403,14 @@ def test_mor_overwrite_partitions_folds_deltas_first(spark, tmp_path):
     assert _rows(out) == [(1, 1, "a"), (5, 2, "NEW")]  # 9 stays dead; shard-2 replaced
 
 
-def test_mor_duplicate_key_in_one_merge_is_deterministic(spark, tmp_path):
+def test_mor_duplicate_key_in_one_merge_is_deterministic(spark, tmp_path, monkeypatch):
     """Two upsert rows for the SAME key in one merge commit share
     (_seq, _tomb); the delta reconcile must pick a deterministic
     winner (max value row) — not whichever row the hash agg saw last —
     or resumes stop being bit-identical."""
+    monkeypatch.setattr(tables, "COMPACT_RATIO", 0)
     for i in range(3):
-        t = Catalog(str(tmp_path / f"s{i}")).table("d", "shard", merge_on_read=True)
-        t.compact_ratio = 0
+        t = Catalog(str(tmp_path / f"s{i}")).table("d", "shard")
         t.append(spark.createDataFrame([(1, 1, "base")], "k int, shard int, v string"))
         dup = spark.createDataFrame(
             [(2, 2, "bb"), (2, 2, "aa"), (2, 2, "zz")], "k int, shard int, v string"
@@ -397,23 +422,16 @@ def test_mor_duplicate_key_in_one_merge_is_deterministic(spark, tmp_path):
 
 def test_catalog_table_flags_are_order_independent(spark, tmp_path):
     """A bare cat.table('x') before the declaring call must not
-    downgrade the table: merge_on_read/partition_col/sort_cols upgrade
-    in place; a conflicting partition_col re-declaration raises."""
+    downgrade the table: partition_col/sort_cols upgrade in place; a
+    conflicting partition_col re-declaration raises."""
     import pytest
 
     cat = Catalog(str(tmp_path))
     bare = cat.table("frontier")                      # careless first touch
-    declared = cat.table("frontier", "shard", merge_on_read=True,
-                         sort_cols=[F.col("v").desc()])
+    declared = cat.table("frontier", "shard", sort_cols=[F.col("v").desc()])
     assert bare is declared
-    assert declared.merge_on_read and declared.partition_col == "shard"
+    assert declared.partition_col == "shard"
     assert declared.sort_cols is not None
-    # first merge on the upgraded handle is MoR (delta file), not CoW
-    declared.compact_ratio = 0  # tiny base would trip the ratio-fold
-    declared.append(spark.createDataFrame([(1, 1, 5)], "k int, shard int, v int"))
-    declared.merge(spark, spark.createDataFrame([(2, 2, 7)], "k int, shard int, v int"),
-                   ["k"])
-    assert any(f.get("kind") == "delta" for f in declared._live_files())
     with pytest.raises(ValueError, match="conflicting"):
         cat.table("frontier", "other_col")
 
@@ -447,9 +465,9 @@ def test_rewrite_small_files_binpacks_per_partition(spark, tmp_path):
     assert t.rewrite_small_files(spark, small_bytes=1 << 20) is None
 
 
-def test_rewrite_small_files_skips_delta_tables_and_big_files(spark, tmp_path):
-    t = Catalog(str(tmp_path)).table("m", "shard", merge_on_read=True)
-    t.compact_ratio = 0
+def test_rewrite_small_files_skips_delta_tables_and_big_files(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(tables, "COMPACT_RATIO", 0)
+    t = Catalog(str(tmp_path)).table("m", "shard")
     t.append(spark.createDataFrame([(1, 1, "a")], "k int, shard int, v string"))
     t.merge(spark, spark.createDataFrame([(2, 1, "b")],
                                          "k int, shard int, v string"), ["k"])
@@ -504,22 +522,33 @@ def test_expire_with_rewrite_bounds_crawl_file_count(
 def test_props_survive_bare_handles(spark, tmp_path):
     """Durable table properties: a bare SnapshotTable handle (fresh
     Catalog — the maintenance-CLI shape) must recover declared
-    merge_on_read / schema_evolving / partition_col / sorted-ness from
-    props.json instead of silently downgrading the table."""
+    schema_evolving / partition_col / sorted-ness from props.json
+    instead of silently downgrading the table. A props.json that still
+    carries the old merge-mode key opens and drops it."""
     from hyperion_crawler_spark.sources.tables import SnapshotTable
 
     cat = Catalog(str(tmp_path))
-    t = cat.table("ev", "shard", merge_on_read=True, schema_evolving=True,
+    t = cat.table("ev", "shard", schema_evolving=True,
                   sort_cols=[F.col("v").desc()])
     t.append(spark.createDataFrame([(1, 1, 5)], "k int, shard int, v int"))
     bare = SnapshotTable(str(tmp_path), "ev")
-    assert bare.merge_on_read and bare.schema_evolving
+    assert bare.schema_evolving
     assert bare.partition_col == "shard" and bare.sorted_declared
     # upgrades through Catalog.table persist too
     cat2 = Catalog(str(tmp_path))
     cat2.table("ev2", "shard")
     cat2.table("ev2", "shard", schema_evolving=True)
     assert SnapshotTable(str(tmp_path), "ev2").schema_evolving
+    # a props.json written while merging on read was a per-table flag
+    import json
+
+    os.makedirs(tmp_path / "old")
+    with open(tmp_path / "old" / "props.json", "w") as f:
+        json.dump({"merge_on_read": True, "schema_evolving": False,
+                   "partition_col": "shard", "sorted": False}, f)
+    assert SnapshotTable(str(tmp_path), "old").partition_col == "shard"
+    with open(tmp_path / "old" / "props.json") as f:
+        assert "merge_on_read" not in json.load(f)
 
 
 def test_rewrite_preserves_evolved_schema_and_skips_sorted(spark, tmp_path):
@@ -551,11 +580,11 @@ def test_rewrite_preserves_evolved_schema_and_skips_sorted(spark, tmp_path):
     assert s.rewrite_small_files(spark, small_bytes=1 << 20) is not None
 
 
-def test_mor_merge_with_nested_map_value_column(spark, tmp_path):
+def test_mor_merge_with_nested_map_value_column(spark, tmp_path, monkeypatch):
     """The deterministic tie-break must exclude NESTED unorderable
     types (array<map>, struct-of-map), not just top-level maps."""
-    t = Catalog(str(tmp_path)).table("nm", "shard", merge_on_read=True)
-    t.compact_ratio = 0
+    monkeypatch.setattr(tables, "COMPACT_RATIO", 0)
+    t = Catalog(str(tmp_path)).table("nm", "shard")
     df = spark.createDataFrame(
         [(1, 1, [{"a": "x"}])],
         "k int, shard int, tags array<map<string,string>>")
@@ -596,15 +625,15 @@ def _referenced(t):
     return out
 
 
-def test_compacting_merge_writes_no_orphan_delta(spark, tmp_path):
+def test_compacting_merge_writes_no_orphan_delta(spark, tmp_path, monkeypatch):
     """r5: a merge that is going to compact (count OR ratio trigger)
     must fold the in-memory batch directly — writing delta files the
     fold commit immediately orphans is pure write amplification. After
     the fold, every parquet file on disk belongs to a committed
     manifest (no instant orphans from this commit)."""
     # ratio trigger: tiny base, one big merge → folds on the spot
-    t = Catalog(str(tmp_path / "r")).table("m9", "shard", merge_on_read=True,
-                                           compact_after=99)
+    monkeypatch.setattr(tables, "COMPACT_AFTER", 99)
+    t = Catalog(str(tmp_path / "r")).table("m9", "shard")
     t.append(spark.createDataFrame([(1, 1, "a"), (2, 2, "b")],
                                    "k int, shard int, v string"))
     assert all("rows" in f for f in t._live_files()), "row stats missing"
@@ -616,11 +645,11 @@ def test_compacting_merge_writes_no_orphan_delta(spark, tmp_path):
     assert sorted(_rows(t.read(spark))) == sorted(
         [(i, i % 8, f"v{i}") for i in range(1, 10)])
 
-    # count trigger: compact_after=2 → second delta commit folds, and
+    # count trigger: COMPACT_AFTER=2 → second delta commit folds, and
     # that commit too must leave no unreferenced files
-    t2 = Catalog(str(tmp_path / "c")).table("m9", "shard", merge_on_read=True,
-                                            compact_after=2)
-    t2.compact_ratio = 0  # isolate the count trigger
+    monkeypatch.setattr(tables, "COMPACT_AFTER", 2)
+    monkeypatch.setattr(tables, "COMPACT_RATIO", 0)  # isolate the count trigger
+    t2 = Catalog(str(tmp_path / "c")).table("m9", "shard")
     t2.append(spark.range(64).select(
         F.col("id").alias("k"),
         F.pmod("id", F.lit(8)).cast("int").alias("shard"),
@@ -638,10 +667,10 @@ def test_compacting_merge_writes_no_orphan_delta(spark, tmp_path):
 def test_small_churn_over_many_shards_appends_delta(spark, tmp_path):
     """The fold rule counts rows, once, before writing: ~500 changed rows
     against a ~3,000-row base spread over 32 shards stay under
-    ``compact_ratio`` and append a delta — even though 32 tiny delta
+    ``COMPACT_RATIO`` and append a delta — even though 32 tiny delta
     files weigh more than 20 % of the base BYTES (per-file parquet
     overhead, not churn). No file is written and then orphaned."""
-    t = Catalog(str(tmp_path)).table("m10", "shard", merge_on_read=True)
+    t = Catalog(str(tmp_path)).table("m10", "shard")
     t.append(spark.range(3000).select(
         F.col("id").alias("k"),
         F.pmod("id", F.lit(32)).cast("int").alias("shard"),
@@ -655,8 +684,8 @@ def test_small_churn_over_many_shards_appends_delta(spark, tmp_path):
     t.merge(spark, src, ["k"])
     delta = [f for f in t._live_files() if f.get("kind") == "delta"]
     assert delta, "sub-ratio churn must append a delta, not fold"
-    assert sum(f["rows"] for f in delta) < t.compact_ratio * 3000
-    assert _file_bytes(t, delta) > t.compact_ratio * _file_bytes(t, base)
+    assert sum(f["rows"] for f in delta) < tables.COMPACT_RATIO * 3000
+    assert _file_bytes(t, delta) > tables.COMPACT_RATIO * _file_bytes(t, base)
     assert _all_parquet(t) == _referenced(t), "orphan files written"
     assert _rows(t.read(spark)) == [
         (k, k % 32, "new" if k % 6 == 0 else "old") for k in range(3000)]
