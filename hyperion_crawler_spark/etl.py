@@ -279,7 +279,9 @@ class ETLPipeline:
         if mode == LoadMode.APPEND:
             table.append(observed)
         elif mode == LoadMode.UPSERT:
-            # eager: the Observation fires once, on the checkpoint job
+            # fenced: a folding merge joins its batch, and Spark 4
+            # Observations break under joins; eager, as a lazy fence
+            # over an observed frame reports a wrong count
             table.merge(self.spark, observed.localCheckpoint(),
                         src.conflict_keys)
         elif mode == LoadMode.INSERT:
@@ -395,4 +397,4 @@ class ETLPipeline:
                                  .withColumn("_new", F.lit(1))))
             cand = latest_per_key(both, lk, oc,
                                   [F.col("_new").asc()]).drop("_new")
-        latest_t.merge(self.spark, cand.localCheckpoint(eager=False), lk)
+        latest_t.merge(self.spark, cand, lk)

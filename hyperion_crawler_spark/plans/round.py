@@ -124,9 +124,6 @@ def init_frontier(spark: SparkSession, cat, cfg: CrawlConfig, seeds: DataFrame) 
         seeds, "url", "image_id", "priority", cfg, [F.col("image_id")],
     )
     current = seen_t.read(spark, version=base.get("seen_filters"))
-    if current is None:
-        current = spark.createDataFrame(
-            [], "shard int, filter_bytes binary, n_items long")
     unseen, filters = probe_and_update(cand, current, cfg)
     rows = (
         unseen.withColumn("status", F.lit("queued"))
@@ -220,8 +217,6 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
     ).localCheckpoint(eager=False)
 
     current_filters = seen_t.read(spark, version=base.get("seen_filters"))
-    if current_filters is None:
-        current_filters = spark.createDataFrame([], "shard int, filter_bytes binary, n_items long")
     unseen, new_filters = probe_and_update(cand, current_filters, cfg)
 
     # --- frontier state transitions ----------------------------------
@@ -258,10 +253,8 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
     retry_rows = res_updates.filter(F.col("status") == "queued")
     terminal_rows = (res_updates.filter(F.col("status") != "queued")
                      .unionByName(excl_updates.select(*FRONTIER_COLS)))
-    # the merge source and delete set are projections of the results,
-    # probe and archive fences, so they get none of their own;
-    # archive_rows is fenced because the merge and the archive append
-    # both read it
+    # a merge reads its source and delete set once; archive_rows is
+    # fenced because the merge and the archive append both read it
     frontier_merge = (
         retry_rows.select(*FRONTIER_COLS)
         .unionByName(new_rows.select(*FRONTIER_COLS))
@@ -390,10 +383,8 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
             prior = phash_t.read(spark, version=base.get("phash_index", 0))
             if prior is not None:
                 new_idx = new_idx.join(prior.select("h"), "h", "left_anti")
-            new_idx = new_idx.select("h", "shard", "image_id") \
-                .localCheckpoint(eager=False)
-            return phash_t.merge(spark, new_idx, ["h"],
-                                 base_version=base.get("phash_index", 0))
+            return phash_t.merge(spark, new_idx.select("h", "shard", "image_id"),
+                                 ["h"], base_version=base.get("phash_index", 0))
 
         def _commit_neardups():
             return neardups_t.append(nd_rows,
@@ -482,7 +473,7 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
             # the queue as usual.
             moved = rescore_frontier_delta(
                 fr_now, known_links, iters=2, weight=cfg.rescore_weight
-            ).select(*FRONTIER_COLS).localCheckpoint(eager=False)
+            ).select(*FRONTIER_COLS)
             versions["frontier"] = frontier_t.merge(
                 spark, moved, ["urlhash"], base_version=versions["frontier"])
         t = _mark("rescore_priority", t)

@@ -44,6 +44,7 @@ import contextlib
 import errno
 import json
 import os
+import shutil
 import time
 import uuid
 
@@ -53,9 +54,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # Merge-on-read tuning, shared by every table (tests monkeypatch these).
-# A merge folds its deltas into fresh base files once the pending delta
-# rows plus its own batch reach COMPACT_RATIO of the base rows, or once
-# it would be the COMPACT_AFTER-th live delta commit (see _merge_delta);
+# A merge folds its deltas into fresh base files once the on-disk
+# pending delta rows reach COMPACT_RATIO of the base rows, or once it
+# would be the COMPACT_AFTER-th live delta commit (see _merge_delta);
 # 0 disables a trigger.
 COMPACT_RATIO = 0.2
 COMPACT_AFTER = 32
@@ -308,7 +309,9 @@ class SnapshotTable:
         directory layout so each data file holds exactly one partition
         value (exact pruning, immune to AQE partition coalescing) while
         the file itself still contains the original column — snapshots
-        are read as plain file lists, no partition discovery needed."""
+        are read as plain file lists, no partition discovery needed.
+        Zero-row files (Spark writes one for an empty unpartitioned
+        ``df``) are removed, so an empty ``df`` returns ``[]``."""
         sub = f"commit-{uuid.uuid4().hex[:12]}"
         absdir = os.path.join(self.dir, "data", sub)
         pc = self.partition_col if (self.partition_col and self.partition_col in df.columns) else None
@@ -345,15 +348,20 @@ class SnapshotTable:
             for fn in sorted(filenames):
                 if not fn.endswith(".parquet"):
                     continue
-                rel = os.path.relpath(os.path.join(dirpath, fn), self.dir)
-                ent: dict = {"path": rel}
-                if pval is not None:
-                    ent["part_min"] = ent["part_max"] = pval
+                path = os.path.join(dirpath, fn)
                 # exact row count from the parquet footer (metadata-only
                 # read): _merge_delta's fold rule reasons in rows
-                ent["rows"] = pq.ParquetFile(
-                    os.path.join(dirpath, fn)).metadata.num_rows
+                rows = pq.ParquetFile(path).metadata.num_rows
+                if not rows:
+                    os.remove(path)
+                    continue
+                ent: dict = {"path": os.path.relpath(path, self.dir),
+                             "rows": rows}
+                if pval is not None:
+                    ent["part_min"] = ent["part_max"] = pval
                 entries.append(ent)
+        if not entries:
+            shutil.rmtree(absdir)
         return entries
 
     # ---- public ops -------------------------------------------------
@@ -449,6 +457,10 @@ class SnapshotTable:
         b = self._read_files(spark, base)
         user_cols = list(b.columns)  # table column order = base order
         winners = self._delta_winners(d, keys)
+        if extra_delta is not None:
+            # read twice below (anti-join keys, then the union): fenced
+            # so the unwritten batch is evaluated once
+            winners = winners.localCheckpoint(eager=False)
         gone = winners.select(*keys)
         delta_bytes = sum(
             os.path.getsize(os.path.join(self.dir, f["path"])) for f in delta)
@@ -700,21 +712,18 @@ class SnapshotTable:
         present in BOTH source and delete_keys is DELETED (the DELETE
         branch wins, as the docstring semantics require).
 
-        Every merge is merge-on-read, in one of three cases:
-
-        * first write — a table with no live files gets the source,
-          minus the delete keys, written as base files;
-        * idle merge — an empty source and delete set commit the
-          carried file list unchanged (an idle round must not rewrite
-          a 10^10-row table);
-        * otherwise ``_merge_delta`` appends one delta batch, or folds
-          the table, deciding which before it writes anything.
+        Every merge is merge-on-read: a table with no live files gets
+        the source, minus the delete keys, written as base files;
+        otherwise ``_merge_delta`` appends one delta batch, or folds the
+        table, deciding which from the manifest's on-disk row counts
+        before it writes anything. Either way the source and delete set
+        are evaluated once. An empty batch writes no file, so an idle
+        merge carries the file list unchanged (an idle round must not
+        rewrite a 10^10-row table).
 
         ``keys`` must be stable across a table's merges (the manifest
-        records them for readers). The source and delete set are read
-        up to twice (the batch count, then the write), so a caller
-        whose frame is costly to recompute, or carries an
-        ``Observation``, fences it (README "Caching").
+        records them for readers): a merge into a table with live
+        deltas under other keys raises ``ValueError``.
         """
         # optimistic-commit loop: compute against the (rebased) base,
         # commit at head+1 via exclusive create; a lost race re-reads
@@ -753,17 +762,19 @@ class SnapshotTable:
         and collapses repeated tombstones of a key, so neither needs an
         anti-join or a distinct here.
 
-        Fold-or-append is decided once, before any file is written, from
-        row counts (every manifest entry carries its footer ``rows``).
-        The merge folds everything into fresh base files when either
-        trigger fires:
+        Fold-or-append is decided before any file is written, from the
+        manifest alone (every entry carries its footer ``rows``), so the
+        batch is read once, by the write. The merge folds everything
+        into fresh base files when either trigger fires:
 
-        * churn — pending delta rows plus this batch reach
-          ``COMPACT_RATIO`` of the base rows, so a fold costs ≤
-          (1 + 1/ratio)× the churn already written: total write
-          amplification stays a constant multiple of churn however big
-          the table. (A count-only trigger rewrites a quiet 10^10-row
-          table every N tiny merges.)
+        * churn — the on-disk pending delta rows reach ``COMPACT_RATIO``
+          of the base rows, so a fold writes ≤ (1 + 1/ratio)× the churn
+          already written plus one batch: total write amplification
+          stays a constant multiple of churn however big the table.
+          The batch is not counted, so a batch that alone reaches the
+          ratio lands as a delta and the next merge folds it. (A
+          count-only trigger rewrites a quiet 10^10-row table every N
+          tiny merges.)
         * commit count — this would be the ``COMPACT_AFTER``-th live
           delta commit; caps read-side delta fan-in for tables whose
           churn rarely reaches the ratio.
@@ -771,15 +782,14 @@ class SnapshotTable:
         A folding commit never references this batch's delta files, so
         it reconciles the unwritten batch directly instead of writing
         files only to orphan them."""
-        # ONE job answers both the idle probe and the churn count: the
-        # union scans the two inputs and its count is exactly
-        # count(source)+count(delete_keys)
-        probe = source.select(F.lit(1).alias("_p"))
-        if delete_keys is not None:
-            probe = probe.unionByName(delete_keys.select(F.lit(1).alias("_p")))
-        n_new = probe.count()
-        if n_new == 0:
-            return self._commit(files, meta, keys=keys, ver=ver)  # idle merge
+        base = [f for f in files if f.get("kind", "base") == "base"]
+        pending = [f for f in files if f.get("kind") == "delta"]
+        # _scan reconciles every live delta by the head's keys, so other
+        # keys would silently re-key the older deltas
+        if pending and set(self._delta_keys(ver - 1)) != set(keys):
+            raise ValueError(
+                f"merge keys {keys} into {self.name!r}: its live deltas "
+                f"are keyed on {self._delta_keys(ver - 1)}")
         # _seq must equal the commit version: a retry after a lost race
         # re-enters with a fresh ver and REWRITES the (O(changed-rows))
         # delta — two writers' deltas then carry distinct, correctly
@@ -798,13 +808,7 @@ class SnapshotTable:
                 .withColumn("_seq", F.lit(seq).cast("long"))
                 .withColumn("_tomb", F.lit(True)))
 
-        base = [f for f in files if f.get("kind", "base") == "base"]
-        pending = [f for f in files if f.get("kind") == "delta"]
-        # (``n_new`` counts every source and delete row, a slight
-        # overestimate of the batch's distinct keys — the fold then
-        # merely fires a touch earlier; the trigger is a heuristic, not
-        # a contract)
-        churn = sum(f["rows"] for f in pending) + n_new
+        churn = sum(f["rows"] for f in pending)
         fold = ((COMPACT_RATIO
                  and churn >= COMPACT_RATIO * sum(f["rows"] for f in base))
                 or (COMPACT_AFTER and len({f["seq"] for f in pending}) + 1

@@ -107,13 +107,14 @@ def _probe_kernel(cfg: CrawlConfig):
     return fn
 
 
-def probe_and_update(candidates: DataFrame, filters: DataFrame, cfg: CrawlConfig
-                     ) -> tuple[DataFrame, DataFrame]:
+def probe_and_update(candidates: DataFrame, filters: DataFrame | None,
+                     cfg: CrawlConfig) -> tuple[DataFrame, DataFrame]:
     """Returns (unseen_candidates, new_filter_deltas).
 
     ``candidates`` must carry (shard, urlhash, url, host, image_id,
     priority) and be pre-deduped within the batch (first-wins — the
-    kernel dedups *across* rounds only). Both results are projections
+    kernel dedups *across* rounds only); ``filters`` None means no seen
+    state yet. Both results are projections
     of one cogroup pass, fenced here with a lazy local checkpoint, so
     splitting by ``kind`` does not recompute the kernel and there is
     nothing for the caller to release. A filter row's ``n_items`` is
@@ -121,6 +122,9 @@ def probe_and_update(candidates: DataFrame, filters: DataFrame, cfg: CrawlConfig
     count without a scan of the unseen rows.
     """
     cand = candidates.select("shard", "urlhash", "url", "host", "image_id", "priority")
+    if filters is None:
+        filters = candidates.sparkSession.createDataFrame(
+            [], "shard int, filter_bytes binary, n_items long")
     out = (
         cand.groupBy("shard")
         .cogroup(filters.select("shard", "filter_bytes", "n_items").groupBy("shard"))

@@ -20,8 +20,7 @@ reads, so an interleaved crawl round builds on the ingested frontier
 instead of orphaning it). A crash between the merges and the
 round-log write replays the batch, and the replay is a no-op by
 construction: every candidate is now seen, so ``probe_and_update``
-emits zero rows and unchanged filters, and the idle merges carry files
-untouched.
+emits zero rows and unchanged filters, and the merges add no rows.
 
 Safe to run CONCURRENTLY with a live crawl (r5): snapshot commits use
 the optimistic protocol (sources/tables.py — exclusive manifest
@@ -62,9 +61,6 @@ def _make_batch(spark: SparkSession, cat, cfg: CrawlConfig):
         cand = canonical_url_rows(
             df, "url", "image_id", "priority", cfg, [F.col("image_id")])
         current = seen_t.read(spark, version=base.get("seen_filters"))
-        if current is None:
-            current = spark.createDataFrame(
-                [], "shard int, filter_bytes binary, n_items long")
         unseen, filters = probe_and_update(cand, current, cfg)
         rows = (unseen.withColumn("status", F.lit("queued"))
                 .withColumn("retry_count", F.lit(0))

@@ -231,6 +231,7 @@ def test_mor_delete_wins_and_reinsert_later(spark, tmp_path):
 
 def test_mor_compaction_folds_deltas(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(tables, "COMPACT_AFTER", 3)
+    monkeypatch.setattr(tables, "COMPACT_RATIO", 0)  # isolate the count trigger
     t = Catalog(str(tmp_path)).table("m3", "shard")
     t.append(spark.createDataFrame([(1, 1, "a")], "k int, shard int, v string"))
     for i in range(2, 5):  # 3 delta commits → third triggers compaction
@@ -247,12 +248,66 @@ def test_mor_compaction_folds_deltas(spark, tmp_path, monkeypatch):
 
 
 def test_mor_idle_merge_carries_files(spark, tmp_path):
-    t = Catalog(str(tmp_path)).table("m4", "shard")
-    t.append(spark.createDataFrame([(1, 1, "a")], "k int, shard int, v string"))
-    before = {f["path"] for f in t._live_files()}
-    t.merge(spark, spark.createDataFrame([], "k int, shard int, v string"), ["k"],
-            delete_keys=spark.createDataFrame([], "k int, shard int"))
-    assert {f["path"] for f in t._live_files()} == before
+    # an unpartitioned empty write leaves a 0-row part file: the merge
+    # must remove it, not orphan it
+    for name, part in (("m4", "shard"), ("m4u", None)):
+        t = Catalog(str(tmp_path)).table(name, part)
+        t.append(spark.createDataFrame([(1, 1, "a")],
+                                       "k int, shard int, v string"))
+        before = {f["path"] for f in t._live_files()}
+        t.merge(spark, spark.createDataFrame([], "k int, shard int, v string"),
+                ["k"], delete_keys=spark.createDataFrame([], "k int, shard int"))
+        assert {f["path"] for f in t._live_files()} == before
+        assert _all_parquet(t) == _referenced(t), "orphan files written"
+
+
+def test_merge_evaluates_its_source_once(spark, tmp_path, monkeypatch):
+    """A merge into a table with live files decides fold-or-append
+    from the manifest, so only its write evaluates the source: once on
+    the delta path, on an idle merge whose source filters every row
+    away, and on a fold. A counting UDF in the source's filter sees
+    each row once."""
+    from pyspark.sql.types import BooleanType
+
+    t = Catalog(str(tmp_path)).table("once", "shard")
+    t.append(spark.range(1000).select(
+        F.col("id").alias("k"), F.pmod("id", F.lit(8)).cast("int").alias("shard")))
+    for keep, fold in ((True, False), (False, False), (True, True)):
+        monkeypatch.setattr(tables, "COMPACT_AFTER", 2 if fold else 32)
+        seen = spark.sparkContext.accumulator(0)
+
+        def _keep(k, keep=keep, seen=seen):
+            seen.add(1)
+            return keep
+
+        kept = F.udf(_keep, BooleanType()).asNondeterministic()
+        src = spark.range(1000, 1010).filter(kept("id")).select(
+            F.col("id").alias("k"), F.pmod("id", F.lit(8)).cast("int").alias("shard"))
+        t.merge(spark, src, ["k"])
+        assert seen.value == 10, f"source evaluated {seen.value / 10:g} times"
+        assert fold != any(f.get("kind") == "delta" for f in t._live_files())
+    assert t.read(spark).count() == 1010
+
+
+def test_merge_rejects_changed_keys(spark, tmp_path):
+    # readers reconcile every live delta by the head's keys, so a merge
+    # under other keys would silently re-key the older deltas
+    import pytest
+
+    t = Catalog(str(tmp_path)).table("kk", "shard")
+    t.append(spark.range(100).select(
+        F.col("id").alias("k"), F.lit(0).cast("long").alias("j"),
+        F.pmod("id", F.lit(4)).cast("int").alias("shard")))
+    one = spark.createDataFrame([(1, 0, 1)], "k long, j long, shard int")
+    t.merge(spark, one, ["k"])
+    ver = t.current_version()
+    with pytest.raises(ValueError, match="keyed on"):
+        t.merge(spark, one, ["k", "j"])
+    assert t.current_version() == ver
+    t.merge(spark, one, ["k"])
+    t.compact(spark)  # no live deltas: new keys are free to start
+    t.merge(spark, one, ["k", "j"])
+    assert t.read(spark).count() == 100
 
 
 def test_mor_read_pruned_reconciles(spark, tmp_path):
@@ -631,7 +686,8 @@ def test_compacting_merge_writes_no_orphan_delta(spark, tmp_path, monkeypatch):
     fold commit immediately orphans is pure write amplification. After
     the fold, every parquet file on disk belongs to a committed
     manifest (no instant orphans from this commit)."""
-    # ratio trigger: tiny base, one big merge → folds on the spot
+    # ratio trigger: tiny base, one big merge lands as a delta (the
+    # batch itself is not counted) → the next merge folds it
     monkeypatch.setattr(tables, "COMPACT_AFTER", 99)
     t = Catalog(str(tmp_path / "r")).table("m9", "shard")
     t.append(spark.createDataFrame([(1, 1, "a"), (2, 2, "b")],
@@ -640,10 +696,13 @@ def test_compacting_merge_writes_no_orphan_delta(spark, tmp_path, monkeypatch):
     t.merge(spark, spark.createDataFrame(
         [(i, i % 8, f"v{i}") for i in range(1, 10)],
         "k int, shard int, v string"), ["k"])
+    assert any(f.get("kind") == "delta" for f in t._live_files())
+    t.merge(spark, spark.createDataFrame([(10, 2, "v10")],
+                                         "k int, shard int, v string"), ["k"])
     assert not any(f.get("kind") == "delta" for f in t._live_files())
     assert _all_parquet(t) == _referenced(t), "orphan files written"
     assert sorted(_rows(t.read(spark))) == sorted(
-        [(i, i % 8, f"v{i}") for i in range(1, 10)])
+        [(i, i % 8, f"v{i}") for i in range(1, 11)])
 
     # count trigger: COMPACT_AFTER=2 → second delta commit folds, and
     # that commit too must leave no unreferenced files
