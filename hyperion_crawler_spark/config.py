@@ -72,10 +72,6 @@ class CrawlConfig:
     max_segment_repeat: int = 0        # same path segment repeated N× (loop signal)
 
 
-def default_config() -> CrawlConfig:
-    return CrawlConfig()
-
-
 def bloom_params(expected_keys_per_shard: int, target_fpr: float = 1e-3) -> tuple[int, int]:
     """Size a shard's Bloom filter: returns (m_bits rounded up to a
     power of two, k hash functions).
@@ -92,6 +88,9 @@ def bloom_params(expected_keys_per_shard: int, target_fpr: float = 1e-3) -> tupl
     m_bits = 1 << max(int(math.ceil(math.log2(m))), 10)
     k = max(1, round(m_bits / n * math.log(2)))
     return m_bits, k
+
+
+_ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_driver_mem() -> str:
@@ -136,6 +135,12 @@ def get_spark(
                 os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Python workers fork from the engine's daemon: it stops every
+        # task from re-reading pyspark.zip (worker_daemon.py). The
+        # daemon starts before any task ships files, so the engine's
+        # own root goes on the workers' path.
+        .config("spark.python.daemon.module", "hyperion_crawler_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _ENGINE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -26,7 +26,7 @@ from dataclasses import dataclass
 from enum import Enum
 from typing import Protocol
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.scalars import clean_numeric, change_amount, trading_value, weekend_roll
@@ -239,8 +239,8 @@ class ETLPipeline:
         src = self.sources[source_name]
         params = params or {}
         # fence the extract exactly like the phase API does: the load
-        # runs up to four actions over the E→T lineage (merge, latest-
-        # slice, quarantine count, quarantine append) and would
+        # runs up to three actions over the E→T lineage (merge, latest-
+        # slice, quarantine append) and would
         # otherwise re-run the extraction per action
         raw = src.extract(self.spark, params).localCheckpoint()
         dim = src.asset_master(self.spark)
@@ -272,8 +272,6 @@ class ETLPipeline:
         # (named accumulators on the plan) instead of separate count()
         # jobs — SURVEY §2.1 S10 mapping of the reference's LoadResult
         # counters (base/loader.py:24-59)
-        from pyspark.sql import Observation
-
         obs = Observation()
         observed = deduped.observe(obs, F.count(F.lit(1)).alias("loaded"))
         if mode == LoadMode.APPEND:
@@ -340,10 +338,15 @@ class ETLPipeline:
             # target and must not reach the side table either
             self._update_latest(src, written if mode == LoadMode.UPDATE else deduped)
 
-        n_quar = quarantine.count() if quarantine is not None else 0
-        # quarantine table mirrors drop-with-warning (transformer.py:86-89)
-        if n_quar:
-            self.cat.table(f"{src.target_table}_quarantine", None).append(quarantine)
+        # quarantine table mirrors drop-with-warning (transformer.py:86-89);
+        # the failed tally rides the append's own scan (an empty batch
+        # writes no file) instead of a count job of its own
+        n_quar = 0
+        if quarantine is not None:
+            qobs = Observation()
+            self.cat.table(f"{src.target_table}_quarantine", None).append(
+                quarantine.observe(qobs, F.count(F.lit(1)).alias("failed")))
+            n_quar = qobs.get["failed"]
         result = LoadResult(loaded=n_valid, skipped=n_skip, failed=n_quar)
         # data-quality gate: the reference declares success-rate ≥ 0.95
         # as a monitoring alert (etl_config.yaml:38-43) but nothing

@@ -199,7 +199,12 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
 
         corpus = read_corpus_for_schedule(spark, corpus_table, scheduled,
                                           corpus_buckets or None)
-    results = fetch_and_validate(scheduled, corpus).localCheckpoint(eager=False)
+    # the schedule is a subset of the frontier, so the frontier's
+    # manifest rows bound it and spare the fetch its broadcast-guard count
+    results = fetch_and_validate(
+        scheduled, corpus,
+        row_bound=frontier_t.manifest_rows(base.get("frontier")),
+    ).localCheckpoint(eager=False)
     fetched = results.filter(F.col("status") == "fetched")
 
     # --- link expansion → new frontier candidates -------------------
@@ -262,25 +267,7 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
     archive_rows = terminal_rows.select(*FRONTIER_COLS) \
         .withColumn("archived_round", F.lit(round_idx)).localCheckpoint(eager=False)
 
-    # --- metrics: ONE scan of the results fence produces BOTH the
-    # per-partition lineage rows (collected — bounded by partition
-    # count) and, summed driver-side, the round totals. This is the
-    # action that materializes the fetch/validate fence, so it runs
-    # alone; the discovery-side counts live in the commit phase below,
-    # overlapped with the results commit.
     t = _mark("plan_build", t)
-    lin_rows = (
-        results.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(
-            F.count("*").alias("urls_scheduled"),
-            F.sum(F.when(F.col("status") == "fetched", 1).otherwise(0)).alias("fetched"),
-            F.sum(F.when(F.col("status") == "failed", 1).otherwise(0)).alias("failed"),
-        ).collect()
-    )
-    n_sched = sum(r["urls_scheduled"] for r in lin_rows)
-    n_fetched = sum(r["fetched"] for r in lin_rows)
-    n_failed = sum(r["failed"] for r in lin_rows)
-    t = _mark("compute_metrics", t)
 
     # --- optional image near-dup pass (cfg.image_neardup_dist) ------
     # This round's fetched pHashes pair against each other AND the
@@ -323,13 +310,6 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
         n_neardups = nd_rows.count()
 
     # --- commits (snapshot per table; round commit = checkpoint) ----
-    # Independent tables commit IN PARALLEL: every input fence is
-    # materialized above, so the five jobs only scan fences, and Spark
-    # schedules them concurrently across the executor cores a single
-    # sequential job leaves idle (measured ~1.6x on the full round at
-    # sf0.1). Each table still gets exactly one deterministic commit —
-    # resume/redo semantics are untouched; the optimistic commit
-    # protocol makes concurrent versioning safe by construction.
     from concurrent.futures import ThreadPoolExecutor
 
     versions = {}
@@ -364,7 +344,7 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
             unseen.select("urlhash", "shard"),
             base_version=base.get("seen_exact", 0))
 
-    jobs = {"frontier": _commit_frontier,
+    jobs = {"results": _commit_results, "frontier": _commit_frontier,
             "archive": _commit_archive, "seen_filters": _commit_seen}
     if cfg.exact_seen_shadow:
         jobs["seen_exact"] = _commit_seen_exact
@@ -393,34 +373,40 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
 
         jobs["phash_index"] = _commit_phash_index
         jobs["image_neardups"] = _commit_neardups
-    with ThreadPoolExecutor(max_workers=1 + len(jobs)) as pool:
-        # the results commit only scans the results fence (materialized
-        # by lin_rows above), so it runs IN PARALLEL with the discovery-
-        # side aggregate. That aggregate is the barrier that materializes
-        # every fence the remaining commits share (cand, the probe
-        # output, archive_rows): n_arch is never read, it is there so
-        # archive_rows exists before the frontier merge and the archive
-        # append both read it. (r7 note: submitting the frontier merge —
-        # the commit phase's long pole — ahead of this barrier was
-        # measured and NOT kept: both then compute the same
-        # un-materialized shared partitions concurrently and the
-        # duplicated work beat the overlap, 6.7 → 7.7 s commit phase.)
-        fut_results = pool.submit(_commit_results)
-        mrow = (cand.agg(F.count("*").alias("n_cand"))
-                .crossJoin(new_filters.agg(F.sum("n_items").alias("n_unseen")))
-                .crossJoin(archive_rows.agg(F.count("*").alias("n_arch"))).first())
-        n_cand, n_unseen = mrow["n_cand"], mrow["n_unseen"] or 0
+    # The one barrier: a single aggregate over the union of the fences
+    # the parallel commits share, which also yields the round's totals.
+    # Its scan materializes results, cand, the probe output and
+    # archive_rows, so every commit below only scans fences. (An
+    # Observation on the results append would spare the results branch,
+    # but under AQE it loses its value when an idle round's results are
+    # empty. r7 note: submitting the frontier merge — the commit phase's
+    # long pole — ahead of this barrier was measured and NOT kept: both
+    # then compute the same un-materialized shared partitions
+    # concurrently and the duplicated work beat the overlap, 6.7 → 7.7 s
+    # commit phase.)
+    def _is(status):
+        return (F.col("status") == status).cast("long").alias(status)
+
+    shared = (results.select(F.lit(1).alias("scheduled"), _is("fetched"), _is("failed"))
+              .unionByName(cand.select(F.lit(1).alias("discovered")),
+                           allowMissingColumns=True)
+              .unionByName(new_filters.select(F.col("n_items").alias("new_urls")),
+                           allowMissingColumns=True)
+              .unionByName(archive_rows.select(F.lit(1).alias("archived")),
+                           allowMissingColumns=True))
+    row = shared.agg(*[F.sum(c).alias(c) for c in shared.columns]).first()
+    n = {c: int(row[c] or 0) for c in shared.columns}
+    # Independent tables commit IN PARALLEL: Spark schedules the jobs
+    # concurrently across the executor cores a single sequential job
+    # leaves idle (measured ~1.6x on the full round at sf0.1). Each
+    # table still gets exactly one deterministic commit — resume/redo
+    # semantics are untouched; the optimistic commit protocol makes
+    # concurrent versioning safe by construction.
+    with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
         futs = {name: pool.submit(fn) for name, fn in jobs.items()}
-        versions["results"] = fut_results.result()
         for name, fut in futs.items():
             versions[name] = fut.result()
     t = _mark("commit_tables", t)
-    lineage = spark.createDataFrame(
-        [(round_idx, r["partition_id"], "success", r["urls_scheduled"],
-          r["fetched"], r["failed"], int(n_cand - n_unseen))
-         for r in lin_rows],
-        "round int, partition_id int, status string, urls_scheduled long, "
-        "fetched long, failed long, deduped long")
     if cfg.rescore_every:
         # Incremental fetched-source set (seen-filter pattern): each
         # round APPENDS its fetched URLs (a URL is fetched in exactly
@@ -490,26 +476,30 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
             versions["seen_filters"] = fv
         t = _mark("fold_seen", t)
     # task-log timing (reference CrawlerTaskLog start/end/execution_time,
-    # api/src/models/task_log.py:21-23): round wall time + the per-phase
-    # seconds measured so far, stamped into the lineage row at append
-    # time. Lineage is operational telemetry — it is NOT part of the
-    # bit-identical resume contract (test_resume compares frontier/
-    # archive/seen/results, never lineage).
+    # api/src/models/task_log.py:21-23): one lineage row per round with
+    # its totals, wall time and the per-phase seconds measured so far,
+    # built JVM-side (no Python task). Lineage is operational telemetry
+    # — it is NOT part of the bit-identical resume contract (test_resume
+    # compares frontier/archive/seen/results, never lineage).
     import json as _json
 
     exec_time = round(time.perf_counter() - t_round0, 3)
-    lineage_row = (lineage
-                   .withColumn("execution_time", F.lit(float(exec_time)))
-                   .withColumn("params", F.lit(_json.dumps(
-                       {"round": round_idx, "phase_seconds": timing},
-                       sort_keys=True))))
+    lineage_row = spark.range(1).select(
+        F.lit(round_idx).alias("round"),
+        F.lit("success").alias("status"),
+        *[F.lit(v).cast("long").alias(c) for c, v in (
+            ("urls_scheduled", n["scheduled"]), ("fetched", n["fetched"]),
+            ("failed", n["failed"]), ("deduped", n["discovered"] - n["new_urls"]))],
+        F.lit(float(exec_time)).alias("execution_time"),
+        F.lit(_json.dumps({"round": round_idx, "phase_seconds": timing},
+                          sort_keys=True)).alias("params"))
     versions["lineage"] = lineage_t.append(lineage_row, base_version=base.get("lineage", 0))
     t = _mark("write_lineage", t)
     cat.commit_round(round_idx, versions)
     out = {
-        "round": round_idx, "scheduled": n_sched, "fetched": n_fetched,
-        "failed": n_failed, "discovered": n_cand, "new_urls": n_unseen,
-        "deduped": n_cand - n_unseen, "timing": timing,
+        "round": round_idx, "scheduled": n["scheduled"], "fetched": n["fetched"],
+        "failed": n["failed"], "discovered": n["discovered"], "new_urls": n["new_urls"],
+        "deduped": n["discovered"] - n["new_urls"], "timing": timing,
     }
     if cfg.image_neardup_dist > 0:
         out["image_neardups"] = n_neardups

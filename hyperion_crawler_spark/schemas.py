@@ -84,14 +84,14 @@ RESULTS = T.StructType([
 ])
 
 # Mirrors CrawlerTaskLog fields (task_log.py:11-46) + LoadResult tallies
-# (base/loader.py:24-59), one row per (round, partition).
+# (base/loader.py:24-59), one row per round.
 LINEAGE = T.StructType([
     T.StructField("round", T.IntegerType(), False),
-    T.StructField("partition_id", T.IntegerType(), False),
     T.StructField("status", T.StringType(), False),
     T.StructField("urls_scheduled", T.LongType(), False),
     T.StructField("fetched", T.LongType(), False),
     T.StructField("failed", T.LongType(), False),
     T.StructField("deduped", T.LongType(), False),
+    T.StructField("execution_time", T.DoubleType(), False),
     T.StructField("params", T.StringType(), True),
 ])

@@ -125,6 +125,14 @@ def _exclusive_write_json(path: str, obj) -> None:
         os.unlink(tmp)
 
 
+def _footer_schema(path: str) -> T.StructType:
+    """The schema Spark writes into the footer of every parquet file it
+    writes, read with pyarrow (no Spark job)."""
+    meta = pq.read_metadata(path).metadata
+    return T.StructType.fromJson(
+        json.loads(meta[b"org.apache.spark.sql.parquet.row.metadata"]))
+
+
 class SnapshotTable:
     def __init__(self, root: str, name: str, partition_col: str | None = None,
                  sort_cols: list | None = None, schema_evolving: bool = False,
@@ -368,6 +376,12 @@ class SnapshotTable:
     def is_empty(self) -> bool:
         return not self._live_files()
 
+    def manifest_rows(self, version: int | None = None) -> int:
+        """Upper bound on the rows a read of ``version`` returns, from
+        the manifest's footer row counts with no job: a delta's upserts
+        replace base rows and its tombstones add none."""
+        return sum(f["rows"] for f in self._live_files(version))
+
     def _read_files(self, spark: SparkSession, files: list[dict]) -> DataFrame:
         # mergeSchema (only for tables declared ``schema_evolving``): a
         # table whose writer gained columns (e.g. the lineage tables'
@@ -377,12 +391,15 @@ class SnapshotTable:
         # resolve. Scoped, not global — the hot crawl tables never
         # drift and must not pay an all-footer merge per scan (Iceberg
         # carries the schema in table metadata instead; this is the
-        # sandbox analog).
+        # sandbox analog). Every other read takes its schema from the
+        # first file's footer, so Spark runs no schema-inference job.
+        paths = [os.path.join(self.dir, f["path"]) for f in files]
         reader = spark.read
         if self.schema_evolving:
             reader = reader.option("mergeSchema", "true")
-        return reader.parquet(
-            *[os.path.join(self.dir, f["path"]) for f in files])
+        else:
+            reader = reader.schema(_footer_schema(paths[0]))
+        return reader.parquet(*paths)
 
     def _delta_winners(self, d: DataFrame, keys: list[str]) -> DataFrame:
         """Newest row per key among DELTA rows only (tombstone beats
@@ -518,8 +535,7 @@ class SnapshotTable:
         _, hit = self._prune(part_values, files) if part_values else ([], [])
         if not hit:
             bases = [f for f in files if f.get("kind", "base") == "base"] or files
-            schema = spark.read.parquet(os.path.join(self.dir, bases[0]["path"])).schema
-            empty = spark.createDataFrame([], schema)
+            empty = self._read_files(spark, bases[:1]).limit(0)
             return empty.drop("_seq", "_tomb")
         return self._scan(spark, hit, version)
 

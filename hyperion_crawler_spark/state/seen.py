@@ -56,10 +56,6 @@ PROBE_OUT_SCHEMA = (
 )
 
 
-def empty_filter(cfg: CrawlConfig) -> bytes:
-    return bytes(cfg.bloom_bits_per_shard // 8)
-
-
 def _probe_kernel(cfg: CrawlConfig):
     m, k = cfg.bloom_bits_per_shard, cfg.bloom_k
 

@@ -359,3 +359,42 @@ def test_generators_read_the_checkpoint_fence(spark, monkeypatch):
                 node = node.children().apply(0)
             assert node.getClass().getSimpleName() == "RDDScanExec", \
                 f"{name}: Generate reads {node.nodeName()}, not the checkpoint"
+
+
+# Spark jobs of round 1 on the shared fixture (crawl_cfg, local[8]).
+ROUND_JOBS = 25
+
+
+def test_round_runs_its_job_budget_and_one_lineage_row(spark, fixture_dfs,
+                                                       crawl_cfg, tmp_path):
+    """A crawl round runs only the jobs its work needs: no job that only
+    counts rows or infers a schema, and one barrier aggregate that also
+    yields the round's totals. The Spark job count of round 1 on the
+    shared fixture is pinned, and the round writes one lineage row
+    whose totals equal the returned dict."""
+    from hyperion_crawler_spark.plans.loop import run_crawl
+    from hyperion_crawler_spark.plans.round import run_round
+    from hyperion_crawler_spark.sources.tables import Catalog
+
+    store = str(tmp_path / "store")
+    run_crawl(spark, store, crawl_cfg, fixture_dfs["corpus"],
+              fixture_dfs["links"], fixture_dfs["robots"],
+              fixture_dfs["seeds"], n_rounds=0)
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    out = run_round(spark, Catalog(store, writer="crawl"), crawl_cfg, 1,
+                    fixture_dfs["corpus"], fixture_dfs["links"],
+                    fixture_dfs["robots"])
+    bus.waitUntilEmpty()
+    jobs = set(sc.statusTracker().getJobIdsForGroup(None)) - before
+    assert len(jobs) == ROUND_JOBS, f"round 1 ran {len(jobs)} Spark jobs"
+
+    lineage = Catalog(store).table("lineage", "round").read(spark).collect()
+    assert len(lineage) == 1
+    row = lineage[0]
+    assert (row["round"], row["status"]) == (1, "success")
+    assert out["scheduled"] > 0 and out["fetched"] > 0
+    assert (row["urls_scheduled"], row["fetched"], row["failed"], row["deduped"]) \
+        == (out["scheduled"], out["fetched"], out["failed"], out["deduped"])
