@@ -135,6 +135,10 @@ def get_spark(
                 os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # generated-class cache (static, default 100 entries): one crawl
+        # round generates more than 100 classes, so a smaller cache
+        # evicts them and every round compiles them again
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         # Python workers fork from the engine's daemon: it stops every
         # task from re-reading pyspark.zip (worker_daemon.py). The
         # daemon starts before any task ships files, so the engine's

@@ -30,7 +30,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.scalars import clean_numeric, change_amount, trading_value, weekend_roll
-from .operators.relational import first_wins_dedup, lookup_or_create
+from .operators.relational import (first_wins_dedup, lookup_or_create,
+                                   price_validity_predicate)
 from .sources.tables import Catalog
 
 
@@ -142,13 +143,7 @@ class MarketDataSource:
             .withColumn("trading_value", trading_value(F.col("close"), F.col("volume")))
             .withColumn("trade_date", weekend_roll(F.col("trade_date")))
         )
-        # P7 validity gate (transformer.py:197-231)
-        valid_pred = (
-            F.col("close").isNotNull()
-            & (F.col("high") >= F.greatest("open", "low", "close"))
-            & (F.col("low") <= F.least("open", "high", "close"))
-            & (F.col("volume") >= 0)
-        )
+        valid_pred = price_validity_predicate()
         valid = derived.filter(valid_pred)
         quarantine = derived.filter(~valid_pred)
         # J4 lookup-or-create with deterministic generated id

@@ -72,15 +72,6 @@ def consensus_histogram(df: DataFrame, key: str, rating: Column,
     return df.select(key, r).groupBy(key).agg(*aggs)
 
 
-def fk_validity_split(fact: DataFrame, dim: DataFrame, key: str) -> tuple[DataFrame, DataFrame]:
-    """J3/P8 — split facts into (valid, quarantine) by FK existence.
-    The reference checks per-row with one SELECT each
-    (api/src/etl/krx/loader.py:188-192); here it's one semi/anti join
-    pair sharing a broadcast of the dim keys."""
-    dk = F.broadcast(dim.select(key).distinct())
-    return fact.join(dk, key, "left_semi"), fact.join(dk, key, "left_anti")
-
-
 def lookup_or_create(facts: DataFrame, dim: DataFrame, join_keys: list[str],
                      id_col: str, create_id: Column) -> DataFrame:
     """J4 — left-join a dimension; generate a deterministic id on miss

@@ -10,12 +10,12 @@ changes.
 
 Layout per table::
 
-    <root>/<name>/data/commit-<ver>-.../part-*.parquet   # written once
-    <root>/<name>/snapshots/v<ver>.json                  # atomic rename
+    <root>/<name>/data/commit-<id>/[_pv=<v>/]part-*.parquet  # written once
+    <root>/<name>/snapshots/v<ver>.json                     # exclusive link
 
 A manifest lists live files plus per-file min/max stats of the table's
-partition column (collected from parquet footers via pyarrow — the
-analog of Iceberg manifest file stats) and footer row counts. Every
+partition column and row counts, both reported by the task that wrote
+the file (the analog of Iceberg manifest file stats). Every
 ``merge`` is merge-on-read (Iceberg v2): it appends one delta batch of
 upserts and delete-key tombstones and carries every base file by
 reference; readers reconcile newest-wins per key, and a churn- or
@@ -23,10 +23,15 @@ count-triggered fold rewrites base files. This is what keeps a
 per-round MERGE from rewriting a 10^10-row frontier (SURVEY §7 "what's
 hard" #3).
 
-Crash safety: data files are written first, the manifest rename is the
-commit point. A kill between the two leaves orphan data that no
-manifest references — invisible to readers, so resume sees the last
-complete snapshot (north_rule checkpoint clause). Mirrors the
+Crash safety: data files are written first, the manifest link is the
+commit point. The write tasks create each data file at its final path
+in a fresh commit directory with pyarrow (no Hadoop output committer,
+``_temporary`` rename, ``_SUCCESS`` marker or ``.crc`` side file): no
+reader can see a file until a manifest names it. A kill between the
+two, or a failed task attempt, leaves orphan data that no manifest
+references — invisible to readers, so resume sees the last complete
+snapshot (north_rule checkpoint clause), and ``expire_snapshots``
+sweeps it. Mirrors the
 reference's commit-or-rollback batching
 (/root/reference/api/src/etl/krx/loader.py:139-161: commit per batch,
 rollback on error).
@@ -42,13 +47,17 @@ from __future__ import annotations
 
 import contextlib
 import errno
+import itertools
 import json
 import os
-import shutil
 import time
 import uuid
+from urllib.parse import quote
 
+import pyarrow as pa
 import pyarrow.parquet as pq
+from pyarrow.compute import run_end_encode
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -126,11 +135,129 @@ def _exclusive_write_json(path: str, obj) -> None:
 
 
 def _footer_schema(path: str) -> T.StructType:
-    """The schema Spark writes into the footer of every parquet file it
-    writes, read with pyarrow (no Spark job)."""
+    """The Spark schema in the footer of every data file, read with
+    pyarrow (no Spark job)."""
     meta = pq.read_metadata(path).metadata
-    return T.StructType.fromJson(
-        json.loads(meta[b"org.apache.spark.sql.parquet.row.metadata"]))
+    return T.StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+
+
+# Footer keys Spark's own parquet writer sets. Spark's reader takes a
+# file's schema from the first (so mergeSchema and _footer_schema see
+# the exact Spark types), and with the second reads dates and
+# timestamps as proleptic Gregorian, which is what pyarrow writes.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+_SPARK_VERSION_KEY = b"org.apache.spark.version"
+# Buffered bytes per row group: Spark's parquet block size.
+_ROW_GROUP_BYTES = 128 << 20
+
+
+def _varint(n: int) -> bytes:
+    out = bytearray()
+    while n > 0x7F:
+        out.append(n & 0x7F | 0x80)
+        n >>= 7
+    out.append(n)
+    return bytes(out)
+
+
+def _add_footer_metadata(path: str, kv: dict[bytes, bytes]) -> None:
+    """Set the key-value metadata of a parquet file that has none, in
+    place. pyarrow writes a schema's metadata only together with its
+    ``ARROW:schema`` key, a base64 copy of the whole schema that would
+    make this store's small files a third larger, so the writer stores
+    no metadata and the footer gets the Spark keys here.
+
+    The footer is a thrift compact-protocol ``FileMetaData`` struct
+    ending in its stop byte. Field 5 (``key_value_metadata``,
+    list<KeyValue>) goes just before that byte, with a long-form field
+    header (type, then the zigzag id), which thrift readers accept after
+    any other field. The data pages do not move."""
+    entries = b"".join(
+        b"\x18" + _varint(len(k)) + k + b"\x18" + _varint(len(v)) + v + b"\x00"
+        for k, v in kv.items())
+    n = len(kv)
+    field = (b"\x09\x0a"
+             + (bytes([n << 4 | 0x0C]) if n < 15 else b"\xfc" + _varint(n))
+             + entries)
+    with open(path, "r+b") as f:
+        f.seek(-8, os.SEEK_END)
+        size = int.from_bytes(f.read(4), "little")
+        start = f.seek(-8 - size, os.SEEK_END)
+        footer = f.read(size)
+        if footer[-1:] != b"\x00":
+            raise ValueError(f"{path}: footer does not end a thrift struct")
+        footer = footer[:-1] + field + b"\x00"
+        f.seek(start)
+        f.write(footer + len(footer).to_bytes(4, "little") + b"PAR1")
+        f.truncate()
+
+
+# What the write kernel yields per file.
+_WRITTEN = pa.schema([("path", pa.string()), ("rows", pa.int64()),
+                      ("pv", pa.int64())])
+
+
+def _file_writer(table_dir: str, commit_dir: str, part_col: str | None,
+                 with_stats: bool, kv: dict[bytes, bytes]):
+    """``mapInArrow`` kernel for ``SnapshotTable._write_data``: its
+    input is sorted by ``part_col`` within the task, and each run of
+    one value is written as one snappy parquet file
+    ``<commit_dir>/_pv=<value>/part-<partition>-<attempt>.parquet``
+    (``part_col`` None: one file per task in ``commit_dir``). Yields
+    one ``(path, rows, pv)`` row per file, the path relative to
+    ``table_dir``, and ``pv`` the partition value when ``with_stats``
+    (an integral partition column), else null. Names carry the task's
+    attempt id, so a retried attempt never writes over another's file."""
+
+    def runs(batches):
+        for b in batches:
+            if not b.num_rows:
+                continue
+            if part_col is None:
+                yield None, b
+                continue
+            encoded = run_end_encode(b.column(part_col))
+            start = 0
+            for value, end in zip(encoded.values.to_pylist(),
+                                  encoded.run_ends.to_pylist()):
+                yield value, b.slice(start, end - start)
+                start = end
+
+    def kernel(batches):
+        ctx = TaskContext.get()
+        name = f"part-{ctx.partitionId():05d}-{ctx.taskAttemptId()}.parquet"
+        for value, run in itertools.groupby(runs(batches), key=lambda r: r[0]):
+            rel = (os.path.join(commit_dir, name) if part_col is None else
+                   os.path.join(commit_dir, f"_pv={quote(str(value), safe='')}", name))
+            path = os.path.join(table_dir, rel)
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            rows = _write_run(path, (piece for _, piece in run))
+            _add_footer_metadata(path, kv)
+            yield pa.RecordBatch.from_pydict(
+                {"path": [rel], "rows": [rows], "pv": [value if with_stats else None]},
+                schema=_WRITTEN)
+
+    return kernel
+
+
+def _write_run(path: str, pieces) -> int:
+    """Write the batches ``pieces`` (one schema, at least one) to one
+    parquet file, one row group per ``_ROW_GROUP_BYTES`` buffered;
+    return the row count."""
+    first = next(pieces)
+    rows, buf, buffered = 0, [], 0
+    with pq.ParquetWriter(path, first.schema, compression="snappy",
+                          store_schema=False) as writer:
+        for piece in itertools.chain([first], pieces):
+            buf.append(piece)
+            buffered += piece.nbytes
+            rows += piece.num_rows
+            if buffered >= _ROW_GROUP_BYTES:
+                writer.write_table(pa.Table.from_batches(buf))
+                buf, buffered = [], 0
+        if buf:
+            writer.write_table(pa.Table.from_batches(buf))
+    return rows
 
 
 class SnapshotTable:
@@ -311,65 +438,44 @@ class SnapshotTable:
     # ---- data writing ---------------------------------------------
     def _write_data(self, df: DataFrame) -> list[dict]:
         """Write df under a fresh commit dir; return file entries with
-        exact partition-value stats (Iceberg identity-partition analog).
+        exact row counts and partition-value stats (Iceberg
+        identity-partition analog).
 
-        The partition column is duplicated into a ``_pv=<value>``
-        directory layout so each data file holds exactly one partition
-        value (exact pruning, immune to AQE partition coalescing) while
-        the file itself still contains the original column — snapshots
-        are read as plain file lists, no partition discovery needed.
-        Zero-row files (Spark writes one for an empty unpartitioned
-        ``df``) are removed, so an empty ``df`` returns ``[]``."""
+        One Spark action: ``repartition(pc)`` puts every partition
+        value in exactly one task (one file per value, immune to AQE
+        partition coalescing), ``sortWithinPartitions(pc, *sort_cols)``
+        makes each value one run in its task's stream, and an Arrow
+        kernel (``_file_writer``) writes each run as one parquet file
+        under ``_pv=<value>/`` and returns its ``(path, rows, value)``.
+        The file keeps the partition column, so snapshots are read as
+        plain file lists with no partition discovery. An unpartitioned
+        ``df`` gets one file per non-empty task.
+
+        Files go straight to their final names: the manifest that names
+        them is the commit point, so a failed task attempt's partial
+        file is an orphan like a crashed commit's, and nothing is
+        renamed, listed or re-read. An empty ``df`` writes no file and
+        creates no directory, and returns ``[]``."""
         sub = f"commit-{uuid.uuid4().hex[:12]}"
-        absdir = os.path.join(self.dir, "data", sub)
         pc = self.partition_col if (self.partition_col and self.partition_col in df.columns) else None
-        sort_exprs = self.sort_cols or None
+        sort_exprs = list(self.sort_cols or [])
         if pc:
-            # repartition on the partition value first: otherwise every
-            # writer task fans out into every _pv dir and a 32-shard
-            # table gets tasks×shards tiny files (measured 2.4× slower
-            # end-to-end round at 100k URLs). One shuffle → each _pv
-            # lands in exactly one task → one file per partition value.
-            # (At real scale cap file size with
-            # spark.sql.files.maxRecordsPerFile / repartitionByRange —
+            # (At real scale cap file size with repartitionByRange —
             # Iceberg's write.target-file-size analog.)
-            # Then sort by the WRITER's partition column first:
-            # FileFormatWriter inserts its own (non-stable) sort on _pv
-            # when the incoming order doesn't already lead with it,
-            # which would destroy the secondary sort-order.
-            out = df.withColumn("_pv", F.col(pc)).repartition(F.col("_pv"))
-            out = out.sortWithinPartitions("_pv", *sort_exprs) if sort_exprs \
-                else out.sortWithinPartitions("_pv")
-            out.write.mode("overwrite").partitionBy("_pv").parquet(absdir)
+            out = df.repartition(F.col(pc)).sortWithinPartitions(pc, *sort_exprs)
         else:
             out = df.sortWithinPartitions(*sort_exprs) if sort_exprs else df
-            out.write.mode("overwrite").parquet(absdir)
+        with_stats = bool(pc) and isinstance(df.schema[pc].dataType, T.IntegralType)
+        kernel = _file_writer(self.dir, os.path.join("data", sub), pc, with_stats, {
+            _SPARK_SCHEMA_KEY: df.schema.json().encode(),
+            _SPARK_VERSION_KEY: df.sparkSession.version.encode()})
+        written = out.mapInArrow(kernel, "path string, rows long, pv long").collect()
         entries: list[dict] = []
-        for dirpath, _dirnames, filenames in sorted(os.walk(absdir)):
-            pval: int | None = None
-            base = os.path.basename(dirpath)
-            if base.startswith("_pv="):
-                try:
-                    pval = int(base[4:])
-                except ValueError:
-                    pval = None
-            for fn in sorted(filenames):
-                if not fn.endswith(".parquet"):
-                    continue
-                path = os.path.join(dirpath, fn)
-                # exact row count from the parquet footer (metadata-only
-                # read): _merge_delta's fold rule reasons in rows
-                rows = pq.ParquetFile(path).metadata.num_rows
-                if not rows:
-                    os.remove(path)
-                    continue
-                ent: dict = {"path": os.path.relpath(path, self.dir),
-                             "rows": rows}
-                if pval is not None:
-                    ent["part_min"] = ent["part_max"] = pval
-                entries.append(ent)
-        if not entries:
-            shutil.rmtree(absdir)
+        for path, rows, pval in sorted(written):
+            ent: dict = {"path": path, "rows": rows}
+            if pval is not None:
+                ent["part_min"] = ent["part_max"] = pval
+            entries.append(ent)
         return entries
 
     # ---- public ops -------------------------------------------------
@@ -1062,7 +1168,7 @@ class SnapshotTable:
             for fn in filenames:
                 p = os.path.join(dirpath, fn)
                 if os.path.relpath(p, self.dir) not in live_files:
-                    os.remove(p)              # orphan / expired data or _SUCCESS
+                    os.remove(p)              # orphan or expired data
                     removed_files += 1
             if dirpath != data_root and not os.listdir(dirpath):
                 os.rmdir(dirpath)
@@ -1303,7 +1409,8 @@ class Catalog:
         reads and writes to these versions orphans that attempt's files
         so the redo is exact (north_rule: resume bit-identically).
         Tables never checkpointed map to 0 (empty baseline)."""
+        rounds = self.completed_rounds()
         base: dict[str, int] = {}
-        for r in sorted(self.completed_rounds()):
-            base.update(self.completed_rounds()[r])
+        for r in sorted(rounds):
+            base.update(rounds[r])
         return base

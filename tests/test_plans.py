@@ -398,3 +398,39 @@ def test_round_runs_its_job_budget_and_one_lineage_row(spark, fixture_dfs,
     assert out["scheduled"] > 0 and out["fetched"] > 0
     assert (row["urls_scheduled"], row["fetched"], row["failed"], row["deduped"]) \
         == (out["scheduled"], out["fetched"], out["failed"], out["deduped"])
+
+
+def _compiled_classes(spark) -> int:
+    """Classes Janino has compiled in this JVM (CodegenMetrics)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_repeated_round_reuses_generated_classes(spark, fixture_dfs,
+                                                 crawl_cfg, tmp_path):
+    """One crawl round generates more classes than Spark's default
+    code-generation cache holds (100), so a second round would compile
+    them again. ``get_spark`` sizes the cache to hold a round: the same
+    round run again, on a restored copy of the store, compiles almost
+    nothing."""
+    import shutil
+
+    from hyperion_crawler_spark.plans.loop import run_crawl
+    from hyperion_crawler_spark.plans.round import run_round
+    from hyperion_crawler_spark.sources.tables import Catalog
+
+    store, copy = str(tmp_path / "store"), str(tmp_path / "copy")
+    run_crawl(spark, store, crawl_cfg, fixture_dfs["corpus"],
+              fixture_dfs["links"], fixture_dfs["robots"],
+              fixture_dfs["seeds"], n_rounds=0)
+    shutil.copytree(store, copy)
+    compiled = []
+    for _ in range(2):
+        shutil.rmtree(store)
+        shutil.copytree(copy, store)
+        before = _compiled_classes(spark)
+        run_round(spark, Catalog(store, writer="crawl"), crawl_cfg, 1,
+                  fixture_dfs["corpus"], fixture_dfs["links"],
+                  fixture_dfs["robots"])
+        compiled.append(_compiled_classes(spark) - before)
+    assert compiled[1] < 10, f"classes compiled per run: {compiled}"

@@ -1,6 +1,7 @@
 """SnapshotTable: append / merge / overwrite-partitions / time travel /
 file pruning / crash invisibility."""
 
+import json
 import os
 
 import pyarrow.parquet as pq
@@ -748,3 +749,81 @@ def test_small_churn_over_many_shards_appends_delta(spark, tmp_path):
     assert _all_parquet(t) == _referenced(t), "orphan files written"
     assert _rows(t.read(spark)) == [
         (k, k % 32, "new" if k % 6 == 0 else "old") for k in range(3000)]
+
+
+_ALL_TYPES = ("k long, shard int, x double, ok boolean, s string, b binary, "
+              "d date, ts timestamp, amt decimal(12,3), tags array<string>, "
+              "attrs map<string,int>, st struct<a:int,b:string>")
+
+
+def _typed_frame(spark):
+    import datetime
+    import decimal
+
+    rows = []
+    for i in range(40):
+        if i % 7 == 0:  # a row of nulls in every partition value
+            rows.append((i, i % 4) + (None,) * 10)
+            continue
+        rows.append((
+            i, i % 4, i / 3, i % 2 == 0, f"s{i}", bytes([i, 0, 255]),
+            datetime.date(2020, 1, 1) + datetime.timedelta(days=i),
+            datetime.datetime(2021, 3, 4, 5, 6, 7, 890123) + datetime.timedelta(hours=i),
+            decimal.Decimal(i * 1001) / 1000, [f"t{i}", None],
+            {"a": i, "b": None}, (i, None if i % 3 else f"b{i}")))
+    return spark.createDataFrame(rows, _ALL_TYPES)
+
+
+def test_write_path_fidelity(spark, tmp_path):
+    """Every column type the engine stores round-trips through the
+    table write: rows read back equal, every file's footer carries the
+    frame's Spark schema and its row count, a partitioned write holds
+    one file per partition value with exact stats, nothing but the data
+    files lands under ``data/``, and an empty frame writes nothing."""
+    df = _typed_frame(spark)
+    cat = Catalog(str(tmp_path))
+    for name, part in (("typed_p", "shard"), ("typed_u", None)):
+        t = cat.table(name, part)
+        t.append(df)
+        assert _rows(t.read(spark)) == _rows(df)
+        files = t._live_files()
+        for f in files:
+            path = os.path.join(t.dir, f["path"])
+            assert tables._footer_schema(path) == df.schema
+            assert f["rows"] == pq.read_metadata(path).num_rows
+        assert sum(f["rows"] for f in files) == 40
+        if part:
+            assert sorted(f["part_min"] for f in files) == [0, 1, 2, 3]
+            for f in files:
+                held = pq.read_table(os.path.join(t.dir, f["path"]),
+                                     columns=[part]).column(part).unique()
+                assert f["part_min"] == f["part_max"] == held.to_pylist()[0]
+                assert len(held) == 1
+        else:
+            assert all("part_min" not in f for f in files)
+        data = os.path.join(t.dir, "data")
+        stray = [n for _dp, dns, fns in os.walk(data) for n in dns + fns
+                 if n.endswith(".crc") or n in ("_SUCCESS", "_temporary")]
+        assert not stray
+        listing = sorted(os.listdir(data))
+        t.append(df.limit(0))
+        assert t._live_files() == files
+        assert sorted(os.listdir(data)) == listing
+
+
+def test_base_versions_reads_the_round_log_once(tmp_path, monkeypatch):
+    cat = Catalog(str(tmp_path))
+    log = {str(r): {"frontier": r, **({"results": r} if r % 4 != 3 else {})}
+           for r in range(200)}
+    with open(os.path.join(cat.root, "rounds.json"), "w") as f:
+        json.dump(log, f)
+    calls = []
+    read = Catalog.completed_rounds
+
+    def counted(self):
+        calls.append(1)
+        return read(self)
+
+    monkeypatch.setattr(Catalog, "completed_rounds", counted)
+    assert cat.base_versions() == {"frontier": 199, "results": 198}
+    assert len(calls) == 1
