@@ -76,11 +76,13 @@ def bloom_params(expected_keys_per_shard: int, target_fpr: float = 1e-3) -> tupl
     """Size a shard's Bloom filter: returns (m_bits rounded up to a
     power of two, k hash functions).
 
-    m = -n·ln(p)/ln(2)², k = (m/n)·ln(2). Design point 10^10 URLs over
-    2^14 shards → n ≈ 6.1e5/shard → m = 2^24 bits (2 MiB/shard, fits one
-    Arrow batch comfortably), k = 10 → FPR ≈ 1e-3. Total seen-state
-    ≈ 32 GiB across the cluster — vs ~80 GiB+ for exact 64-bit keys with
-    no false-positive bound on growth."""
+    m = -n·ln(p)/ln(2)², rounded up to a power of two; k = (m/n)·ln(2)
+    for the rounded m. Design point 10^10 URLs over 2^14 shards →
+    n ≈ 6.1e5/shard: the formula gives m ≈ 8.8e6 bits, rounded up to
+    2^24 (2 MiB/shard, fits one Arrow batch comfortably), and k = 19.
+    The rounding doubles m, so the FPR is ≈ 2e-6, not the 1e-3 target.
+    Total seen-state ≈ 32 GiB across the cluster — vs ~80 GiB+ for exact
+    64-bit keys with no false-positive bound on growth."""
     import math
 
     n = max(expected_keys_per_shard, 1)

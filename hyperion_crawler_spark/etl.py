@@ -263,20 +263,23 @@ class ETLPipeline:
                                F.lit(self._task_suffix(params)))
 
         table = self.cat.table(src.target_table, src.partition_col)
-        # LoadResult tallies ride the load action itself via observe()
-        # (named accumulators on the plan) instead of separate count()
-        # jobs — SURVEY §2.1 S10 mapping of the reference's LoadResult
-        # counters (base/loader.py:24-59)
+        # LoadResult tallies (SURVEY §2.1 S10 mapping of the reference's
+        # LoadResult counters, base/loader.py:24-59) cost no count()
+        # job: an append's commit records the rows its write tasks
+        # wrote (``added_records``), and the other modes observe() the
+        # load action itself (named accumulators on the plan)
         obs = Observation()
         observed = deduped.observe(obs, F.count(F.lit(1)).alias("loaded"))
+        n_skip = 0
         if mode == LoadMode.APPEND:
-            table.append(observed)
+            n_valid = table.added_records(table.append(deduped))
         elif mode == LoadMode.UPSERT:
             # fenced: a folding merge joins its batch, and Spark 4
             # Observations break under joins; eager, as a lazy fence
             # over an observed frame reports a wrong count
             table.merge(self.spark, observed.localCheckpoint(),
                         src.conflict_keys)
+            n_valid = obs.get["loaded"]
         elif mode == LoadMode.INSERT:
             # reference INSERT: a key conflict is an integrity ERROR
             # (krx/loader.py:146-158 — the DB raises, the batch rolls
@@ -285,12 +288,10 @@ class ETLPipeline:
             # commit landed directly on it, and roll the append back on
             # an interleaved conflict (r5 review — the old probe-then-
             # append let two racing INSERTs both pass their probes).
-            # ``observed`` is appended (the Observation rides the write
-            # scan); the UNobserved ``deduped`` twin feeds the up to two
-            # conflict probes (Spark 4 Observations break under joins),
-            # fenced eagerly as the first probe runs at once.
-            table.insert_strict(self.spark, observed, src.conflict_keys,
-                                probe=deduped.localCheckpoint())
+            # The batch feeds up to two conflict probes and the write,
+            # so it is fenced, eagerly as the first probe runs at once.
+            n_valid = table.added_records(table.insert_strict(
+                self.spark, deduped.localCheckpoint(), src.conflict_keys))
         elif mode == LoadMode.UPDATE:
             # update-only-matched: rows whose key is absent are SKIPPED,
             # never inserted (the enum's "업데이트만" semantics; the
@@ -308,7 +309,7 @@ class ETLPipeline:
             # success_rate sees the drops.
             existing = table.read(self.spark)
             if existing is None:
-                n_update, n_skip = 0, deduped.count()
+                n_valid, n_skip = 0, deduped.count()
             else:
                 ks = src.conflict_keys
                 flagged = deduped.join(
@@ -316,32 +317,29 @@ class ETLPipeline:
                     ks, "left").localCheckpoint()
                 m = flagged.agg(F.count(F.lit(1)).alias("total"),
                                 F.sum("_m").alias("matched")).first()
-                n_update = int(m["matched"] or 0)
-                n_skip = int(m["total"]) - n_update
+                n_valid = int(m["matched"] or 0)
+                n_skip = int(m["total"]) - n_valid
                 written = flagged.filter(F.col("_m") == 1).drop("_m")
                 table.merge(self.spark, written, ks)
         elif mode == LoadMode.REPLACE:
             assert src.partition_col, "REPLACE needs a partition column"
             parts = [r[0] for r in observed.select(src.partition_col).distinct().collect()]
             table.overwrite_partitions(self.spark, observed, parts)
-        n_valid = n_update if mode == LoadMode.UPDATE else obs.get["loaded"]
-        n_skip = n_skip if mode == LoadMode.UPDATE else 0
+            n_valid = obs.get["loaded"]
         if getattr(src, "update_latest", False) and (
-                mode != LoadMode.UPDATE or n_update):
+                mode != LoadMode.UPDATE or n_valid):
             # the latest slice must describe rows actually WRITTEN: in
             # UPDATE mode unmatched (skipped) rows never reach the
             # target and must not reach the side table either
             self._update_latest(src, written if mode == LoadMode.UPDATE else deduped)
 
         # quarantine table mirrors drop-with-warning (transformer.py:86-89);
-        # the failed tally rides the append's own scan (an empty batch
-        # writes no file) instead of a count job of its own
+        # the failed tally is the rows the append wrote (an empty batch
+        # writes no file), not a count job of its own
         n_quar = 0
         if quarantine is not None:
-            qobs = Observation()
-            self.cat.table(f"{src.target_table}_quarantine", None).append(
-                quarantine.observe(qobs, F.count(F.lit(1)).alias("failed")))
-            n_quar = qobs.get["failed"]
+            qt = self.cat.table(f"{src.target_table}_quarantine", None)
+            n_quar = qt.added_records(qt.append(quarantine))
         result = LoadResult(loaded=n_valid, skipped=n_skip, failed=n_quar)
         # data-quality gate: the reference declares success-rate ≥ 0.95
         # as a monitoring alert (etl_config.yaml:38-43) but nothing
@@ -360,7 +358,7 @@ class ETLPipeline:
                   else "latency_exceeded" if not result.latency_ok
                   else "success")
         task_id = f"{source_name}_load_{self._task_suffix(params)}"
-        self.cat.table("etl_lineage", None, schema_evolving=True).append(self.spark.createDataFrame(
+        self.cat.table("etl_lineage", None).append(self.spark.createDataFrame(
             [(task_id, source_name, status, n_valid, n_skip, n_quar,
               float(result.success_rate), float(threshold),
               float(result.execution_time),

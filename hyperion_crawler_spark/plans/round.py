@@ -161,7 +161,7 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
     seen_t = cat.table("seen_filters", "shard")
     seen_exact_t = cat.table("seen_exact", "shard")
     results_t = cat.table("results", "round")
-    lineage_t = cat.table("lineage", "round", schema_evolving=True)
+    lineage_t = cat.table("lineage", "round")
 
     timing: dict[str, float] = {}
 

@@ -43,11 +43,11 @@ def test_forced_version_collision_both_merges_survive(spark, tmp_path):
     state = {"fired": False}
     orig = t1._commit
 
-    def racing_commit(files, meta=None, keys=None, ver=None):
+    def racing_commit(files, meta=None, keys=None, ver=None, **kw):
         if not state["fired"]:
             state["fired"] = True
             t2.merge(spark, src2, ["k"])
-        return orig(files, meta=meta, keys=keys, ver=ver)
+        return orig(files, meta=meta, keys=keys, ver=ver, **kw)
 
     t1._commit = racing_commit
     t1.merge(spark, src1, ["k"])
@@ -318,12 +318,12 @@ def test_overwrite_refuses_to_bury_foreign_commit(spark, tmp_path):
     state = {"fired": False}
     orig = t1._commit
 
-    def racing_commit(files, meta=None, keys=None, ver=None):
+    def racing_commit(files, meta=None, keys=None, ver=None, **kw):
         if not state["fired"]:
             state["fired"] = True
             t2.append(spark.createDataFrame([(5, "late")],
                                             "k int, v string"))
-        return orig(files, meta=meta, keys=keys, ver=ver)
+        return orig(files, meta=meta, keys=keys, ver=ver, **kw)
 
     t1._commit = racing_commit
     try:

@@ -59,6 +59,28 @@ def test_append_mode_duplicates(spark, tmp_path):
     assert p.cat.table("market_daily_prices", None).read(spark).count() == 120
 
 
+class _DatePartitionedMarket(MarketDataSource):
+    partition_col = "trade_date"
+
+
+def test_append_loaded_is_the_rows_written_into_a_partitioned_target(
+        spark, tmp_path):
+    """APPEND's ``loaded`` is the row count its commit records: an empty
+    batch into a partitioned target commits and loads 0, and a full
+    batch loads its rows."""
+    p = ETLPipeline(spark, str(tmp_path))
+    t = p.cat.table("market_daily_prices", "trade_date")
+    p.register(_DatePartitionedMarket(n_tickers=0))
+    res = p.run_full_pipeline("market", {"trade_date": "2024-01-05"},
+                              mode=LoadMode.APPEND)
+    assert (res.loaded, res.failed) == (0, 0)
+    assert t.current_version() == 1 and t.read(spark) is None
+    p.register(_DatePartitionedMarket(n_tickers=60))
+    res = p.run_full_pipeline("market", {"trade_date": "2024-01-08"},
+                              mode=LoadMode.APPEND)
+    assert res.loaded == 60 == t.read(spark).count()
+
+
 @pytest.mark.parametrize("knobs", [
     {},  # the UPSERT batch reaches COMPACT_RATIO of the base: it folds
     {"COMPACT_RATIO": 0, "MOR_BROADCAST_BYTES": 0},  # a delta, shuffled read

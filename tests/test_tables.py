@@ -6,6 +6,7 @@ import os
 
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from hyperion_crawler_spark.sources import tables
 from hyperion_crawler_spark.sources.tables import Catalog
@@ -578,44 +579,37 @@ def test_expire_with_rewrite_bounds_crawl_file_count(
 def test_props_survive_bare_handles(spark, tmp_path):
     """Durable table properties: a bare SnapshotTable handle (fresh
     Catalog — the maintenance-CLI shape) must recover declared
-    schema_evolving / partition_col / sorted-ness from props.json
-    instead of silently downgrading the table. A props.json that still
-    carries the old merge-mode key opens and drops it."""
+    partition_col / sorted-ness from props.json instead of silently
+    downgrading the table. A props.json that still carries the old
+    merge-mode and schema-evolving keys opens and drops them."""
     from hyperion_crawler_spark.sources.tables import SnapshotTable
 
     cat = Catalog(str(tmp_path))
-    t = cat.table("ev", "shard", schema_evolving=True,
-                  sort_cols=[F.col("v").desc()])
+    t = cat.table("ev", "shard", sort_cols=[F.col("v").desc()])
     t.append(spark.createDataFrame([(1, 1, 5)], "k int, shard int, v int"))
     bare = SnapshotTable(str(tmp_path), "ev")
-    assert bare.schema_evolving
     assert bare.partition_col == "shard" and bare.sorted_declared
-    # upgrades through Catalog.table persist too
-    cat2 = Catalog(str(tmp_path))
-    cat2.table("ev2", "shard")
-    cat2.table("ev2", "shard", schema_evolving=True)
-    assert SnapshotTable(str(tmp_path), "ev2").schema_evolving
-    # a props.json written while merging on read was a per-table flag
-    import json
-
+    # a props.json written while merging on read and evolving schemas
+    # were per-table flags
     os.makedirs(tmp_path / "old")
     with open(tmp_path / "old" / "props.json", "w") as f:
-        json.dump({"merge_on_read": True, "schema_evolving": False,
+        json.dump({"merge_on_read": True, "schema_evolving": True,
                    "partition_col": "shard", "sorted": False}, f)
     assert SnapshotTable(str(tmp_path), "old").partition_col == "shard"
     with open(tmp_path / "old" / "props.json") as f:
-        assert "merge_on_read" not in json.load(f)
+        props = json.load(f)
+    assert "merge_on_read" not in props and "schema_evolving" not in props
 
 
 def test_rewrite_preserves_evolved_schema_and_skips_sorted(spark, tmp_path):
     """Small-file consolidation through a BARE handle must not drop
-    columns of a schema-evolving table (the footer-merge read), and
-    must refuse to rewrite a sorted table whose sort exprs it can't
-    recover (order-destroying)."""
+    columns a table gained (the manifest schema's read), and must
+    refuse to rewrite a sorted table whose sort exprs it can't recover
+    (order-destroying)."""
     from hyperion_crawler_spark.sources.tables import SnapshotTable
 
     cat = Catalog(str(tmp_path))
-    t = cat.table("lin", None, schema_evolving=True)
+    t = cat.table("lin", None)
     t.append(spark.createDataFrame([(1, "a")], "k int, v string"))
     t.append(spark.createDataFrame([(2, "b", 9.5)], "k int, v string, extra double"))
     bare = SnapshotTable(str(tmp_path), "lin")
@@ -776,10 +770,11 @@ def _typed_frame(spark):
 
 def test_write_path_fidelity(spark, tmp_path):
     """Every column type the engine stores round-trips through the
-    table write: rows read back equal, every file's footer carries the
-    frame's Spark schema and its row count, a partitioned write holds
-    one file per partition value with exact stats, nothing but the data
-    files lands under ``data/``, and an empty frame writes nothing."""
+    table write: rows read back equal, the manifest records the frame's
+    schema, every file holds its row count and no footer key-value
+    metadata, a partitioned write holds one file per partition value
+    with exact stats, nothing but the data files lands under ``data/``,
+    and an empty frame writes nothing."""
     df = _typed_frame(spark)
     cat = Catalog(str(tmp_path))
     for name, part in (("typed_p", "shard"), ("typed_u", None)):
@@ -787,9 +782,10 @@ def test_write_path_fidelity(spark, tmp_path):
         t.append(df)
         assert _rows(t.read(spark)) == _rows(df)
         files = t._live_files()
+        assert t._schema(t._snapshot()) == df.schema
         for f in files:
             path = os.path.join(t.dir, f["path"])
-            assert tables._footer_schema(path) == df.schema
+            assert pq.read_metadata(path).metadata is None
             assert f["rows"] == pq.read_metadata(path).num_rows
         assert sum(f["rows"] for f in files) == 40
         if part:
@@ -809,6 +805,93 @@ def test_write_path_fidelity(spark, tmp_path):
         t.append(df.limit(0))
         assert t._live_files() == files
         assert sorted(os.listdir(data)) == listing
+
+
+def test_widened_table_reads_old_rows_as_null_without_a_job(spark, tmp_path):
+    """An append with a new column widens the schema its manifest
+    records: a bare handle reads the older file's rows with null in
+    that column, and building the read runs no Spark job."""
+    from hyperion_crawler_spark.sources.tables import SnapshotTable
+
+    t = Catalog(str(tmp_path)).table("w", "shard")
+    t.append(spark.createDataFrame([(1, 1)], "k int, shard int"))
+    t.append(spark.createDataFrame([(2, 2, 9.5)],
+                                   "k int, shard int, extra double"))
+    bare = SnapshotTable(str(tmp_path), "w")
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    jobs = set(sc.statusTracker().getJobIdsForGroup(None))
+    df = bare.read(spark)
+    bus.waitUntilEmpty()
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) == jobs, \
+        "building the read ran a Spark job"
+    assert df.columns == ["k", "shard", "extra"]
+    assert _rows(df) == [(1, 1, None), (2, 2, 9.5)]
+
+
+def test_append_with_a_changed_column_type_raises(spark, tmp_path):
+    import pytest
+
+    t = Catalog(str(tmp_path)).table("tc", None)
+    t.append(spark.createDataFrame([(1, "a")], "k int, v string"))
+    with pytest.raises(ValueError, match="'v'"):
+        t.append(spark.createDataFrame([(2, 2)], "k int, v int"))
+    assert t.versions() == [1]
+    assert _all_parquet(t) == _referenced(t), "the refused append wrote files"
+
+
+def test_rebased_merge_carries_a_foreign_writers_column(spark, tmp_path):
+    """A merge rebased over a foreign writer's commit widens its schema
+    by that commit's: the column the other writer added survives, with
+    its values, next to the rows that lack it."""
+    root = str(tmp_path)
+    crawl = Catalog(root, writer="crawl").table("t", "shard")
+    ingest = Catalog(root, writer="seed_ingest").table("t", "shard")
+    v1 = crawl.append(spark.createDataFrame([(1, 1, "a")],
+                                            "k int, shard int, v string"))
+    ingest.merge(spark, spark.createDataFrame(
+        [(2, 2, "b", 7)], "k int, shard int, v string, extra int"), ["k"])
+    crawl.merge(spark, spark.createDataFrame(
+        [(3, 3, "c")], "k int, shard int, v string"), ["k"], base_version=v1)
+    out = crawl.read(spark)
+    assert out.columns == ["k", "shard", "v", "extra"]
+    assert _rows(out) == [(1, 1, "a", None), (2, 2, "b", 7), (3, 3, "c", None)]
+
+
+def test_manifest_without_schema_reads_its_footers(spark, tmp_path):
+    """A store written before manifests carried the schema: its data
+    files hold Spark's footer schema key and its manifests no
+    ``schema``. Reads take the union of the live files' footer schemas
+    and return the same rows, and the next commit records the schema."""
+    t = Catalog(str(tmp_path)).table("old", "shard")
+    t.append(spark.createDataFrame([(1, 1)], "k int, shard int"))
+    t.append(spark.createDataFrame([(2, 2, 9.5)],
+                                   "k int, shard int, extra double"))
+    t.merge(spark, spark.createDataFrame([(1, 1, 0.5)],
+                                         "k int, shard int, extra double"), ["k"])
+    assert any(f.get("kind") == "delta" for f in t._live_files())
+    want = _rows(t.read(spark))
+    schema = t._schema(t._snapshot())
+    by_name = {f.name: f for f in schema.fields + [
+        T.StructField("_seq", T.LongType()), T.StructField("_tomb", T.BooleanType())]}
+    for path in _referenced(t):
+        path = os.path.join(t.dir, path)
+        data = pq.read_table(path)
+        written = T.StructType([by_name[c] for c in data.column_names])
+        pq.write_table(data.replace_schema_metadata(
+            {tables._SPARK_SCHEMA_KEY: written.json()}), path)
+    for v in t.versions():
+        m = t._manifest(v)
+        del m["schema"]
+        with open(os.path.join(t.dir, "snapshots", f"v{v:06d}.json"), "w") as f:
+            json.dump(m, f)
+    assert t._schema(t._snapshot()) == schema
+    assert _rows(t.read(spark)) == want
+    v = t.append(spark.createDataFrame([(3, 3, None)],
+                                       "k int, shard int, extra double"))
+    assert t._manifest(v)["schema"] == schema.jsonValue()
+    assert _rows(t.read(spark)) == sorted(want + [(3, 3, None)])
 
 
 def test_base_versions_reads_the_round_log_once(tmp_path, monkeypatch):
