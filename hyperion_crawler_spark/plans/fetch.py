@@ -146,7 +146,6 @@ BROADCAST_ROW_CAP = 20_000_000  # ~2 GB at ~100 B/row, under Spark's 8 GB/512M-r
 
 
 def fetch_and_validate(scheduled: DataFrame, corpus: DataFrame,
-                       broadcast_row_cap: int = BROADCAST_ROW_CAP,
                        row_bound: int | None = None) -> DataFrame:
     """corpus(image_id) ⨝ broadcast(scheduled) → validated results,
     plus a left-anti pass for scheduled ids absent from the corpus.
@@ -179,15 +178,14 @@ def fetch_and_validate(scheduled: DataFrame, corpus: DataFrame,
     ships every surviving image_id to one task — a guaranteed
     straggler at exactly the scale the guard targets, since per-task
     rows sit far below the cap so LocalLimit prunes nothing.) Above
-    ``broadcast_row_cap`` the join falls back to a plain shuffle join
+    ``BROADCAST_ROW_CAP`` the join falls back to a plain shuffle join
     (degrades — the payload crosses an Exchange that round — but
     completes). ``row_bound``, an upper bound on the schedule's rows
     known without a job (the round passes its frontier's manifest row
     total), skips the count when it is within the cap.
     """
-    known_small = row_bound is not None and row_bound <= broadcast_row_cap
-    oversized = (broadcast_row_cap >= 0 and not known_small
-                 and scheduled.count() > broadcast_row_cap)
+    known_small = row_bound is not None and row_bound <= BROADCAST_ROW_CAP
+    oversized = not known_small and scheduled.count() > BROADCAST_ROW_CAP
     build = scheduled if oversized else F.broadcast(scheduled)
     hits = corpus.select("image_id", "bytes", "w", "h", "fmt", "caption", "phash").join(
         build, "image_id", "inner"

@@ -14,6 +14,11 @@ ceiling): here data stays on executors across all stages; rows cross
 node boundaries only at the two explicit shuffles (host top-k window;
 seen-shard cogroup) plus the corpus join.
 
+URLs from outside the loop — the bootstrap's seed list and every
+seed-ingest micro-batch — enter through ``admit_seeds``: the same
+canonicalize → seen probe → frontier MERGE steps, folded into the
+round log instead of committing a round of their own.
+
 Timeline: 1 round = 60 s of politeness budget (ROUND_SECONDS);
 ``next_fetch_ts`` is in these synthetic seconds. Retry backoff
 ``5·2^retries`` s with ≤3 retries mirrors the reference workflow
@@ -92,22 +97,76 @@ def _frontier_table(cat):
                      sort_cols=[F.col("priority").desc(), F.col("urlhash").asc()])
 
 
-def init_frontier(spark: SparkSession, cat, cfg: CrawlConfig, seeds: DataFrame) -> dict:
-    """Round -1 bootstrap: seeds → canonical frontier rows, all marked
-    seen (a URL is 'seen' once it enters the frontier — never re-added).
+def _queued(unseen: DataFrame, round_idx: int) -> DataFrame:
+    """Frontier rows for fresh URLs: queued, no retries, due at once,
+    discovered in ``round_idx``."""
+    return unseen.select(
+        "urlhash", "url", "host", "image_id", "shard", "priority",
+        F.lit("queued").alias("status"), F.lit(0).alias("retry_count"),
+        F.lit(0).cast("long").alias("next_fetch_ts"),
+        F.lit(round_idx).alias("discovered_round"),
+    )
 
-    Seeds MERGE ONTO the store's current state (probed against the
-    current seen filters) rather than overwriting it, so a store the
-    continuous ingest daemon already streamed seeds into is extended,
-    not clobbered — the daemon may legally start before the crawl's
-    first round (r5; before, the bootstrap overwrote and therefore had
-    to refuse any pre-existing state). On a virgin store the merge IS
-    the first write, byte-identical to the old overwrite. The round-0
+
+def admit_seeds(spark: SparkSession, cat, cfg: CrawlConfig, seeds: DataFrame,
+                round_idx: int, marker: str | None = None) -> int:
+    """Admit seed rows ``(url, image_id, priority)`` into the crawl
+    state and fold the new table versions into round ``round_idx``'s
+    log entry. Returns the number of URLs that were not seen before.
+
+    The one URL-admission path from outside the crawl loop: the
+    bootstrap (``init_frontier``) and every seed-ingest micro-batch
+    (streaming/seed_ingest.py) call it. Canonicalize + first-wins
+    dedup → Bloom probe+update against the last checkpointed seen
+    filters → MERGE the unseen rows into the frontier as queued work,
+    append the filter deltas (and the exact shadow when enabled) →
+    ``commit_round(fold=True)``. Reads and write-bases bind to
+    ``base_versions``; the fold touches only the tables written here,
+    so a concurrently checkpointing crawl round keeps its versions of
+    every other table. The round-log fold comes LAST: it is the
+    durability point, so a crash before it replays the admission, and
+    the replay adds nothing because every candidate is now seen.
+    ``marker`` names an extra round-log key set to 1."""
+    frontier_t = _frontier_table(cat)
+    seen_t = cat.table("seen_filters", "shard")
+    base = cat.base_versions()
+    cand = canonical_url_rows(
+        seeds, "url", "image_id", "priority", cfg, [F.col("image_id")],
+    )
+    current = seen_t.read(spark, version=base.get("seen_filters"))
+    unseen, filters = probe_and_update(cand, current, cfg)
+    versions = {
+        "frontier": frontier_t.merge(spark, _queued(unseen, round_idx), ["urlhash"],
+                                     base_version=base.get("frontier")),
+        "seen_filters": seen_t.append(filters,
+                                      base_version=base.get("seen_filters", 0)),
+    }
+    if cfg.exact_seen_shadow:
+        versions["seen_exact"] = cat.table("seen_exact", "shard").append(
+            unseen.select("urlhash", "shard"),
+            base_version=base.get("seen_exact", 0))
+    if marker:
+        versions[marker] = 1
+    # the probe's filter rows carry the fresh-URL count; the probe
+    # fences its own output, so this is a scan of that fence
+    n_new = count_new(filters)
+    cat.commit_round(round_idx, versions, fold=True)
+    return n_new
+
+
+def init_frontier(spark: SparkSession, cat, cfg: CrawlConfig, seeds: DataFrame) -> dict:
+    """Round-0 bootstrap: admit the crawl's seed list, all marked seen
+    (a URL is 'seen' once it enters the frontier — never re-added).
+
+    Seeds merge onto the store's current state, probed against the
+    current seen filters, so a store the continuous ingest daemon
+    already streamed seeds into is extended, not clobbered: the daemon
+    may legally start before the crawl's first round. The round-0
     entry carries a ``_seeded`` marker so ``run_crawl`` can tell a
     bootstrapped store from one that only ever saw daemon ingestion.
 
-    Still refuses on a store with committed CRAWL work (a crawled
-    round, or a prior bootstrap): re-seeding those is a caller bug."""
+    Refuses on a store with committed crawl work (a crawled round, or
+    a prior bootstrap): re-seeding those is a caller bug."""
     rounds = cat.completed_rounds()
     if rounds and (max(rounds) > 0 or rounds.get(0, {}).get("_seeded")):
         raise ValueError(
@@ -115,36 +174,8 @@ def init_frontier(spark: SparkSession, cat, cfg: CrawlConfig, seeds: DataFrame) 
             f"(last_round={cat.last_round()}); it would re-seed the "
             "existing frontier/seen state. Resume with run_crawl, or "
             "point at a fresh store directory.")
-    frontier_t = _frontier_table(cat)
-    seen_t = cat.table("seen_filters", "shard")
-    seen_exact_t = cat.table("seen_exact", "shard")
-    base = cat.base_versions()
-
-    cand = canonical_url_rows(
-        seeds, "url", "image_id", "priority", cfg, [F.col("image_id")],
-    )
-    current = seen_t.read(spark, version=base.get("seen_filters"))
-    unseen, filters = probe_and_update(cand, current, cfg)
-    rows = (
-        unseen.withColumn("status", F.lit("queued"))
-        .withColumn("retry_count", F.lit(0))
-        .withColumn("next_fetch_ts", F.lit(0).cast("long"))
-        .withColumn("discovered_round", F.lit(0))
-        .select(*FRONTIER_COLS)
-    )
-    versions = {
-        "frontier": frontier_t.merge(spark, rows, ["urlhash"],
-                                     base_version=base.get("frontier")),
-        "seen_filters": seen_t.append(filters,
-                                      base_version=base.get("seen_filters", 0)),
-        "_seeded": 1,
-    }
-    if cfg.exact_seen_shadow:
-        versions["seen_exact"] = seen_exact_t.append(
-            unseen.select("urlhash", "shard"),
-            base_version=base.get("seen_exact", 0))
-    cat.commit_round(0, versions, fold=True)
-    return {"round": 0, "seeded": count_new(filters)}
+    return {"round": 0, "seeded": admit_seeds(spark, cat, cfg, seeds, 0,
+                                              marker="_seeded")}
 
 
 def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
@@ -159,7 +190,6 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
     schedule touches — manifest-level pruning of the 100 TB table."""
     frontier_t = _frontier_table(cat)
     seen_t = cat.table("seen_filters", "shard")
-    seen_exact_t = cat.table("seen_exact", "shard")
     results_t = cat.table("results", "round")
     lineage_t = cat.table("lineage", "round")
 
@@ -250,11 +280,6 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
         F.lit("excluded").alias("status"), "retry_count",
         "next_fetch_ts", "discovered_round",
     )
-    new_rows = unseen.select(
-        "urlhash", "url", "host", "image_id", "shard", "priority",
-        F.lit("queued").alias("status"), F.lit(0).alias("retry_count"),
-        F.lit(0).cast("long").alias("next_fetch_ts"), F.lit(round_idx).alias("discovered_round"),
-    )
     retry_rows = res_updates.filter(F.col("status") == "queued")
     terminal_rows = (res_updates.filter(F.col("status") != "queued")
                      .unionByName(excl_updates.select(*FRONTIER_COLS)))
@@ -262,7 +287,7 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
     # fenced because the merge and the archive append both read it
     frontier_merge = (
         retry_rows.select(*FRONTIER_COLS)
-        .unionByName(new_rows.select(*FRONTIER_COLS))
+        .unionByName(_queued(unseen, round_idx))
     )
     archive_rows = terminal_rows.select(*FRONTIER_COLS) \
         .withColumn("archived_round", F.lit(round_idx)).localCheckpoint(eager=False)
@@ -339,15 +364,14 @@ def run_round(spark: SparkSession, cat, cfg: CrawlConfig, round_idx: int,
         return seen_t.append(new_filters,
                              base_version=base.get("seen_filters", 0))
 
-    def _commit_seen_exact():
-        return seen_exact_t.append(
-            unseen.select("urlhash", "shard"),
-            base_version=base.get("seen_exact", 0))
-
     jobs = {"results": _commit_results, "frontier": _commit_frontier,
             "archive": _commit_archive, "seen_filters": _commit_seen}
     if cfg.exact_seen_shadow:
-        jobs["seen_exact"] = _commit_seen_exact
+        # opened only when on: a handle creates the table's directory
+        seen_exact_t = cat.table("seen_exact", "shard")
+        jobs["seen_exact"] = lambda: seen_exact_t.append(
+            unseen.select("urlhash", "shard"),
+            base_version=base.get("seen_exact", 0))
     if cfg.image_neardup_dist > 0:
         def _commit_phash_index():
             # first-wins: an already-indexed phash keeps its original

@@ -31,6 +31,13 @@ north_rule replaces it with a sharded Bloom filter:
   (unseen) candidates and the batch's delta filter blob — so no
   second shuffle is needed.
 
+This table is the engine's one URL-seen state, and ``probe_and_update``
+has two callers, both in plans/round.py: ``admit_seeds`` (the bootstrap
+and every seed-ingest micro-batch) and ``run_round`` (link
+discoveries). No module keeps a second seen set, in the streaming state
+store or elsewhere: a stream's URL dedup is an ``admit_seeds`` call
+against this table (tests/test_plans.py::test_one_url_admission_path).
+
 Bloom guarantees: no false negatives ever (a seen URL is never
 re-crawled); false-positive rate at the design point (10^6 keys/shard,
 m=2^24, k=7) ≈ 1e-3 — a dropped-though-new URL, the standard crawl

@@ -3,7 +3,10 @@ pushdown/broadcast discipline). These are the .explain() properties the
 engine is designed around; regressions here are scale bugs even when
 results stay correct."""
 
+import ast
+import dataclasses
 import glob
+import os
 import re
 
 from pyspark.sql import functions as F
@@ -129,6 +132,46 @@ def test_no_cache_calls_in_source_tree():
         for m in re.finditer(r"\.persist\(|\.cache\(|\.unpersist\(", src):
             bad.append(f"{path}:{src.count(chr(10), 0, m.start()) + 1}")
     assert not bad, f"persist/cache/unpersist (fence with localCheckpoint): {bad}"
+
+
+def test_one_url_admission_path():
+    """One URL-admission path (README module map): the Bloom
+    probe+update is called only in ``plans/round.py`` — by
+    ``admit_seeds``, which the bootstrap and every seed-ingest batch
+    call, and by ``run_round`` — and no module keeps a second seen set
+    in the streaming state store."""
+    calls, stateful = [], []
+    for path in glob.glob("hyperion_crawler_spark/**/*.py", recursive=True):
+        src = open(path).read()
+        if "applyInPandasWithState" in src:
+            stateful.append(path)
+        for fn in ast.walk(ast.parse(src)):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for node in ast.walk(fn):
+                if (isinstance(node, ast.Call)
+                        and getattr(node.func, "id", None) == "probe_and_update"):
+                    calls.append((os.path.normpath(path), fn.name))
+    round_py = os.path.join("hyperion_crawler_spark", "plans", "round.py")
+    assert sorted(calls) == [(round_py, "admit_seeds"), (round_py, "run_round")]
+    assert not stateful, f"applyInPandasWithState in {stateful}"
+
+
+def test_shadow_off_crawl_opens_no_seen_exact_table(spark, fixture_dfs, crawl_cfg,
+                                                    tmp_path):
+    """With ``exact_seen_shadow`` off, neither the bootstrap nor a round
+    opens the ``seen_exact`` table: opening a handle creates its
+    directory and ``props.json``, which ``Catalog.expire`` then visits."""
+    from hyperion_crawler_spark.plans.loop import run_crawl
+
+    store = str(tmp_path / "store")
+    cfg = dataclasses.replace(crawl_cfg, exact_seen_shadow=False)
+    out = run_crawl(spark, store, cfg, fixture_dfs["corpus"],
+                    fixture_dfs["links"], fixture_dfs["robots"],
+                    fixture_dfs["seeds"], n_rounds=2)
+    assert [m["round"] for m in out] == [0, 1, 2]
+    assert os.path.isdir(os.path.join(store, "seen_filters"))
+    assert not os.path.exists(os.path.join(store, "seen_exact"))
 
 
 def test_failed_round_leaves_no_cached_plans(spark, fixture_dfs, crawl_cfg,
@@ -274,10 +317,12 @@ def test_exact_dedup_is_minby_agg_not_window(spark):
     assert "partial_min_by" in p, "map-side combine missing"
 
 
-def test_fetch_broadcast_guard_falls_back_to_shuffle(spark, fixture_dfs, crawl_cfg):
+def test_fetch_broadcast_guard_falls_back_to_shuffle(spark, fixture_dfs, crawl_cfg,
+                                                     monkeypatch):
     """ADVICE r2: above the row cap the schedule must NOT be broadcast
     (Spark's 8GB/512M-row broadcast hard limit would hard-fail the
     round) — and the fallback must produce identical results."""
+    from hyperion_crawler_spark.plans import fetch
     from hyperion_crawler_spark.plans.fetch import fetch_and_validate
     from hyperion_crawler_spark.plans.round import canonical_url_rows
     from hyperion_crawler_spark.operators.politeness import schedule_round
@@ -292,8 +337,8 @@ def test_fetch_broadcast_guard_falls_back_to_shuffle(spark, fixture_dfs, crawl_c
     sched = sched.persist()
     try:
         normal = fetch_and_validate(sched, fixture_dfs["corpus"])
-        fallback = fetch_and_validate(sched, fixture_dfs["corpus"],
-                                      broadcast_row_cap=0)
+        monkeypatch.setattr(fetch, "BROADCAST_ROW_CAP", 0)
+        fallback = fetch_and_validate(sched, fixture_dfs["corpus"])
         # the fallback drops the explicit broadcast hint (AQE may still
         # auto-broadcast a small schedule at test scale — the guard is
         # about not FORCING a broadcast past the hard limit); results

@@ -171,3 +171,39 @@ def test_continuous_trigger_daemon_merges_midstream(spark, tmp_path):
     fr2 = sorted(r["url"] for r in
                  cat.table("frontier", "shard").read(spark).collect())
     assert fr2 == ["https://a.com/1", "https://b.com/2"]
+
+
+def test_bootstrap_and_ingest_admit_identically(spark, tmp_path, fixture_dfs,
+                                                fixture_pdf, crawl_cfg):
+    """The bootstrap and a seed-ingest batch are one admission path:
+    the same seed rows give the same frontier, the same seen-filter
+    blobs and the same count on fresh stores, and round-0 entries that
+    differ only by the bootstrap's ``_seeded`` marker."""
+    from hyperion_crawler_spark.plans.round import init_frontier
+
+    cat_a = Catalog(str(tmp_path / "a"))
+    boot = init_frontier(spark, cat_a, crawl_cfg, fixture_dfs["seeds"])
+
+    seeds = str(tmp_path / "seeds")
+    os.makedirs(seeds)
+    pq.write_table(pa.Table.from_pandas(
+        fixture_pdf["seeds"][["url", "image_id", "priority"]], preserve_index=False),
+        os.path.join(seeds, "b1.parquet"))
+    cat_b = Catalog(str(tmp_path / "b"))
+    drained = ingest_seed_stream(spark, cat_b, crawl_cfg, seeds, str(tmp_path / "ckpt"))
+
+    assert boot["seeded"] > 0
+    assert drained == {"batches": 1, "new_urls": boot["seeded"]}
+
+    def state(cat):
+        fr = cat.table("frontier", "shard").read(spark)
+        f = cat.table("seen_filters", "shard").read(spark)
+        return (sorted(tuple(r) for r in fr.collect()),
+                sorted((r["shard"], bytes(r["filter_bytes"]), r["n_items"])
+                       for r in f.collect()))
+
+    assert state(cat_a) == state(cat_b)
+    rounds_a, rounds_b = cat_a.completed_rounds(), cat_b.completed_rounds()
+    assert set(rounds_a) == set(rounds_b) == {0}
+    assert rounds_a[0].pop("_seeded") == 1
+    assert rounds_a[0] == rounds_b[0]
